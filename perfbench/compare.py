@@ -1,17 +1,22 @@
 #!/usr/bin/env python3
-"""Compare two sets of benchmark result lines against BENCHMARK.json.
+"""Compare two sets of benchmark runs against BENCHMARK.json.
 
-    python3 perfbench/compare.py parent.jsonl change.jsonl
+    python3 perfbench/compare.py parent.out change.out
 
-Each file holds the last stdout line of several runs of one workload
-(one JSON object per line). For every end-to-end metric the change's
-median may be worse than the parent's by at most the metric's `bound`
-(a share of the parent's median); a larger worsening is a regression.
-The spread of each side (quartile distance over median) is reported
-too: a metric whose spread exceeds its bound cannot be resolved by this
-many runs. Runs are compared only when their provenance matches (same
-cpus); the lines themselves carry no provenance, so keep one file per
-host and code version.
+Each file holds the standard output of several runs of one workload,
+one after another. A run's result line (its last line) is read together
+with the `# provenance` line the run printed before it. For every
+end-to-end metric the change's median may be worse than the parent's by
+at most the metric's `bound` (a share of the parent's median); a larger
+worsening is a regression. The spread of each side (quartile distance
+over median) is reported too: a metric whose spread exceeds its bound
+cannot be resolved by this many runs.
+
+Runs are compared only when their provenance allows it: every run of
+both sides must share the workload, the host's and the run's cpus, the
+JDK, Spark, heap, class-data sharing, the benchmark's own code and the
+run length; and the runs of one side must share the program's code. A
+run without provenance, or a mismatch, stops the comparison (exit 2).
 """
 import json
 import os
@@ -65,15 +70,62 @@ def compare(parent_runs, change_runs, bounds):
     return out
 
 
-def read_lines(path):
+# provenance that must be equal across both sides, and within one side
+SAME_HOST = ("workload", "cpus", "host_cpus", "jdk", "spark", "heap", "cds", "bench",
+             "seconds", "traced")
+SAME_SIDE = ("code",)
+
+
+def provenance_problems(parent_runs, change_runs):
+    """Why the two sets of runs cannot be compared ([] when they can)."""
+    problems = []
+    for side, runs in (("parent", parent_runs), ("change", change_runs)):
+        if not runs:
+            problems.append(f"{side}: no runs")
+        for i, r in enumerate(runs):
+            if "provenance" not in r:
+                problems.append(f"{side} run {i}: no provenance line")
+    if problems:
+        return problems
+    for side, runs in (("parent", parent_runs), ("change", change_runs)):
+        for k in SAME_SIDE:
+            vals = {json.dumps(r["provenance"].get(k)) for r in runs}
+            if len(vals) > 1:
+                problems.append(f"{side}: runs differ in {k}: {sorted(vals)}")
+    for k in SAME_HOST:
+        vals = {json.dumps(r["provenance"].get(k)) for r in parent_runs + change_runs}
+        if len(vals) > 1:
+            problems.append(f"runs differ in {k}: {sorted(vals)}")
+    return problems
+
+
+def read_runs(path):
+    """Result lines of a file of run outputs, each with the provenance
+    line printed before it."""
+    runs, prov = [], None
     with open(path) as fh:
-        return [json.loads(line) for line in fh if line.strip().startswith("{")]
+        for line in fh:
+            line = line.strip()
+            if line.startswith("# provenance "):
+                prov = json.loads(line[len("# provenance "):])
+            elif line.startswith("{"):
+                r = json.loads(line)
+                if prov is not None:
+                    r["provenance"] = prov
+                runs.append(r)
+                prov = None
+    return runs
 
 
 if __name__ == "__main__":
     if len(sys.argv) != 3:
         sys.exit(__doc__)
-    res = compare(read_lines(sys.argv[1]), read_lines(sys.argv[2]), load_bounds())
+    parent, change = read_runs(sys.argv[1]), read_runs(sys.argv[2])
+    problems = provenance_problems(parent, change)
+    if problems:
+        print("not comparable:", *problems, sep="\n  ")
+        sys.exit(2)
+    res = compare(parent, change, load_bounds())
     for k, v in res.items():
         print(k, json.dumps(v))
     sys.exit(1 if any(v["verdict"] == "regressed" for v in res.values()) else 0)

@@ -7,11 +7,23 @@ reference-shaped relationship docs), so the benchmark's calls stay
 identical to registered `SparkEntry.queries` and the DuckDB oracle SQL
 applies unchanged.
 
-The input properties the program is sensitive to are measured on the
+The distributions are the fixture tables' own, as `shape.py` measures
+them (its `FIXTURE` holds the sf0.1 figures; README.md "Input shape"
+sets them beside the generated ones): every key is drawn uniformly, so
+orders per customer and lines per supplier are Poisson-like with no hub
+keys, nations (teams) are uniform, an order has Poisson(4) lines, and
+scores, balances and dates are uniform over the fixtures' ranges. The
+person graph is drawn at a TPC-H scale factor (`sf` in `SIZES`); at sf0.01 it
+has the sf0.01 fixture's row counts. The corpus follows ScaleSmoke's
+construction: replicas of a fixture-shaped block of documents, each
+replica with its own renamed vocabulary, so near-duplicate families
+keep the fixture's size while the corpus grows.
+
+The properties the program is sensitive to are measured on the
 generated tables and returned as `props` (printed before every result
-line): edge-endpoint degree skew (hub keys), team sizes (hop fan-out),
-increment size against accumulated state, and near-duplicate family
-sizes (SimHash / LSH pair counts grow with the square of a family).
+line): endpoint degrees (hub keys), team sizes (hop fan-out), docs per
+(src, dst) pair, increment size against accumulated state, and
+near-duplicate family sizes.
 """
 import datetime as dt
 import os
@@ -22,55 +34,59 @@ import pyarrow.parquet as pq
 
 # Sizes per workload, bounded by the run budget (README.md, "Sizing"):
 # every run, set-up and correctness check included, has to finish in
-# about a minute.
+# about a minute. `sf` is the TPC-H scale factor of the person graph.
 SIZES = {
-    "ref_etl": dict(customers=1000, suppliers=80, orders=6000, max_lines=4,
-                    batches=2, batch_docs=1000),
-    "graph_iter": dict(customers=600, suppliers=60, orders=3000, max_lines=4),
-    "curation": dict(docs=1200, spool_files=3, vocab=4000, vectors=1000, dim=32),
+    "ref_etl": dict(sf=0.005, batches=2, batch_docs=1000),
+    "graph_iter": dict(sf=0.005),
+    "curation": dict(replicas=2, docs_per_replica=500, spool_files=2, vectors=1000),
 }
 
-# Distribution parameters are fixed, so every seed draws the same amount
-# of work; the seed only picks which keys are hubs, which teams are big
-# and which documents form a family. Each input mixes the property's
-# values: Zipf endpoint degrees (a few hub keys, a long tail), Zipf team
-# sizes, geometric near-duplicate family sizes (mostly 1-3, up to 40).
-CUST_SKEW, SUPP_SKEW, TEAM_SKEW = 0.8, 1.0, 0.6
-FAMILY_P, CLUSTER_P = 0.35, 0.4
+# Rows per unit of scale factor, and lines per order, as in the fixtures
+CUSTOMERS, SUPPLIERS, ORDERS, PARTS = 150_000, 10_000, 1_500_000, 200_000
+LINES_PER_ORDER = 4
+# Fixture value ranges (shape.py; FIXTURES.md §A)
+ORDER_DAY0, ORDER_DAYS = dt.datetime(1995, 1, 1), 2405  # 1995-01-01 .. 2001-08-01
+SHIP_DAY0, SHIP_DAYS = dt.datetime(1995, 1, 2), 2499    # 1995-01-02 .. 2001-11-04
+# Document text: words per doc uniform in 10..99 over a uniform 30-word
+# vocabulary; 5% of the docs copy an earlier doc's text and append
+# " dup"; 41% are "en", the other four languages share the rest.
+VOCAB = ("spark", "window", "merge", "table", "column", "vector", "stream", "value",
+         "data", "small", "join", "filter", "big", "group", "hash", "customer", "sort",
+         "order", "slow", "line", "part", "fast", "row", "the", "agg", "key", "query",
+         "a", "scan", "batch")
+STOPWORDS = frozenset(("the", "a", "an", "of", "and", "to", "in", "is", "it", "on"))
+DUP_SHARE = 0.05
+LANGS, LANG_P = ("en", "de", "fr", "es", "zh"), (0.41, 0.1475, 0.1475, 0.1475, 0.1475)
+DIM, LABELS = 64, 10
 
-EPOCH = dt.datetime(1995, 1, 1)
-SPAN_DAYS = 2400  # order dates span ~6.5 years, as in the fixtures
 US_PER_DAY = 86_400_000_000
-
-
-def _zipf_pick(rng, n, size, a):
-    """`size` draws from 0..n-1 with P(rank r) ~ (r+1)^-a over a seeded
-    permutation of the keys, so the hub keys are not simply 0, 1, 2."""
-    w = (np.arange(1, n + 1, dtype=np.float64)) ** -a
-    w /= w.sum()
-    perm = rng.permutation(n)
-    return perm[rng.choice(n, size=size, p=w)]
 
 
 def _write(table, path):
     pq.write_table(table, path, compression="snappy")
 
 
+def _days(day0, rng, n, span):
+    base = (day0 - dt.datetime(1970, 1, 1)).days
+    return (base + rng.integers(0, span, n)) * US_PER_DAY
+
+
 def _ts(us):
     return pa.array(us.astype("int64"), type=pa.timestamp("us"))
 
 
-def _skew_stats(keys, n):
+def _degree_stats(keys, n):
     counts = np.bincount(keys, minlength=n)
-    nz = counts[counts > 0]
-    return dict(max=int(counts.max()), median=float(np.median(nz)),
+    return dict(max=int(counts.max()), median=float(np.median(counts)),
                 top1pct_share=round(float(np.sort(counts)[::-1][:max(1, n // 100)].sum()
                                           / counts.sum()), 4))
 
 
 def person_graph(rng, out, s, props):
     """customer / supplier / orders / lineitem / nation / region."""
-    nc, ns, no = s["customers"], s["suppliers"], s["orders"]
+    sf = s["sf"]
+    nc, ns, no = round(CUSTOMERS * sf), round(SUPPLIERS * sf), round(ORDERS * sf)
+    nl = LINES_PER_ORDER * no
 
     _write(pa.table({"r_regionkey": pa.array(range(5), pa.int32()),
                      "r_name": [f"REGION_{i}" for i in range(5)]}),
@@ -80,9 +96,9 @@ def person_graph(rng, out, s, props):
                      "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32())}),
            f"{out}/nation.parquet")
 
-    nation = _zipf_pick(rng, 25, nc, TEAM_SKEW).astype(np.int32)
-    acct = np.round(rng.uniform(-999.99, 9999.99, nc), 2)
+    nation = rng.integers(0, 25, nc).astype(np.int32)
     segs = np.array(["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"])
+    acct = np.round(rng.uniform(-999.99, 9999.99, nc), 2)
     _write(pa.table({
         "c_custkey": pa.array(np.arange(nc, dtype=np.int64)),
         "c_name": [f"Customer#{i:09d}" for i in range(nc)],
@@ -97,34 +113,30 @@ def person_graph(rng, out, s, props):
         "s_acctbal": pa.array(np.round(rng.uniform(-999.99, 9999.99, ns), 2)),
     }), f"{out}/supplier.parquet")
 
-    ocust = _zipf_pick(rng, nc, no, CUST_SKEW).astype(np.int64)
-    odate = (EPOCH - dt.datetime(1970, 1, 1)).days * US_PER_DAY \
-        + rng.integers(0, SPAN_DAYS, no) * US_PER_DAY
+    ocust = rng.integers(0, nc, no).astype(np.int64)
     status = np.array(["F", "O", "P"])
     prio = np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"])
     _write(pa.table({
         "o_orderkey": pa.array(np.arange(no, dtype=np.int64)),
         "o_custkey": pa.array(ocust),
         "o_orderstatus": pa.array(status[rng.integers(0, 3, no)]),
-        "o_totalprice": pa.array(np.round(rng.uniform(900, 500000, no), 2)),
-        "o_orderdate": _ts(odate),
+        "o_totalprice": pa.array(np.round(rng.uniform(1000, 500000, no), 2)),
+        "o_orderdate": _ts(_days(ORDER_DAY0, rng, no, ORDER_DAYS)),
         "o_orderpriority": pa.array(prio[rng.integers(0, 5, no)]),
     }), f"{out}/orders.parquet")
 
-    lines = rng.integers(1, s["max_lines"] + 1, no)
-    okey = np.repeat(np.arange(no, dtype=np.int64), lines)
-    nl = len(okey)
-    lineno = (np.arange(nl) - np.repeat(np.cumsum(lines) - lines, lines) + 1).astype(np.int32)
-    supp = _zipf_pick(rng, ns, nl, SUPP_SKEW).astype(np.int64)
-    qty = rng.integers(1, 51, nl).astype(np.float64)
-    ship = np.repeat(odate, lines) + rng.integers(1, 122, nl) * US_PER_DAY
+    # every line picks its order uniformly: Poisson(4) lines per order,
+    # ~2% of orders without lines, as in the fixtures
+    okey = rng.integers(0, no, nl).astype(np.int64)
+    supp = rng.integers(0, ns, nl).astype(np.int64)
+    ship = _days(SHIP_DAY0, rng, nl, SHIP_DAYS)
     _write(pa.table({
         "l_orderkey": pa.array(okey),
-        "l_partkey": pa.array(rng.integers(0, 20000, nl).astype(np.int64)),
+        "l_partkey": pa.array(rng.integers(0, round(PARTS * sf), nl).astype(np.int64)),
         "l_suppkey": pa.array(supp),
-        "l_linenumber": pa.array(lineno),
-        "l_quantity": pa.array(qty),
-        "l_extendedprice": pa.array(np.round(qty * rng.uniform(900, 2100, nl), 2)),
+        "l_linenumber": pa.array(rng.integers(1, 8, nl).astype(np.int32)),
+        "l_quantity": pa.array(rng.integers(1, 51, nl).astype(np.float64)),
+        "l_extendedprice": pa.array(np.round(rng.uniform(900, 105000, nl), 2)),
         "l_discount": pa.array(np.round(rng.integers(0, 11, nl) / 100.0, 2)),
         "l_tax": pa.array(np.round(rng.integers(0, 9, nl) / 100.0, 2)),
         "l_returnflag": pa.array(np.array(["A", "N", "R"])[rng.integers(0, 3, nl)]),
@@ -133,21 +145,26 @@ def person_graph(rng, out, s, props):
     }), f"{out}/lineitem.parquet")
 
     team_sizes = np.bincount(nation, minlength=25)
+    src = ocust[okey]
     props.update(
-        customers=nc, suppliers=ns, orders=no, lineitem_rows=int(nl),
-        cust_skew=CUST_SKEW, supp_skew=SUPP_SKEW, team_skew=TEAM_SKEW,
-        supplier_degree=_skew_stats(supp, ns),
-        customer_degree=_skew_stats(ocust, nc),
+        sf=sf, customers=nc, suppliers=ns, orders=no, lineitem_rows=int(nl),
+        supplier_degree=_degree_stats(supp, ns),
+        customer_degree=_degree_stats(src, nc),
+        docs_per_pair=round(nl / len(np.unique(src * ns + supp)), 4),
+        trove_user_share=round(float((acct > 0).mean()), 4),
         team_size_max=int(team_sizes.max()), team_size_min=int(team_sizes.min()),
         team_size_median=float(np.median(team_sizes)))
     return int(ship.max())
 
 
 def increments(rng, out, s, props, last_us):
-    """Reference-shaped watermark batches (FIXTURES.md §B): each batch
-    holds docs at/after its watermark plus ~5% stragglers from before
-    it, which the watermark filter must drop."""
-    nc, ns, nb, per = s["customers"], s["suppliers"], s["batches"], s["batch_docs"]
+    """Reference-shaped watermark batches (FIXTURES.md §B), with the
+    endpoints and scores of the history's relationship docs (uniform
+    customer and supplier, `l_quantity` and `l_partkey % 100`). Each
+    batch holds docs at/after its watermark plus ~5% stragglers from
+    before it, which the watermark filter must drop."""
+    nc, ns = props["customers"], props["suppliers"]
+    nb, per = s["batches"], s["batch_docs"]
     stats_t = pa.struct([("raw_score_in", pa.int32()), ("raw_score_out", pa.int32())])
     wms = []
     for b in range(nb):
@@ -155,73 +172,54 @@ def increments(rng, out, s, props, last_us):
         late = rng.random(per) < 0.05
         ts = np.where(late, wm - rng.integers(1, 30, per) * US_PER_DAY,
                       wm + rng.integers(0, 7 * 24, per) * 3_600_000_000)
-        frm = _zipf_pick(rng, nc, per, CUST_SKEW)
-        to = _zipf_pick(rng, ns, per, SUPP_SKEW)
         stats = pa.StructArray.from_arrays(
             [pa.array(rng.integers(1, 51, per).astype(np.int32)),
              pa.array(rng.integers(0, 100, per).astype(np.int32))],
             fields=list(stats_t))
         _write(pa.table({
             "last_update": _ts(ts),
-            "from_person_id": [f"C{k}" for k in frm],
-            "to_person_id": [f"S{k}" for k in to],
+            "from_person_id": [f"C{k}" for k in rng.integers(0, nc, per)],
+            "to_person_id": [f"S{k}" for k in rng.integers(0, ns, per)],
             "stats": stats,
         }), f"{out}/incr_{b:03d}.parquet")
         wms.append(int(wm))
     props.update(batches=nb, batch_docs=per, watermarks_us=wms,
-                 increment_to_state=round(2 * per / (2 * props["lineitem_rows"]), 4))
+                 increment_to_state=round(per / props["lineitem_rows"], 4))
 
 
-def _words(rng, n):
-    syll = ["ka", "lo", "mi", "ne", "ru", "sa", "ti", "vo", "ze", "ba", "do", "fu",
-            "gi", "ha", "je", "po", "qu", "wy", "xe", "yo"]
-    out, seen = [], set()
-    while len(out) < n:
-        w = "".join(syll[i] for i in rng.integers(0, len(syll), rng.integers(2, 4)))
-        if w not in seen:
-            seen.add(w)
-            out.append(w)
-    return np.array(out)
+def _block(rng, n, rep):
+    """One replica's documents: fixture-shaped text whose non-stopword
+    tokens carry the replica's prefix (ScaleSmoke: `tok -> r<rep>x<tok>`),
+    and the near-duplicate families its copies form."""
+    vocab = np.array([w if w in STOPWORDS else f"r{rep}x{w}" for w in VOCAB])
+    dup = f"r{rep}x" + "dup"
+    texts, root = [], []
+    for i in range(n):
+        if i > 0 and rng.random() < DUP_SHARE:
+            j = int(rng.integers(0, i))
+            texts.append(texts[j] + " " + dup)
+            root.append(root[j])
+        else:
+            texts.append(" ".join(vocab[rng.integers(0, len(vocab), rng.integers(10, 100))]))
+            root.append(i)
+    return texts, np.bincount(np.array(root))
 
 
 def corpus(rng, out, s, props):
-    """Documents in near-duplicate families plus clustered embeddings."""
-    nd = s["docs"]
-    vocab = _words(rng, s["vocab"])
-    stops = np.array(["the", "a", "an", "of", "and", "to", "in", "is", "it", "on"])
-    zw = np.arange(1, len(vocab) + 1, dtype=np.float64) ** -0.8
-    zw /= zw.sum()
-    fam_p = FAMILY_P
+    """Replicated fixture-shaped documents plus random unit embeddings."""
+    reps, per = s["replicas"], s["docs_per_replica"]
     texts, fams = [], []
-    fam = 0
-    while len(texts) < nd:
-        size = min(int(rng.geometric(fam_p)), 40, nd - len(texts))
-        n_tok = int(rng.integers(20, 90))
-        base = vocab[rng.choice(len(vocab), n_tok, p=zw)]
-        stop_at = rng.random(n_tok) < 0.12
-        base[stop_at] = stops[rng.integers(0, len(stops), stop_at.sum())]
-        kind = rng.random()
-        if kind < 0.04:    # repetitive boilerplate: trips the repetition gate
-            base = np.tile(base[:4], n_tok // 4 + 1)[:n_tok]
-        elif kind < 0.07:  # too short for the quality gate
-            base = base[:3]
-        for _ in range(size):
-            t = base.copy()
-            edits = int(rng.integers(0, 4)) if len(t) > 8 else 0
-            for _ in range(edits):
-                t[rng.integers(0, len(t))] = vocab[rng.integers(0, len(vocab))]
-            texts.append(" ".join(t))
-            fams.append(fam)
-        fam += 1
-    order = rng.permutation(nd)
-    texts = [texts[i] for i in order]
-    fam_sizes = np.bincount(np.array(fams))
-    langs = np.array(["en", "de", "fr", "es", "zh"])
+    for r in range(reps):
+        t, f = _block(rng, per, r)
+        texts += t
+        fams.append(f[f > 0])
+    fam = np.concatenate(fams)
+    nd = len(texts)
     docs = pa.table({
         "doc_id": pa.array(np.arange(nd, dtype=np.int64)),
         "text": texts,
-        "lang": pa.array(langs[rng.integers(0, 5, nd)]),
-        "source": [f"src{i % 20}" for i in rng.integers(0, 10**6, nd)],
+        "lang": pa.array(np.array(LANGS)[rng.choice(len(LANGS), nd, p=LANG_P)]),
+        "source": [f"src{i % 20}" for i in range(nd)],
         "n_chars": pa.array(np.array([len(t) for t in texts], dtype=np.int64)),
     })
     _write(docs, f"{out}/documents.parquet")
@@ -232,33 +230,24 @@ def corpus(rng, out, s, props):
         _write(docs.slice(bounds[i], bounds[i + 1] - bounds[i]),
                f"{out}/spool/part-{i:03d}.parquet")
 
-    nv, dim = s["vectors"], s["dim"]
-    clus_p = CLUSTER_P
-    vecs, labels = [], []
-    c = 0
-    while len(vecs) < nv:
-        size = min(int(rng.geometric(clus_p)), 30, nv - len(vecs))
-        center = rng.normal(size=dim)
-        noise = float(rng.uniform(0.2, 1.2))
-        for _ in range(size):
-            vecs.append(center + rng.normal(scale=noise, size=dim))
-            labels.append(c % 10)
-        c += 1
-    vecs = np.array(vecs, dtype=np.float32)[rng.permutation(nv)]
-    emb = pa.ListArray.from_arrays(
-        pa.array(np.arange(0, nv * dim + 1, dim, dtype=np.int32)),
-        pa.array(vecs.reshape(-1)))
+    # the fixture embeddings are uniform random unit vectors with
+    # uniform labels: no label or cluster structure
+    nv = s["vectors"]
+    x = rng.normal(size=(nv, DIM))
+    x = (x / np.linalg.norm(x, axis=1, keepdims=True)).astype(np.float32)
     _write(pa.table({
         "vec_id": pa.array(np.arange(nv, dtype=np.int64)),
-        "embedding": emb,
-        "label": pa.array(np.array(labels, dtype=np.int32)),
+        "embedding": pa.ListArray.from_arrays(
+            pa.array(np.arange(0, nv * DIM + 1, DIM, dtype=np.int32)), pa.array(x.reshape(-1))),
+        "label": pa.array(rng.integers(0, LABELS, nv).astype(np.int32)),
     }), f"{out}/embeddings.parquet")
     props.update(
-        docs=nd, spool_files=nf, vocab=len(vocab), families=int(fam),
-        family_size_max=int(fam_sizes.max()),
-        family_size_mean=round(float(fam_sizes.mean()), 4),
-        family_pair_count=int((fam_sizes * (fam_sizes - 1) // 2).sum()),
-        vectors=nv, dim=dim, vector_clusters=c)
+        docs=nd, replicas=reps, docs_per_replica=per, spool_files=nf,
+        vocab=reps * (len(VOCAB) - len(STOPWORDS & set(VOCAB)) + 1) + len(STOPWORDS & set(VOCAB)),
+        dup_docs=int(nd - len(fam)),
+        family_size_max=int(fam.max()),
+        family_pair_count=int((fam * (fam - 1) // 2).sum()),
+        vectors=nv, dim=DIM)
 
 
 def generate(workload, seed, out):
@@ -282,4 +271,3 @@ def generate(workload, seed, out):
         os.path.getsize(os.path.join(d, f))
         for d, _, fs in os.walk(out) for f in fs if f.endswith(".parquet"))
     return props
-

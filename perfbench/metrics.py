@@ -191,7 +191,10 @@ def named(rec, docs=None):
 PIPELINES = ("pipelines.bulk", "pipelines.etlIncrement", "pipelines.hopQuery",
              "pipelines.hopQueryJson", "pipelines.curate")
 SINK_SPANS = {"sinks.rdf_write": "sinks.rdf_write_s", "sinks.state_write": "sinks.state_write_s"}
-GRAPH_OPS = ("pageRank", "kCorePeel", "louvain", "sgnsTrain", "coOccurrencePairs")
+# GraphOps calls on the benchmarked workloads; graph_iter (run by hand)
+# also reports the calls only it makes
+GRAPH_OPS = ("pageRank", "kCorePeel")
+GRAPH_ITER_OPS = ("louvain", "sgnsTrain", "coOccurrencePairs")
 CURATE_STAGES = ("operators.TextOps.qualityScore", "operators.TextOps.repetitionStats",
                  "operators.Dedup.contamination", "operators.Dedup.exactDedup",
                  "operators.Dedup.simhashSignatures", "operators.Dedup.simhashPairs",
@@ -213,7 +216,7 @@ PER_LAYER = tuple(
        "checkpoints.release_ratio"]
     + [f"{s}_s" for s in CURATE_STAGES] + ["dedup.pair_yield"]
     + list(FUNCTIONS)
-    + ["streaming.batch_s", "streaming.input_rows_per_s", "streaming.state_rows",
+    + ["streaming.batch_s", "streaming.input_rows_per_s",
        "trace.wall_s", "trace.untraced_wall_s", "trace.overhead_ratio"])
 
 def unit_of(name):
@@ -305,8 +308,10 @@ def per_layer(rec, cores):
             m[key] = median([s["dur_s"] for s in calls(name)])
         m["sinks.bytes_written"] = sum(st.get("output_bytes", 0) for st in pst)
         m["sinks.files_written"] = sum(s.get("files_written", 0) for s in ps)
-        for o in GRAPH_OPS:
+        for o in GRAPH_OPS + GRAPH_ITER_OPS:
             c = calls(f"operators.GraphOps.{o}")
+            if not c and o in GRAPH_ITER_OPS:
+                continue
             m[f"operators.GraphOps.{o}_s"] = median([s["dur_s"] for s in c])
             njobs = []
             for s in c:
@@ -333,7 +338,6 @@ def per_layer(rec, cores):
         m["streaming.batch_s"] = median([x["batch_s"] for x in b])
         bs = sum(x["batch_s"] for x in b)
         m["streaming.input_rows_per_s"] = sum(x["rows"] for x in b) / bs if bs else 0.0
-        m["streaming.state_rows"] = max([x["state_rows"] for x in b], default=0)
         per_pass.append(m)
 
     out = {}
@@ -350,7 +354,8 @@ def per_layer(rec, cores):
     out["trace.wall_s"] = tw
     out["trace.untraced_wall_s"] = uw
     out["trace.overhead_ratio"] = tw / uw if uw else 0.0
-    return {k: (float(out.get(k, 0.0)), unit_of(k)) for k in PER_LAYER}
+    extra = [k for k in out if k.startswith(tuple(f"operators.GraphOps.{o}_" for o in GRAPH_ITER_OPS))]
+    return {k: (float(out.get(k, 0.0)), unit_of(k)) for k in PER_LAYER + tuple(extra)}
 
 
 def breakdown(rec, span_id):

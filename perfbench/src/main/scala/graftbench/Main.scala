@@ -10,13 +10,13 @@ import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** One benchmark run of one workload in one JVM, driven by `run.py`:
-  * session set-up, one warm-up pass, timed passes until the time is up,
+  * session set-up, warm-up passes, timed passes until the time is up,
   * the traced layer probes, then the last pass's outputs for the
   * correctness check. Everything measured goes to `<out>/run.json`;
   * `run.py` turns it into metrics.
   *
   * Usage: Main --workload W --data DIR --work DIR --out DIR
-  *             --seconds S --trace 0|1 --cores N --params FILE
+  *             --seconds S --trace 0|1 --cores N --params FILE --warmup K
   */
 object Main {
   private def session(cores: Int, work: String): SparkSession = {
@@ -31,6 +31,9 @@ object Main {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  private def toJson(v: Any): String =
+    org.json4s.jackson.Serialization.write(v.asInstanceOf[AnyRef])(org.json4s.DefaultFormats)
 
   private def readParams(path: String): Map[String, Any] =
     org.json4s.jackson.JsonMethods.parse(
@@ -66,10 +69,13 @@ object Main {
     }
 
     // warm-up: JIT, footer reads, codegen caches; part of setup_s
-    val w0 = System.nanoTime()
-    wl.pass(client, passDir)
-    cleanup()
-    val warmupS = (System.nanoTime() - w0) / 1e9
+    val warmupPasses = (1 to a("warmup").toInt).map { _ =>
+      val w0 = System.nanoTime()
+      wl.pass(client, passDir)
+      cleanup()
+      (System.nanoTime() - w0) / 1e9
+    }
+    val warmupS = warmupPasses.sum
     val warmupRequests = client.requests.toList
     client.requests.clear()
     client.batches.clear()
@@ -121,7 +127,7 @@ object Main {
         .write.mode("overwrite").parquet(s"$out/check/$name")
     }
     Files.writeString(Paths.get(s"$out/oracle_sql.json"),
-      Json(wl.oracles.map(n => n -> SparkEntry.oracleSql(n)).toMap))
+      toJson(wl.oracles.map(n => n -> SparkEntry.oracleSql(n)).toMap))
 
     val rt = ManagementFactory.getRuntimeMXBean
     val record = Map(
@@ -129,11 +135,14 @@ object Main {
         "spark_version" -> spark.version,
         "jdk" -> System.getProperty("java.version"),
         "jvm" -> s"${System.getProperty("java.vm.name")} ${System.getProperty("java.vm.version")}",
+        // "sharing" when the JVM started from a class-data archive
+        "vm_info" -> System.getProperty("java.vm.info"),
         "storage_memory_mb" -> spark.sparkContext.getExecutorMemoryStatus.values
           .map(_._1).sum / 1048576.0,
         "calib_s" -> calib),
       "setup" -> Map("jvm_start_ms" -> rt.getStartTime, "session_ready_ms" -> sessionReadyMs,
-        "warmup_s" -> warmupS, "warmup_requests" -> warmupRequests),
+        "warmup_s" -> warmupS, "warmup_passes_s" -> warmupPasses,
+        "warmup_requests" -> warmupRequests),
       "passes" -> passes,
       "requests" -> client.requests,
       "batches" -> client.batches,
@@ -147,7 +156,7 @@ object Main {
       "stages" -> tracer.stages.values.map(_.toMap),
       "queries" -> tracer.queries,
       "blocks" -> tracer.blocks)
-    Files.writeString(Paths.get(s"$out/run.json"), Json(record))
+    Files.writeString(Paths.get(s"$out/run.json"), toJson(record))
     spark.stop()
   }
 

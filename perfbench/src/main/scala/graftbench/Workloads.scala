@@ -261,8 +261,7 @@ final class CurationWl extends Workload {
         c.requests += Map("cls" -> "ingest_batch", "s" -> pr.batchDuration / 1000.0,
           "pass" -> c.pass, "traced" -> c.traced, "request" -> 0)
         c.batches += Map("pass" -> c.pass, "traced" -> c.traced,
-          "batch_s" -> pr.batchDuration / 1000.0, "rows" -> pr.numInputRows,
-          "state_rows" -> pr.stateOperators.map(_.numRowsTotal).sum)
+          "batch_s" -> pr.batchDuration / 1000.0, "rows" -> pr.numInputRows)
       }
     }
     c.written("ingest_pairs") = s"$work/pairs"

@@ -15,6 +15,7 @@ sys.path.insert(0, os.path.dirname(HERE))
 import compare  # noqa: E402
 import gen  # noqa: E402
 import metrics  # noqa: E402
+import shape  # noqa: E402
 
 
 def digest_dir(d):
@@ -50,12 +51,62 @@ class InputsTest(unittest.TestCase):
 
     def test_props_record_the_sensitive_properties(self):
         _, p = self.generate("ref_etl", 3)
-        for k in ("supp_skew", "supplier_degree", "team_size_max", "increment_to_state",
-                  "input_bytes"):
+        for k in ("supplier_degree", "customer_degree", "team_size_max", "docs_per_pair",
+                  "increment_to_state", "input_bytes"):
             self.assertIn(k, p)
         _, p = self.generate("curation", 3)
-        for k in ("family_size_max", "family_pair_count", "docs", "input_bytes"):
+        for k in ("family_size_max", "family_pair_count", "docs_per_replica", "docs",
+                  "input_bytes"):
             self.assertIn(k, p)
+
+
+class ShapeTest(unittest.TestCase):
+    """The generated inputs have the fixture tables' measured shape
+    (shape.FIXTURE), wherever a figure does not depend on the scale."""
+
+    def measure(self, workload, seed):
+        d = tempfile.mkdtemp()
+        self.addCleanup(lambda: __import__("shutil").rmtree(d))
+        gen.generate(workload, seed, d)
+        return shape.shape(d)
+
+    def test_person_graph(self):
+        f = shape.FIXTURE
+        for seed in (1, 2):
+            g = self.measure("ref_etl", seed)
+            self.assertAlmostEqual(g["orders_per_customer"]["mean"],
+                                   f["orders_per_customer"]["mean"], delta=0.01)
+            self.assertAlmostEqual(g["orders_per_customer"]["top1pct_share"],
+                                   f["orders_per_customer"]["top1pct_share"], delta=0.003)
+            self.assertLess(g["orders_per_customer"]["max"], 3 * f["orders_per_customer"]["mean"])
+            self.assertAlmostEqual(g["lines_per_supplier"]["mean"],
+                                   f["lines_per_supplier"]["mean"], delta=0.01)
+            self.assertLess(g["lines_per_supplier"]["cv"], 2 * f["lines_per_supplier"]["cv"])
+            self.assertAlmostEqual(g["lines_per_order"]["mean_nonempty"],
+                                   f["lines_per_order"]["mean_nonempty"], delta=0.05)
+            self.assertAlmostEqual(g["lines_per_order"]["empty_share"],
+                                   f["lines_per_order"]["empty_share"], delta=0.005)
+            self.assertAlmostEqual(g["trove_user_share"], f["trove_user_share"], delta=0.03)
+
+    def test_documents_and_embeddings(self):
+        f = shape.FIXTURE
+        for seed in (1, 2):
+            c = self.measure("curation", seed)
+            self.assertEqual(c["words_per_doc"]["min"], f["words_per_doc"]["min"])
+            self.assertLessEqual(c["words_per_doc"]["max"], f["words_per_doc"]["max"])
+            self.assertAlmostEqual(c["words_per_doc"]["mean"], f["words_per_doc"]["mean"],
+                                   delta=2.5)
+            # each replica renames the fixture's vocabulary apart from stopwords
+            per_rep = f["vocabulary"] - len(gen.STOPWORDS & set(gen.VOCAB))
+            self.assertEqual(c["vocabulary"], gen.SIZES["curation"]["replicas"] * per_rep
+                             + len(gen.STOPWORDS & set(gen.VOCAB)))
+            self.assertAlmostEqual(c["dup_doc_share"], f["dup_doc_share"], delta=0.02)
+            self.assertAlmostEqual(c["lang_en_share"], f["lang_en_share"], delta=0.05)
+            e, fe = c["embedding"], f["embedding"]
+            self.assertEqual((e["dim"], e["labels"]), (fe["dim"], fe["labels"]))
+            self.assertAlmostEqual(e["norm"], 1.0, places=3)
+            self.assertAlmostEqual(e["component_sd"], fe["component_sd"], delta=0.002)
+            self.assertAlmostEqual(e["same_label_mean_cos"], 0.0, delta=0.01)
 
 
 class TailTest(unittest.TestCase):
@@ -150,11 +201,40 @@ class PerLayerTest(unittest.TestCase):
         self.assertAlmostEqual(m["spark.task_skew"][0], 800 / 600)
 
 
+PROV = {"workload": "ref_etl", "cpus": 4, "host_cpus": 4, "jdk": "17", "spark": "4.1.2",
+        "heap": "3g", "cds": True, "bench": "b1", "seconds": 10.0, "traced": False,
+        "code": "c1"}
+
+
 class RegressionCheckTest(unittest.TestCase):
-    def runs(self, wall, n=10):
-        return [{"correct": True, "metrics": {
+    def runs(self, wall, n=10, **prov):
+        return [{"correct": True, "provenance": dict(PROV, seed=i, **prov), "metrics": {
             "wall_s": {"value": wall * (1 + 0.01 * (i % 3)), "unit": "s"},
             "setup_s": {"value": 30.0 + 0.1 * i, "unit": "s"}}} for i in range(n)]
+
+    def test_runs_of_other_hosts_or_setups_are_not_compared(self):
+        self.assertEqual(compare.provenance_problems(self.runs(10.0), self.runs(10.0, code="c2")),
+                         [])
+        for k, v in (("cpus", 8), ("cds", False), ("jdk", "21"), ("bench", "b2")):
+            self.assertTrue(compare.provenance_problems(self.runs(10.0), self.runs(10.0, **{k: v})),
+                            k)
+        mixed = self.runs(10.0)[:5] + self.runs(10.0, code="c2")[:5]
+        self.assertTrue(compare.provenance_problems(self.runs(10.0), mixed))
+        bare = self.runs(10.0)
+        del bare[3]["provenance"]
+        self.assertTrue(compare.provenance_problems(self.runs(10.0), bare))
+
+    def test_result_lines_pair_with_their_provenance(self):
+        d = tempfile.mkdtemp()
+        self.addCleanup(lambda: __import__("shutil").rmtree(d))
+        path = os.path.join(d, "runs.out")
+        with open(path, "w") as fh:
+            for r in self.runs(10.0, n=2):
+                prov = r.pop("provenance")
+                fh.write(f"# provenance {json.dumps(prov)}\nwall_s 10 s\n{json.dumps(r)}\n")
+            fh.write(json.dumps({"correct": True, "metrics": {}}) + "\n")
+        runs = compare.read_runs(path)
+        self.assertEqual([r.get("provenance", {}).get("seed") for r in runs], [0, 1, None])
 
     def test_slower_run_is_reported_as_regressed(self):
         bounds = compare.load_bounds()
