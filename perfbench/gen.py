@@ -56,6 +56,8 @@ VOCAB = ("spark", "window", "merge", "table", "column", "vector", "stream", "val
          "a", "scan", "batch")
 STOPWORDS = frozenset(("the", "a", "an", "of", "and", "to", "in", "is", "it", "on"))
 DUP_SHARE = 0.05
+# seed of the near-duplicate family layout, the same for every run
+FAMILY_LAYOUT = 0
 LANGS, LANG_P = ("en", "de", "fr", "es", "zh"), (0.41, 0.1475, 0.1475, 0.1475, 0.1475)
 DIM, LABELS = 64, 10
 
@@ -190,13 +192,19 @@ def increments(rng, out, s, props, last_us):
 def _block(rng, n, rep):
     """One replica's documents: fixture-shaped text whose non-stopword
     tokens carry the replica's prefix (ScaleSmoke: `tok -> r<rep>x<tok>`),
-    and the near-duplicate families its copies form."""
+    and the near-duplicate families its copies form.
+
+    Which documents are copies, and of which earlier document, is drawn
+    from a stream of its own that the seed does not reach: every seed
+    has the same families, so the dedup chain does the same work (its
+    rounds follow the largest family), and the seed varies the text."""
     vocab = np.array([w if w in STOPWORDS else f"r{rep}x{w}" for w in VOCAB])
     dup = f"r{rep}x" + "dup"
+    layout = np.random.default_rng([FAMILY_LAYOUT, rep])
     texts, root = [], []
     for i in range(n):
-        if i > 0 and rng.random() < DUP_SHARE:
-            j = int(rng.integers(0, i))
+        if i > 0 and layout.random() < DUP_SHARE:
+            j = int(layout.integers(0, i))
             texts.append(texts[j] + " " + dup)
             root.append(root[j])
         else:

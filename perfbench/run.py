@@ -6,7 +6,7 @@
 Run from the root of a checkout. The first run builds the program and
 the benchmark client from source (sbt, offline); later runs reuse the
 build until a source file changes. Each run generates its inputs from
-the seed, starts one JVM running Spark in `local[n]` (n = min(4, cores))
+the seed, starts one JVM running Spark in `local[n]` (n = min(2, cores))
 as a single closed-loop client, does its warm-up passes, then timed passes
 for `--seconds`, then checks the outputs with DuckDB.
 
@@ -41,12 +41,19 @@ BENCHED = ("ref_etl", "curation")
 # response document for the first team(s)
 HOP_QUERIES = 6
 HOP_JSON_QUERIES = 1
-# untimed passes before the timed ones. The first timed pass of ref_etl
-# after one warm-up pass still runs 5-50% slower than later passes, by an
-# amount that differs run to run (the JIT is still compiling the driver's
-# per-query code); its second warm-up pass keeps that out of the timing.
-WARMUP_PASSES = {"ref_etl": 2, "graph_iter": 1, "curation": 1}
+# untimed passes before the timed ones. A pass after one warm-up pass
+# still runs 20-50% slower than later passes, by an amount that differs
+# run to run (the JIT is still compiling the driver's per-query code);
+# a second warm-up pass keeps most of that out of the timing.
+WARMUP_PASSES = {"ref_etl": 2, "graph_iter": 1, "curation": 2}
 HEAP = "3g"
+# Spark's task threads. The workloads are overhead-bound (tasks keep the
+# cores busy 13-15% of a pass on local[4]), so two task threads lose
+# little, and with the driver, JIT and GC threads the JVM stays within
+# a 4-vCPU share instead of measuring the scheduler
+CORES = min(2, os.cpu_count() or 1)
+# a fixed young generation: the collector does not resize it run by run
+JVM_OPTS = [f"-Xmx{HEAP}", "-Xmn512m", "-XX:-UsePerfData"]
 RUN_LIMIT_S = 170
 
 ADD_OPENS = [
@@ -97,9 +104,7 @@ def spark_home():
 def java_cmd(jar, archive_opt):
     java = os.path.join(os.environ["JAVA_HOME"], "bin", "java") \
         if os.environ.get("JAVA_HOME") else shutil.which("java")
-    # a fixed young generation keeps the collector from resizing it run
-    # by run, so the peak resident set follows what the program retains
-    cmd = [java, f"-Xmx{HEAP}", "-Xmn512m", "-XX:-UsePerfData", archive_opt]
+    cmd = [java] + JVM_OPTS + [archive_opt]
     for p in ADD_OPENS:
         cmd += ["--add-opens", f"{p}=ALL-UNNAMED"]
     return cmd + ["-cp", os.pathsep.join([jar, os.path.join(spark_home(), "jars", "*")])]
@@ -132,7 +137,7 @@ def train(build_dir, jar, archive):
         specs.append(f"{w}={d}")
     cmd = java_cmd(jar, f"-XX:ArchiveClassesAtExit={archive}") + [
         f"-Djava.io.tmpdir={tdir}", "graftbench.Main", "--train", ",".join(specs),
-        "--cores", str(min(4, os.cpu_count() or 1)), "--work", tdir]
+        "--cores", str(CORES), "--work", tdir]
     with open(os.path.join(build_dir, "train.log"), "w") as fh:
         r = subprocess.run(cmd, stdout=fh, stderr=subprocess.STDOUT, stdin=subprocess.DEVNULL,
                            cwd=tdir, timeout=600)
@@ -155,6 +160,8 @@ def build(root):
     stamp = tree_hash([program, os.path.join(HERE, "src"), os.path.join(HERE, "build.sbt"),
                        os.path.join(HERE, "project", "build.properties"),
                        os.path.join(HERE, "gen.py")])
+    # the class-data archive holds what a JVM with these options loads
+    stamp += json.dumps([JVM_OPTS, CORES])
     if all(os.path.exists(f) for f in (jar, archive, stamp_file)) \
             and open(stamp_file).read() == stamp:
         return jar
@@ -237,7 +244,7 @@ def run(workload, seed, seconds, traced):
     root = os.getcwd()
     jar = build(root)
     deadline = time.time() + RUN_LIMIT_S
-    cores = min(4, os.cpu_count() or 1)
+    cores = CORES
     tag = f"{workload}-s{seed}-t{int(traced)}"
     work = os.path.join(root, ".bench_work", f"{tag}-{os.getpid()}")
     out = os.path.join(work, "out")

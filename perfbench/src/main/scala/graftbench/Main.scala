@@ -63,9 +63,12 @@ object Main {
     val wl = Workloads(a("workload"), params)
     val passDir = s"$work/pass"
 
+    // between passes, outside their timing: drop what the client cached
+    // and collect, so every pass starts from the same heap
     def cleanup(): Unit = {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      System.gc()
     }
 
     // warm-up: JIT, footer reads, codegen caches; part of setup_s
@@ -105,7 +108,8 @@ object Main {
       passes += Map("pass" -> i, "traced" -> traced, "wall_s" -> wall,
         "start_ms" -> startMs, "end_ms" -> endMs,
         "blocks_held_before" -> blocksBefore,
-        "blocks_held_after" -> blocks, "bytes_held_after" -> bytes)
+        "blocks_held_after" -> blocks, "bytes_held_after" -> bytes,
+        "retained_heap_mb" -> retainedHeapMb())
       cleanup()
     }
 
@@ -184,6 +188,14 @@ object Main {
       (System.nanoTime() - t0) / 1e9
     }
     t.sorted.apply(1)
+  }
+
+  /** Heap still reachable when a pass has ended, in MiB: what the
+    * program and the session hold, without the garbage whose amount
+    * depends on when the collector last ran. */
+  private def retainedHeapMb(): Double = {
+    System.gc()
+    ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
   }
 
   /** Peak resident set of this process (VmHWM), in MiB. */

@@ -189,7 +189,7 @@ class PerLayerTest(unittest.TestCase):
             "blocks": [{"t_ms": 200, "valid": True, "bytes": 10, "block": "rdd_1_0"},
                        {"t_ms": 250, "valid": True, "bytes": 10, "block": "rdd_1_1"},
                        {"t_ms": 300, "valid": True, "bytes": 10, "block": "rdd_1_0"}],
-            "batches": [], "requests": [], "probes": {},
+            "batches": [], "requests": [], "probes": {}, "peak_rss_mb": 1500.0,
         }
         m = metrics.per_layer(rec, cores=4)
         self.assertEqual(set(m), set(metrics.PER_LAYER))
@@ -199,6 +199,19 @@ class PerLayerTest(unittest.TestCase):
         self.assertAlmostEqual(m["checkpoints.release_ratio"][0], 0.5)  # one of two still held
         self.assertAlmostEqual(m["trace.overhead_ratio"][0], 1.25)
         self.assertAlmostEqual(m["spark.task_skew"][0], 800 / 600)
+        self.assertEqual(m["jvm.peak_rss_mb"], (1500.0, "MiB"))
+
+    def test_end_to_end_takes_untraced_passes_only(self):
+        rec = {"passes": [{"traced": True, "wall_s": 9.0, "retained_heap_mb": 900.0},
+                          {"traced": False, "wall_s": 2.0, "retained_heap_mb": 150.0},
+                          {"traced": False, "wall_s": 4.0, "retained_heap_mb": 170.0}],
+               "requests": [{"traced": True, "s": 9.0}, {"traced": False, "s": 1.0},
+                            {"traced": False, "s": 2.0}, {"traced": False, "s": 6.0}]}
+        m = metrics.end_to_end(rec, setup_s=30.0)
+        self.assertEqual(set(m), set(metrics.E2E))
+        self.assertEqual(m["wall_s"], (3.0, "s"))
+        self.assertEqual(m["request_p50_s"], (2.0, "s"))
+        self.assertEqual(m["retained_heap_mb"], (160.0, "MiB"))
 
 
 PROV = {"workload": "ref_etl", "cpus": 4, "host_cpus": 4, "jdk": "17", "spark": "4.1.2",
