@@ -134,17 +134,15 @@ def attribute(rec):
 
 # ---------------------------------------------------------------------- metrics
 
-E2E = ("setup_s", "wall_s", "request_p50_s", "retained_heap_mb")
+E2E = ("setup_s", "wall_s", "retained_heap_mb")
 
 
 def end_to_end(rec, setup_s):
     """Metrics a user sees, from untraced passes only."""
     untraced = [p for p in rec["passes"] if not p["traced"]]
-    lat = [r["s"] for r in rec["requests"] if not r["traced"]]
     return {
         "setup_s": (setup_s, "s"),
         "wall_s": (median([p["wall_s"] for p in untraced]), "s"),
-        "request_p50_s": (median(lat), "s"),
         "retained_heap_mb": (median([p["retained_heap_mb"] for p in untraced]), "MiB"),
     }
 
@@ -176,6 +174,7 @@ def named(rec, docs=None):
     tl("hop_tail_s", "hop")
     p50("hop_json_p50_s", "hop_json")
     all_lat = [x for v in by.values() for x in v]
+    out["request_p50_s"] = {"value": median(all_lat), "unit": "s", "n": len(all_lat)}
     t = tail(all_lat)
     out["request_tail_s"] = ({"value": t[0], "unit": "s", "percentile": round(t[1], 2), "n": t[2]}
                              if t else {"value": None, "unit": "s", "n": len(all_lat)})

@@ -109,7 +109,7 @@ object Main {
         "start_ms" -> startMs, "end_ms" -> endMs,
         "blocks_held_before" -> blocksBefore,
         "blocks_held_after" -> blocks, "bytes_held_after" -> bytes,
-        "retained_heap_mb" -> retainedHeapMb())
+        "retained_heap_mb" -> retainedHeapMb(spark.sparkContext))
       cleanup()
     }
 
@@ -192,10 +192,27 @@ object Main {
 
   /** Heap still reachable when a pass has ended, in MiB: what the
     * program and the session hold, without the garbage whose amount
-    * depends on when the collector last ran. */
-  private def retainedHeapMb(): Double = {
-    System.gc()
-    ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+    * depends on when the collector last ran. Spark's ContextCleaner
+    * frees the blocks of broadcasts and shuffles only after a collection
+    * has found them unreachable, on its own thread, so the heap is
+    * collected, after the listener bus has drained, until two readings
+    * 100 ms apart agree within 1 MiB; a single reading held ~95 MiB more
+    * on some `ref_etl` runs. */
+  private def retainedHeapMb(sc: org.apache.spark.SparkContext): Double = {
+    org.apache.spark.SparkInternals.drain(sc)
+    val mx = ManagementFactory.getMemoryMXBean
+    def collected(): Double = { System.gc(); mx.getHeapMemoryUsage.getUsed / 1048576.0 }
+    var last = collected()
+    var i = 0
+    var settled = false
+    while (!settled && i < 20) {
+      Thread.sleep(100)
+      val now = collected()
+      settled = math.abs(now - last) < 1.0
+      last = now
+      i += 1
+    }
+    last
   }
 
   /** Peak resident set of this process (VmHWM), in MiB. */

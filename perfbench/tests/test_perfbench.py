@@ -204,13 +204,10 @@ class PerLayerTest(unittest.TestCase):
     def test_end_to_end_takes_untraced_passes_only(self):
         rec = {"passes": [{"traced": True, "wall_s": 9.0, "retained_heap_mb": 900.0},
                           {"traced": False, "wall_s": 2.0, "retained_heap_mb": 150.0},
-                          {"traced": False, "wall_s": 4.0, "retained_heap_mb": 170.0}],
-               "requests": [{"traced": True, "s": 9.0}, {"traced": False, "s": 1.0},
-                            {"traced": False, "s": 2.0}, {"traced": False, "s": 6.0}]}
+                          {"traced": False, "wall_s": 4.0, "retained_heap_mb": 170.0}]}
         m = metrics.end_to_end(rec, setup_s=30.0)
         self.assertEqual(set(m), set(metrics.E2E))
         self.assertEqual(m["wall_s"], (3.0, "s"))
-        self.assertEqual(m["request_p50_s"], (2.0, "s"))
         self.assertEqual(m["retained_heap_mb"], (160.0, "MiB"))
 
 
