@@ -41,11 +41,13 @@ BENCHED = ("ref_etl", "curation")
 # response document for the first team(s)
 HOP_QUERIES = 6
 HOP_JSON_QUERIES = 1
-# untimed passes before the timed ones. A pass after one warm-up pass
-# still runs 20-50% slower than later passes, by an amount that differs
-# run to run (the JIT is still compiling the driver's per-query code);
-# a second warm-up pass keeps most of that out of the timing.
-WARMUP_PASSES = {"ref_etl": 2, "graph_iter": 1, "curation": 2}
+# untimed passes before the timed ones. On ref_etl a pass after one
+# warm-up pass still runs 5-50% slower than later passes, by an amount
+# that differs run to run (the JIT is still compiling the driver's
+# per-query code); its second warm-up pass keeps that out of the timing.
+# On curation a second one did not narrow the spread of ten runs (0.14,
+# against 0.10-0.19 with one) and does not fit the run budget.
+WARMUP_PASSES = {"ref_etl": 2, "graph_iter": 1, "curation": 1}
 HEAP = "3g"
 # Spark's task threads. The workloads are overhead-bound (tasks keep the
 # cores busy 13-15% of a pass on local[4]), so two task threads lose
