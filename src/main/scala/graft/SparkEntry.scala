@@ -416,8 +416,8 @@ object SparkEntry {
     // fixed-round k-core peel: strip the low-degree periphery of the
     // person graph (3 unrolled peels, oracle-matched round for round)
     "g_kcore" -> ((s, dir) => GraphOps.kCorePeel(mergedOf(s, dir), 32, 3)),
-    // fixpoint mode: peel until no vertex falls below k (convergence
-    // observed on the per-round cut job, no extra count pass)
+    // fixpoint mode: peel until no vertex falls below k (convergence is
+    // the per-round cut's measured row count, no extra count pass)
     "g_kcore_fixpoint" -> ((s, dir) => GraphOps.kCorePeel(mergedOf(s, dir), 32, -1)),
 
     // weight-proportional PageRank over the stored edge scores
@@ -481,9 +481,10 @@ object SparkEntry {
     }),
 
     // Fixed-iteration integer PageRank over the merged person graph;
-    // the rank-loop broadcast/shuffle choice is AUTO (one count of the
-    // materialized vertex frame vs BroadcastRanksMaxVertices) — picks
-    // broadcast here, shuffle past the sf10 smoke's measured cliff
+    // the rank-loop broadcast/shuffle choice is the Checkpoints rule
+    // (the cut vertex frame's measured bytes vs
+    // spark.sql.autoBroadcastJoinThreshold) — broadcast here, shuffle
+    // once the vertex frame outgrows the threshold
     "g_pagerank" -> ((s, dir) =>
       GraphOps.pageRank(mergedOf(s, dir), 3)),
 

@@ -1363,9 +1363,10 @@ object Dedup {
     // graph — the 100 TB path for adversarial pair graphs.
     val starAt = math.min(StarFallbackRounds, maxRounds)
     while (changed && round < starAt) {
-      // broadcastLabels: the checkpointed edge list has no size stats,
-      // so Catalyst plans a sort-merge join that re-sorts the FULL edge
-      // list every round (measured ~2s/round at sf0.1). When the caller
+      // broadcastLabels: the per-round label frame is derived by joins,
+      // so Spark's size estimate of it is useless and Catalyst plans a
+      // sort-merge join that re-sorts the FULL edge list every round
+      // (measured ~2s/round at sf0.1). When the caller
       // knows the vertex set fits an executor (dedup clustering over a
       // bounded doc set), broadcasting the label table turns each round
       // into one broadcast-hash pass over the pre-materialized edges —

@@ -261,38 +261,32 @@ object GraphOps {
     *    on `src`, then groupBy `dst`) — O(E) per round, no row blowup;
     *  - edges / vertices / degrees are computed once and
     *    localCheckpoint'ed so the upstream pipeline never re-executes
-    *    across rounds (checkpointed frames lose size stats, hence the
-    *    explicit `broadcastRanks` switch for bounded vertex sets —
-    *    measured 3× per-round saving in the CC loop);
+    *    across rounds;
     *  - `iters` is small and fixed (power iteration converges
     *    geometrically), so rank lineage stays shallow with a
     *    checkpoint every `checkpointEvery` rounds.
     *
-    * `broadcastRanks`: `Some(true)` broadcasts the per-round rank and
-    * share frames, `Some(false)` shuffles them, and `None` — the
-    * default — AUTO-SELECTS by counting the already-materialized
-    * vertex frame once against [[BroadcastRanksMaxVertices]]. The
-    * knob exists because checkpointed frames lose size stats, so
-    * Catalyst cannot make this call; the auto mode exists so the
-    * caller doesn't have to. Measured (sf10 smoke, 1.6M string-keyed
-    * vertices / 60M edges / 3 rounds): broadcast 87 s, shuffle 122 s
-    * — broadcast wins at every size that fits memory, so the auto
-    * ceiling is set where a rank broadcast would threaten the
-    * executor/driver budget (~10⁷ rows ≈ 500 MB with string ids),
-    * not at a wall-clock crossover.
+    * The per-round rank and share frames are derived by joins, so
+    * Spark's estimate of them is useless; they take
+    * [[Checkpoints.broadcastRule]] off the cut vertex frame — broadcast
+    * iff its measured bytes fit `spark.sql.autoBroadcastJoinThreshold`.
+    * At the sf10 smoke's size (1.6M string-keyed vertices, 3 rounds)
+    * the vertex frame is far above Spark's 10 MiB default, so the loop
+    * shuffles unless the session raises the threshold past the vertex
+    * frame's bytes. The former rule (≤ 10⁷ counted vertices) broadcast
+    * it there: 87 s against 122 s shuffled (not re-measured since).
     *
     * Callers should pass a distinct edge list (e.g. [[mergeMaxEdges]]
     * output) — duplicate (src,dst) rows would double-count contributions.
     */
   def pageRank(edges: DataFrame, iters: Int, checkpointEvery: Int = 4,
-      broadcastRanks: Option[Boolean] = None,
       checkpointDir: Option[String] = None): DataFrame =
     // the all-seeds special case of the personalized loop: every
     // vertex seeded ⇒ the recurrence IS the uniform teleport (the
     // equivalence GraphOpsSpec pins), so there is exactly one loop to
     // maintain
     personalizedPageRankImpl(edges, Right(lit(true)), iters,
-      checkpointEvery, broadcastRanks, checkpointDir)
+      checkpointEvery, checkpointDir)
 
   /** Personalized PageRank (Haveliwala 2002): the [[pageRank]] power
     * iteration with the teleport mass restricted to a SEED set —
@@ -308,15 +302,14 @@ object GraphOps {
     * list. Seeds not present in the graph contribute nothing (the
     * vertex set comes from the edge list); the seed marker joins once
     * onto the checkpointed vertex frame, so the per-round loop shape
-    * is IDENTICAL to [[pageRank]] — with `broadcastRanks`, one
+    * is IDENTICAL to [[pageRank]] — with broadcast rank frames, one
     * edge-sized shuffle per round and nothing else.
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
       checkpointEvery: Int = 4,
-      broadcastRanks: Option[Boolean] = None,
       checkpointDir: Option[String] = None): DataFrame =
     personalizedPageRankImpl(edges, Left(seeds), iters, checkpointEvery,
-      broadcastRanks, checkpointDir)
+      checkpointDir)
 
   /** [[personalizedPageRank]] with the seed set given as a PREDICATE
     * over `person_id` instead of a frame — for seed sets that are a
@@ -329,41 +322,15 @@ object GraphOps {
   def personalizedPageRankByPred(edges: DataFrame, seedPred: Column,
       iters: Int,
       checkpointEvery: Int = 4,
-      broadcastRanks: Option[Boolean] = None,
       checkpointDir: Option[String] = None): DataFrame =
     personalizedPageRankImpl(edges, Right(seedPred), iters, checkpointEvery,
-      broadcastRanks, checkpointDir)
-
-  /** Auto-broadcast ceiling for the rank-loop frames. Broadcast beat
-    * shuffle at every measured size (160k vertices: 6.9 s vs — ; 1.6M
-    * vertices: 87 s vs 122 s for the 3-round sf10 loop), so the
-    * ceiling is a MEMORY bound, not a wall-clock crossover: ~10⁷
-    * string-keyed rank rows ≈ 500 MB serialized — three such builds
-    * per round is the most a default executor/driver budget should
-    * carry. Above it the loop degrades gracefully to shuffled joins
-    * (~1.4× slower per round at the sizes measured, never OOM).
-    */
-  val BroadcastRanksMaxVertices: Long = 10000000L
-
-  /** Resolve a rank-loop broadcast knob: explicit value wins; `None`
-    * counts the (already-materialized) vertex frame once — a cheap,
-    * steps-independent driver action on a cut frame.
-    */
-  private def resolveBroadcast(knob: Option[Boolean], verts: DataFrame): Boolean =
-    knob.getOrElse {
-      val n = verts.count()
-      val b = n <= BroadcastRanksMaxVertices
-      log.info(s"auto-broadcast: $n vertices -> " +
-        (if (b) "broadcast" else "shuffle") + " per-round frames")
-      b
-    }
+      checkpointDir)
 
   private def personalizedPageRankImpl(
       edges: DataFrame,
       seeds: Either[DataFrame, Column],
       iters: Int,
       checkpointEvery: Int,
-      broadcastRanksKnob: Option[Boolean],
       checkpointDir: Option[String]): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val pairs = edges.select(col("src"), col("dst"))
@@ -381,23 +348,21 @@ object GraphOps {
         .select(col("person_id"), coalesce(pred, lit(false)).as("is_seed"))
     }
     val verts = Checkpoints.cut(marked, checkpointDir)
-    val broadcastRanks = resolveBroadcast(broadcastRanksKnob, verts)
+    val bc = Checkpoints.broadcastRule(verts)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
       .select(col("src").as("dsrc"), col("out_deg"))
-    val degB = if (broadcastRanks) broadcast(deg) else deg
     val ed = Checkpoints.cut(
-      e.join(degB, col("src") === col("dsrc"))
+      e.join(bc(deg), col("src") === col("dsrc"))
         .select(col("src").as("esrc"), col("dst"), col("out_deg")), checkpointDir)
     val teleport = when(col("is_seed"), lit(150000000L)).otherwise(lit(0L))
     var pr = verts.select(col("person_id"),
       when(col("is_seed"), lit(1000000000L)).otherwise(lit(0L)).as("pr_e9"))
     for (it <- 1 to iters) {
-      val prIn = if (broadcastRanks) broadcast(pr) else pr
+      val prIn = bc(pr)
       val inbound = ed.join(prIn, col("esrc") === prIn("person_id"))
         .groupBy(col("dst").as("person_id"))
         .agg(sum(expr("pr_e9 div out_deg")).as("in_share"))
-      val inB = if (broadcastRanks) broadcast(inbound) else inbound
-      pr = verts.join(inB, Seq("person_id"), "left_outer")
+      pr = verts.join(bc(inbound), Seq("person_id"), "left_outer")
         .select(col("person_id"),
           (teleport +
             expr("(85 * coalesce(in_share, 0L)) div 100")).as("pr_e9"))
@@ -708,12 +673,10 @@ object GraphOps {
     * form's mass flooring.
     *
     * Same loop shape as [[pageRank]]: weights attach to the edge list
-    * once; with `broadcastRanks` a round's only exchange is the dst
-    * aggregation. The knob carries [[pageRank]]'s `Option` semantics
-    * (`None` = auto by vertex count).
+    * once; with broadcast rank frames (the [[pageRank]] rule) a round's
+    * only exchange is the dst aggregation.
     */
   def pageRankWeighted(edges: DataFrame, iters: Int, checkpointEvery: Int = 4,
-      broadcastRanks: Option[Boolean] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val pairs = edges.select(col("src"), col("dst"),
@@ -723,23 +686,21 @@ object GraphOps {
       e.select(col("src").as("person_id"))
         .union(e.select(col("dst").as("person_id")))
         .distinct(), checkpointDir)
-    val bcast = resolveBroadcast(broadcastRanks, verts)
+    val bc = Checkpoints.broadcastRule(verts)
     val tw = e.groupBy(col("src")).agg(sum(col("w_e2")).as("tot_w"))
       .select(col("src").as("dsrc"), col("tot_w"))
-    val twB = if (bcast) broadcast(tw) else tw
     val ed = Checkpoints.cut(
-      e.join(twB, col("src") === col("dsrc"))
+      e.join(bc(tw), col("src") === col("dsrc"))
         .filter(col("tot_w") > 0)
         .select(col("src").as("esrc"), col("dst"),
           expr("(w_e2 * 1000) div tot_w").as("wn")), checkpointDir)
     var pr = verts.select(col("person_id"), lit(1000000000L).as("pr_e9"))
     for (it <- 1 to iters) {
-      val prIn = if (bcast) broadcast(pr) else pr
+      val prIn = bc(pr)
       val inbound = ed.join(prIn, col("esrc") === prIn("person_id"))
         .groupBy(col("dst").as("person_id"))
         .agg(sum(expr("(pr_e9 * wn) div 1000")).as("in_share"))
-      val inB = if (bcast) broadcast(inbound) else inbound
-      pr = verts.join(inB, Seq("person_id"), "left_outer")
+      pr = verts.join(bc(inbound), Seq("person_id"), "left_outer")
         .select(col("person_id"),
           (lit(150000000L) +
             expr("(85 * coalesce(in_share, 0L)) div 100")).as("pr_e9"))
@@ -776,7 +737,6 @@ object GraphOps {
     * removes O(1) vertices.
     */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int,
-      broadcastFrames: Option[Boolean] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1 && (rounds >= 1 || rounds == -1),
       s"k must be >= 1 and rounds >= 1 (or -1 = fixpoint), got k=$k rounds=$rounds")
@@ -788,12 +748,10 @@ object GraphOps {
         .filter(col("a") =!= col("b"))
         .distinct(), checkpointDir)
     // the per-round `keep` filter is vertex-sized; its two semi joins
-    // against the edge list are the round's whole plan — resolve the
-    // broadcast-vs-shuffle call once against the counted vertex set
-    // (the [[pageRank]] auto switch; peeling only shrinks the graph)
-    val bcast = resolveBroadcast(broadcastFrames,
-      e.select(col("a").as("v")).union(e.select(col("b").as("v"))).distinct())
-    def h(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+    // against the edge list are the round's whole plan. It takes the
+    // [[Checkpoints.broadcastRule]] off the first edge cut: the vertex
+    // set is no larger than the edge list, and peeling only shrinks it
+    val bc = Checkpoints.broadcastRule(e)
     var prevEdges: Option[Long] = None
     var changed = true
     var round = 0
@@ -804,30 +762,14 @@ object GraphOps {
         .filter(col("deg") >= k)
         .select(col("v"))
       val peeled = e
-        .join(h(keep.select(col("v").as("a"))), Seq("a"), "left_semi")
-        .join(h(keep.select(col("v").as("b"))), Seq("b"), "left_semi")
+        .join(bc(keep.select(col("v").as("a"))), Seq("a"), "left_semi")
+        .join(bc(keep.select(col("v").as("b"))), Seq("b"), "left_semi")
+      e = Checkpoints.cut(peeled, checkpointDir)
       if (fixpoint) {
-        // edge count rides the (eager) cut job — no separate count pass
-        val obs = new org.apache.spark.sql.Observation(s"kcore_round_$round")
-        e = Checkpoints.cut(
-          peeled.observe(obs, count(lit(1)).as("n_edges")), checkpointDir)
-        val nEdges = Option(obs.get("n_edges"))
-          .collect { case l: java.lang.Long => l.longValue() }
-        changed = (nEdges, prevEdges) match {
-          case (Some(cur), Some(prev)) => cur < prev
-          case (Some(cur), None)       => cur > 0 // first peel: empty ⇒ done
-          case (None, _) =>
-            // a missing metric means the observation never fired (the
-            // cut job was elided or failed oddly) — stopping here could
-            // return a NON-fixpoint result, so say so instead of
-            // silently passing it off as converged
-            log.warn(s"kCorePeel fixpoint: convergence metric absent at " +
-              s"round $round; stopping — result may not be a fixpoint")
-            false
-        }
-        prevEdges = nEdges
-      } else {
-        e = Checkpoints.cut(peeled, checkpointDir)
+        // the edge count is the cut's measured row count — no count pass
+        val nEdges = Checkpoints.rows(e)
+        changed = prevEdges.fold(nEdges > 0)(nEdges < _) // first peel: empty ⇒ done
+        prevEdges = Some(nEdges)
       }
       round += 1
     }
@@ -871,7 +813,7 @@ object GraphOps {
     * shape), a map-side-combined (a, b) support aggregate, and a
     * semi-join filter; ids only, no payload. Each round's shrinking
     * edge list is checkpoint-cut, and the edge-count convergence
-    * metric rides the cut job's `observe` (no extra count pass —
+    * metric is the cut's measured row count (no extra count pass —
     * the [[kCorePeel]] device).
     */
   def kTruss(pairs: DataFrame, k: Int, maxRounds: Int = 20,
@@ -901,20 +843,10 @@ object GraphOps {
       val kept = e.join(
         supp.filter(col("supp") >= k - 2).select(col("a"), col("b")),
         Seq("a", "b"), "left_semi")
-      val obs = new org.apache.spark.sql.Observation(s"ktruss_round_$round")
-      e = Checkpoints.cut(
-        kept.observe(obs, count(lit(1)).as("n_edges")), checkpointDir)
-      val nEdges = Option(obs.get("n_edges"))
-        .collect { case l: java.lang.Long => l.longValue() }
-      changed = (nEdges, prevEdges) match {
-        case (Some(cur), Some(prev)) => cur < prev
-        case (Some(cur), None)       => cur > 0
-        case (None, _) =>
-          log.warn(s"kTruss: convergence metric absent at round $round; " +
-            "stopping - result may not be a fixpoint")
-          false
-      }
-      prevEdges = nEdges
+      e = Checkpoints.cut(kept, checkpointDir)
+      val nEdges = Checkpoints.rows(e)
+      changed = prevEdges.fold(nEdges > 0)(nEdges < _)
+      prevEdges = Some(nEdges)
       round += 1
     }
     if (changed && round >= maxRounds)
@@ -938,9 +870,9 @@ object GraphOps {
     * per-vertex window shuffle.
     *
     * Scale shape: per round ONE edge-sized join (labels attach to the
-    * symmetric edge list on the 1-column neighbor key; vertex-sized
-    * label table broadcasts under `broadcastLabels`, the
-    * [[pageRank]] switch) and two map-side-combining aggregates on
+    * symmetric edge list on the 1-column neighbor key; the
+    * vertex-sized label table takes [[Checkpoints.broadcastRule]] off
+    * the cut edge list) and two map-side-combining aggregates on
     * (vertex, label) / vertex keys. Label payload is one id-sized
     * value — no text, no neighbor lists. Rounds are a fixed small
     * constant (LPA quality saturates in ~5), each cut via
@@ -950,7 +882,6 @@ object GraphOps {
     */
   def labelPropagation(pairs: DataFrame, rounds: Int,
       aCol: String = "person_a", bCol: String = "person_b",
-      broadcastLabels: Option[Boolean] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val sym = Checkpoints.cut(
@@ -960,15 +891,11 @@ object GraphOps {
         .distinct(),
       checkpointDir)
     val verts = sym.select(col("v")).distinct()
-    // checkpointed frames carry no size stats, so Catalyst cannot make
-    // the per-round broadcast-vs-shuffle call itself — resolve it once
-    // against the counted vertex set (the [[pageRank]] auto switch)
-    val bcastLab = resolveBroadcast(broadcastLabels, verts)
+    val bc = Checkpoints.broadcastRule(sym)
     var lab = verts.select(col("v"), col("v").as("label"))
     for (r <- 1 to rounds) {
-      val labSide = lab.select(col("v").as("u"), col("label"))
       val counts = sym
-        .join(if (bcastLab) broadcast(labSide) else labSide, Seq("u"))
+        .join(bc(lab.select(col("v").as("u"), col("label"))), Seq("u"))
         .groupBy(col("v"), col("label")).agg(count(lit(1)).as("c"))
       lab = counts
         .groupBy(col("v"))
@@ -1032,8 +959,8 @@ object GraphOps {
     * product against the scaled bound before opting in.
     *
     * Scale shape: per move round ONE edge-sized join attaches neighbor
-    * labels (vertex-sized label table broadcasts under
-    * `broadcastLabels`, the [[pageRank]] switch), then map-side-
+    * labels (the vertex-sized label table takes
+    * [[Checkpoints.broadcastRule]] off the cut edge list), then map-side-
     * combining aggregates on (vertex, community) / community keys; the
     * 1-row total-weight frame rides a broadcast cross join (the
     * [[modularity]] device). Candidate rows are bounded by the edge
@@ -1047,11 +974,10 @@ object GraphOps {
     */
   def louvain(pairs: DataFrame, moveRounds: Int = 2, levels: Int = 2,
       aCol: String = "person_a", bCol: String = "person_b",
-      broadcastLabels: Option[Boolean] = None,
       checkpointDir: Option[String] = None,
       resolutionE3: Long = 1000L): DataFrame =
     communityLevels(pairs, moveRounds, levels, aCol, bCol,
-      broadcastLabels, checkpointDir, refine = (_, _, lab) => lab,
+      checkpointDir, refine = (_, _, lab) => lab,
       resolutionE3 = resolutionE3)
 
   /** Shared level driver of [[louvain]] and [[leiden]]: canonical
@@ -1061,9 +987,9 @@ object GraphOps {
     * partition, labels composed through the hierarchy.
     */
   private def communityLevels(pairs: DataFrame, moveRounds: Int, levels: Int,
-      aCol: String, bCol: String, broadcastLabels: Option[Boolean],
+      aCol: String, bCol: String,
       checkpointDir: Option[String],
-      refine: (DataFrame, Boolean, DataFrame) => DataFrame,
+      refine: (DataFrame, DataFrame => DataFrame, DataFrame) => DataFrame,
       resolutionE3: Long = 1000L): DataFrame = {
     require(resolutionE3 >= 1, s"resolutionE3 must be >= 1, got $resolutionE3")
     require(moveRounds >= 1, s"moveRounds must be >= 1, got $moveRounds")
@@ -1076,32 +1002,28 @@ object GraphOps {
         .distinct()
         .withColumn("w", lit(1L)),
       checkpointDir)
-    // checkpointed frames carry no size stats — resolve the per-round
-    // broadcast-vs-shuffle call once against the counted level-1
-    // vertex set (the [[pageRank]] auto switch); contraction only
-    // shrinks the graph, so the answer holds for every later level
-    val bcastLab = resolveBroadcast(broadcastLabels,
-      edges.select(col("a").as("v"))
-        .union(edges.select(col("b").as("v"))).distinct())
-    def h(df: DataFrame): DataFrame = if (bcastLab) broadcast(df) else df
+    // the per-round label frames are vertex-sized and derived by joins:
+    // they take [[Checkpoints.broadcastRule]] off the level-1 edge cut;
+    // contraction only shrinks the graph, so it holds for every level
+    val bc = Checkpoints.broadcastRule(edges)
     var mapping: DataFrame = null
     for (level <- 1 to levels) {
-      val lab = refine(edges, bcastLab,
-        louvainMoves(edges, moveRounds, bcastLab, checkpointDir,
+      val lab = refine(edges, bc,
+        louvainMoves(edges, moveRounds, bc, checkpointDir,
           resolutionE3))
       mapping =
         if (level == 1)
           lab.select(col("v").as("person_id"), col("label").as("community"))
         else
           mapping.join(
-            h(lab.select(col("v").as("community"), col("label").as("next_c"))),
+            bc(lab.select(col("v").as("community"), col("label").as("next_c"))),
             Seq("community"))
             .select(col("person_id"), col("next_c").as("community"))
       if (level < levels) {
         edges = Checkpoints.cut(
           edges
-            .join(h(lab.select(col("v").as("a"), col("label").as("la"))), Seq("a"))
-            .join(h(lab.select(col("v").as("b"), col("label").as("lb"))), Seq("b"))
+            .join(bc(lab.select(col("v").as("a"), col("label").as("la"))), Seq("a"))
+            .join(bc(lab.select(col("v").as("b"), col("label").as("lb"))), Seq("b"))
             .select(
               least(col("la"), col("lb")).as("a"),
               greatest(col("la"), col("lb")).as("b"), col("w"))
@@ -1162,11 +1084,10 @@ object GraphOps {
     */
   def leiden(pairs: DataFrame, moveRounds: Int = 2, levels: Int = 2,
       aCol: String = "person_a", bCol: String = "person_b",
-      broadcastLabels: Option[Boolean] = None,
       checkpointDir: Option[String] = None,
       resolutionE3: Long = 1000L): DataFrame =
     communityLevels(pairs, moveRounds, levels, aCol, bCol,
-      broadcastLabels, checkpointDir,
+      checkpointDir,
       refine = (e, bc, lab) => refineConnected(e, lab, bc, checkpointDir),
       resolutionE3 = resolutionE3)
 
@@ -1179,11 +1100,10 @@ object GraphOps {
     * not port to string vertex ids).
     */
   private def refineConnected(edges: DataFrame, lab: DataFrame,
-      broadcastLabels: Boolean, checkpointDir: Option[String],
+      bc: DataFrame => DataFrame, checkpointDir: Option[String],
       maxRounds: Int = 20): DataFrame = {
-    def h(df: DataFrame): DataFrame = if (broadcastLabels) broadcast(df) else df
-    val la = h(lab.select(col("v").as("a"), col("label").as("la")))
-    val lb = h(lab.select(col("v").as("b"), col("label").as("lb")))
+    val la = bc(lab.select(col("v").as("a"), col("label").as("la")))
+    val lb = bc(lab.select(col("v").as("b"), col("label").as("lb")))
     val intra = edges.filter(col("a") =!= col("b"))
       .join(la, Seq("a")).join(lb, Seq("b"))
       .filter(col("la") === col("lb"))
@@ -1198,15 +1118,14 @@ object GraphOps {
     var changed = true
     var round = 0
     while (changed && round < maxRounds) {
-      val lside = if (broadcastLabels) broadcast(labels) else labels
+      val lside = bc(labels)
       val stepped = sym
         .join(lside, sym("v") === lside("cv"))
         .select(col("u").as("cv"), col("clab"))
         .unionByName(labels)
         .groupBy(col("cv"))
         .agg(min(col("clab")).as("clab"))
-      val lmap0 = stepped.select(col("cv").as("ld"), col("clab").as("ll"))
-      val lmap = if (broadcastLabels) broadcast(lmap0) else lmap0
+      val lmap = bc(stepped.select(col("cv").as("ld"), col("clab").as("ll")))
       val obs = new org.apache.spark.sql.Observation(s"refine_round_$round")
       val jumped = Checkpoints.cut(
         stepped
@@ -1255,7 +1174,7 @@ object GraphOps {
     * `(v, label)` for every endpoint.
     */
   private def louvainMoves(edges: DataFrame, rounds: Int,
-      broadcastLabels: Boolean, checkpointDir: Option[String],
+      bc: DataFrame => DataFrame, checkpointDir: Option[String],
       resolutionE3: Long = 1000L): DataFrame = {
     val nonSelf = edges.filter(col("a") =!= col("b"))
     val sym = nonSelf.select(col("a").as("v"), col("b").as("u"), col("w"))
@@ -1277,28 +1196,27 @@ object GraphOps {
     val totRow = deg.agg(coalesce(sum(col("deg")), lit(0L)).as("tot_w"))
     // hints attach at each JOIN usage (a hinted frame flowing into a
     // union draws HintErrorLogger noise and binds nothing)
-    def h(df: DataFrame): DataFrame = if (broadcastLabels) broadcast(df) else df
     var lab = verts.select(col("v"), col("v").as("label"))
     for (r <- 1 to rounds) {
       val kvc = sym
-        .join(h(lab.select(col("v").as("u"), col("label").as("c"))), Seq("u"))
+        .join(bc(lab.select(col("v").as("u"), col("label").as("c"))), Seq("u"))
         .groupBy(col("v"), col("c")).agg(sum(col("w")).as("kvc"))
       // staying is always a candidate, even with zero edges into the
       // own community (isolated vertices keep their label)
       val cands = kvc
         .unionByName(lab.select(col("v"), col("label").as("c"), lit(0L).as("kvc")))
         .groupBy(col("v"), col("c")).agg(sum(col("kvc")).as("kvc"))
-      val sized = lab.join(h(deg), Seq("v"))
+      val sized = lab.join(bc(deg), Seq("v"))
         .groupBy(col("label"))
         .agg(sum(col("deg")).as("tot"), count(lit(1)).as("csize"))
       val totC = sized.select(col("label").as("c"), col("tot"), col("csize"))
       val ownC = sized.select(col("label").as("own_c"),
         col("csize").as("own_size"))
       lab = cands
-        .join(h(lab.select(col("v"), col("label").as("own_c"))), Seq("v"))
-        .join(h(deg), Seq("v"))
-        .join(h(totC), Seq("c"))
-        .join(h(ownC), Seq("own_c"))
+        .join(bc(lab.select(col("v"), col("label").as("own_c"))), Seq("v"))
+        .join(bc(deg), Seq("v"))
+        .join(bc(totC), Seq("c"))
+        .join(bc(ownC), Seq("own_c"))
         // minimum-label swap guard: singleton -> larger-label singleton
         // moves are forbidden (dropped pre-argmax; stay is never a
         // cross-community move, so every vertex keeps >= 1 candidate)
@@ -1587,13 +1505,13 @@ object GraphOps {
     *     guaranteed; rounds track the DEPTH of the condensation DAG,
     *     not vertex count.
     *
-    * Convergence of both inner loops rides an `observe`d metric on the
-    * round's checkpoint-cut job (color: label hash sum; backward: mark
-    * count — monotone, so equality is a fixpoint), the
-    * [[refineConnected]] device — no extra count pass. All three loop
-    * bounds warn loudly on non-convergence (kTruss precedent): an
-    * unconverged stop can emit labels that are NOT SCCs, so it must
-    * never be silent.
+    * Convergence of both inner loops rides the round's checkpoint-cut
+    * job — no extra count pass: color compares an `observe`d label
+    * hash sum (the [[refineConnected]] device), backward compares the
+    * mark cut's measured row count (monotone, so equality is a
+    * fixpoint). All three loop bounds warn loudly on non-convergence
+    * (kTruss precedent): an unconverged stop can emit labels that are
+    * NOT SCCs, so it must never be silent.
     *
     * Scale shape: state is two id-sized vertex frames (colors, marks)
     * and the surviving edge list; per step one edge-sized join + one
@@ -1608,24 +1526,36 @@ object GraphOps {
     */
   def sccLabels(edges: DataFrame, maxRounds: Int = 30, maxSteps: Int = 40,
       srcCol: String = "src", dstCol: String = "dst",
-      broadcastFrames: Option[Boolean] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     require(maxSteps >= 1, s"maxSteps must be >= 1, got $maxSteps")
-    val spark = edges.sparkSession
-    var e = Checkpoints.cut(
+    // every cut this call makes is held until it is spent: a finished
+    // round releases all but the live edge list and label frame (its
+    // color, mark and eSame cuts and the superseded e/done), so the
+    // loop's executor storage stays one round deep
+    val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    def cut(df: DataFrame): DataFrame = {
+      val c = Checkpoints.cut(df, checkpointDir)
+      held += c
+      c
+    }
+    def releaseAllBut(live: DataFrame*): Unit = {
+      val (keep, spent) = held.partition(c => live.exists(_ eq c))
+      Checkpoints.release(spent)
+      held.clear()
+      held ++= keep
+    }
+    var e = cut(
       edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
         .filter(col("s") =!= col("d"))
-        .distinct(), checkpointDir)
+        .distinct())
     // per-step color/mark frames are vertex-sized; the loop joins them
     // against the edge list dozens of times (maxRounds × maxSteps), so
-    // the broadcast-vs-shuffle call is THE per-step plan decision.
-    // Checkpointed frames carry no size stats — resolve once against
-    // the counted vertex set (the [[pageRank]] auto switch); peeling
-    // only shrinks the graph, so the answer holds for every round
-    val bcast = resolveBroadcast(broadcastFrames,
-      e.select(col("s").as("v")).union(e.select(col("d").as("v"))).distinct())
-    def h(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+    // the broadcast-vs-shuffle call is THE per-step plan decision. It
+    // is [[Checkpoints.broadcastRule]] off the first edge cut: the
+    // vertex set is no larger than the edge list, and peeling only
+    // shrinks the graph, so the answer holds for every round
+    val bc = Checkpoints.broadcastRule(e)
     // self-loop-ONLY vertices are their own SCCs and never enter `e`;
     // a vertex with a self-loop AND other edges is labeled by the main
     // loop (the self-loop does not change mutual reachability), so it
@@ -1645,14 +1575,12 @@ object GraphOps {
         .join(e.select(col("d").as("v")), Seq("v"), "left_semi")
         .join(e.select(col("s").as("v")), Seq("v"), "left_semi")
       done = done.unionAll(
-        verts.join(h(core), Seq("v"), "left_anti")
+        verts.join(bc(core), Seq("v"), "left_anti")
           .select(col("v"), col("v").as("scc_label")))
-      val trimObs = new org.apache.spark.sql.Observation(s"scc_trim_$round")
-      e = Checkpoints.cut(
-        e.join(h(core.select(col("v").as("s"))), Seq("s"), "left_semi")
-          .join(h(core.select(col("v").as("d"))), Seq("d"), "left_semi")
-          .select(col("s"), col("d"))
-          .observe(trimObs, count(lit(1)).as("n_edges")), checkpointDir)
+      e = cut(
+        e.join(bc(core.select(col("v").as("s"))), Seq("s"), "left_semi")
+          .join(bc(core.select(col("v").as("d"))), Seq("d"), "left_semi")
+          .select(col("s"), col("d")))
       // ORPHANS: a core vertex can lose EVERY edge to the trim filter
       // (all its in-neighbors and all its out-neighbors were trimmed).
       // Same-SCC vertices always leave together (a cycle's members all
@@ -1666,39 +1594,32 @@ object GraphOps {
           .select(col("v"), col("v").as("scc_label")))
       // `done` grows union branches per round; cut it so the lineage
       // (and the final plan) stays round-independent
-      done = Checkpoints.cut(done, checkpointDir)
-      // edge counts ride the cut job's observe — no extra count pass;
-      // an absent metric conservatively KEEPS looping (the loop bound
-      // + final warning catch a stuck state, and stopping early here
-      // would silently emit partial labels)
-      val nTrimmed = Option(trimObs.get("n_edges"))
-        .collect { case l: java.lang.Long => l.longValue() }
-      log.info(s"sccLabels: round $round post-trim edges=" +
-        s"${nTrimmed.getOrElse(-1L)}")
-      if (nTrimmed.contains(0L)) { remaining = false }
+      done = cut(done)
+      // edge counts are the cuts' measured row counts — no count pass
+      val nTrimmed = Checkpoints.rows(e)
+      log.info(s"sccLabels: round $round post-trim edges=$nTrimmed")
+      if (nTrimmed == 0L) { remaining = false }
       else {
         // 2) COLOR — min reaching id, forward fixpoint
-        var color = Checkpoints.cut(
+        var color = cut(
           e.select(col("s").as("v")).unionAll(e.select(col("d").as("v")))
-            .distinct().select(col("v"), col("v").as("color")),
-          checkpointDir)
+            .distinct().select(col("v"), col("v").as("color")))
         var prevSum: Option[BigDecimal] = None
         var coloring = true
         var step = 0
         while (coloring && step < maxSteps) {
-          val msgs = e.join(h(color.select(col("v").as("s"), col("color"))), Seq("s"))
+          val msgs = e.join(bc(color.select(col("v").as("s"), col("color"))), Seq("s"))
             .groupBy(col("d").as("v")).agg(min(col("color")).as("mc"))
           val obs = new org.apache.spark.sql.Observation(
             s"scc_color_${round}_$step")
-          color = Checkpoints.cut(
-            color.join(h(msgs), Seq("v"), "left_outer")
+          color = cut(
+            color.join(bc(msgs), Seq("v"), "left_outer")
               .select(col("v"),
                 least(col("color"), coalesce(col("mc"), col("color")))
                   .as("color"))
               .observe(obs,
                 sum(xxhash64(col("v"), col("color")).cast("decimal(38,0)"))
-                  .as("color_hash_sum")),
-            checkpointDir)
+                  .as("color_hash_sum")))
           val hashSum = Option(obs.get("color_hash_sum"))
             .collect { case x: java.math.BigDecimal => BigDecimal(x) }
           coloring = (hashSum, prevSum) match {
@@ -1723,37 +1644,24 @@ object GraphOps {
         // color class, so each BFS step needs one semi-join against
         // the marked set — the previous shape re-joined the full edge
         // list against BOTH the mark and color frames every step.
-        val eSame = Checkpoints.cut(
-          e.join(h(color.select(col("v").as("s"), col("color"))), Seq("s"))
-            .join(h(color.select(col("v").as("d"), col("color").as("dc"))),
+        val eSame = cut(
+          e.join(bc(color.select(col("v").as("s"), col("color"))), Seq("s"))
+            .join(bc(color.select(col("v").as("d"), col("color").as("dc"))),
               Seq("d"))
             .filter(col("color") === col("dc"))
-            .select(col("s"), col("d"), col("color")), checkpointDir)
-        var mark = Checkpoints.cut(
-          color.filter(col("v") === col("color")), checkpointDir)
-        var prevN: Option[Long] = None
+            .select(col("s"), col("d"), col("color")))
+        var mark = cut(color.filter(col("v") === col("color")))
+        // the marked set only grows, so an unchanged count is a fixpoint
+        var prevN = -1L
         var marking = true
         step = 0
         while (marking && step < maxSteps) {
           val next = eSame
-            .join(h(mark.select(col("v").as("d"))), Seq("d"), "left_semi")
+            .join(bc(mark.select(col("v").as("d"))), Seq("d"), "left_semi")
             .select(col("s").as("v"), col("color"))
-          val obs = new org.apache.spark.sql.Observation(
-            s"scc_mark_${round}_$step")
-          mark = Checkpoints.cut(
-            mark.unionAll(next).distinct()
-              .observe(obs, count(lit(1)).as("n_marked")),
-            checkpointDir)
-          val n = Option(obs.get("n_marked"))
-            .collect { case l: java.lang.Long => l.longValue() }
-          marking = (n, prevN) match {
-            case (Some(cur), Some(prev)) => cur > prev
-            case (Some(_), None)         => true
-            case (None, _) =>
-              log.warn(s"sccLabels: mark convergence metric absent at " +
-                s"round $round step $step; stopping - labels may not be SCCs")
-              false
-          }
+          mark = cut(mark.unionAll(next).distinct())
+          val n = Checkpoints.rows(mark)
+          marking = n > prevN
           prevN = n
           step += 1
         }
@@ -1761,33 +1669,28 @@ object GraphOps {
           log.warn(s"sccLabels: backward marking hit the $maxSteps-step " +
             s"bound unconverged at round $round - labels may not be SCCs; " +
             "raise maxSteps")
-        log.info(s"sccLabels: round $round markSteps=$step " +
-          s"marked=${prevN.getOrElse(-1L)}")
+        log.info(s"sccLabels: round $round markSteps=$step marked=$prevN")
         // 4) PEEL the identified SCCs
         val markV = mark.select(col("v"))
-        val peelObs = new org.apache.spark.sql.Observation(s"scc_peel_$round")
-        e = Checkpoints.cut(
-          e.join(h(markV.select(col("v").as("s"))), Seq("s"), "left_anti")
-            .join(h(markV.select(col("v").as("d"))), Seq("d"), "left_anti")
-            .select(col("s"), col("d"))
-            .observe(peelObs, count(lit(1)).as("n_edges")), checkpointDir)
+        e = cut(
+          e.join(bc(markV.select(col("v").as("s"))), Seq("s"), "left_anti")
+            .join(bc(markV.select(col("v").as("d"))), Seq("d"), "left_anti")
+            .select(col("s"), col("d")))
         // peel orphans (trim-orphan rationale): unmarked vertices whose
         // every edge had a marked endpoint are singleton SCCs
         val postPeelVerts = e.select(col("s").as("v"))
           .unionAll(e.select(col("d").as("v")))
         val orphans = color.select(col("v"))
-          .join(h(markV), Seq("v"), "left_anti")
+          .join(bc(markV), Seq("v"), "left_anti")
           .join(postPeelVerts, Seq("v"), "left_anti")
           .select(col("v"), col("v").as("scc_label"))
-        done = Checkpoints.cut(
+        done = cut(
           done
             .unionAll(mark.select(col("v"), col("color").as("scc_label")))
-            .unionAll(orphans),
-          checkpointDir)
-        remaining = !Option(peelObs.get("n_edges"))
-          .collect { case l: java.lang.Long => l.longValue() }
-          .contains(0L)
+            .unionAll(orphans))
+        remaining = Checkpoints.rows(e) != 0L
       }
+      releaseAllBut(e, done)
       round += 1
     }
     if (remaining) {
@@ -1800,7 +1703,7 @@ object GraphOps {
       val leftover = e.select(col("s").as("v"))
         .unionAll(e.select(col("d").as("v"))).distinct()
       done = done.unionAll(leftover.select(col("v"), col("v").as("scc_label")))
-    }
+    } else releaseAllBut(done)
     done.select(col("v").as("person_id"), col("scc_label"))
   }
 
@@ -1815,8 +1718,10 @@ object GraphOps {
     * one level, label-keyed.
     *
     * Scale shape: two label-attach joins on the vertex key (the label
-    * frame is vertex-sized and id-only) + one distinct on the
-    * contracted pair — no new exchange class beyond the edge list's.
+    * frame is vertex-sized and id-only; [[sccLabels]] output is a
+    * measured cut, so Spark's own threshold broadcasts it when it
+    * fits) + one distinct on the contracted pair — no new exchange
+    * class beyond the edge list's.
     *
     * Output: `(src_scc, dst_scc)`, distinct, self-pairs dropped.
     */
@@ -1824,19 +1729,13 @@ object GraphOps {
       edges: DataFrame,
       labels: DataFrame,
       srcCol: String = "src",
-      dstCol: String = "dst",
-      broadcastLabels: Option[Boolean] = None): DataFrame = {
+      dstCol: String = "dst"): DataFrame = {
     val lab = labels.select(
       col("person_id").as("v"), col("scc_label"))
-    // the label frame is vertex-sized and id-only; broadcast both
-    // attach joins when it fits the budget (the [[pageRank]] auto
-    // switch — [[sccLabels]] output is checkpoint-cut and stat-less)
-    val bcast = resolveBroadcast(broadcastLabels, lab)
-    def h(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
     edges.select(col(srcCol).as("sv"), col(dstCol).as("dv"))
-      .join(h(lab.select(col("v").as("sv"), col("scc_label").as("src_scc"))),
+      .join(lab.select(col("v").as("sv"), col("scc_label").as("src_scc")),
         Seq("sv"))
-      .join(h(lab.select(col("v").as("dv"), col("scc_label").as("dst_scc"))),
+      .join(lab.select(col("v").as("dv"), col("scc_label").as("dst_scc")),
         Seq("dv"))
       .filter(col("src_scc") =!= col("dst_scc"))
       .select(col("src_scc"), col("dst_scc"))
@@ -1873,13 +1772,12 @@ object GraphOps {
     * once, per-round frames are cut every round ([[Checkpoints]] —
     * `checkpointDir` selects the executor-loss-durable mode). `iters`
     * is small and fixed (power iteration converges geometrically).
-    * `broadcastScores` is the [[pageRank]] rank-loop switch (explicit,
-    * or auto by the counted [[BroadcastRanksMaxVertices]] ceiling);
-    * each half-round's summed frame is CUT before its 1-row max reads
-    * it — the max rides a broadcast subquery that would otherwise
-    * re-execute the edge join a second time (this fix + the broadcast
-    * switch measured 7.2× → 3.9× per-decade smoke ratio, sf1 wall
-    * 30.9 → 12.1 s).
+    * The per-round score frames take [[Checkpoints.broadcastRule]] off
+    * the cut vertex frame (the [[pageRank]] rule); each half-round's
+    * summed frame is CUT before its 1-row max reads it — the max rides
+    * a broadcast subquery that would otherwise re-execute the edge
+    * join a second time (this fix + broadcast score frames measured
+    * 7.2× → 3.9× per-decade smoke ratio, sf1 wall 30.9 → 12.1 s).
     *
     * Callers should pass a distinct edge list — duplicate (src,dst)
     * rows double-count endorsements.
@@ -1887,7 +1785,6 @@ object GraphOps {
     * Output: `(person_id, hub_e6, auth_e6)` for every vertex.
     */
   def hits(edges: DataFrame, iters: Int,
-      broadcastScores: Option[Boolean] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val e = Checkpoints.cut(edges.select(col("src"), col("dst")), checkpointDir)
@@ -1895,11 +1792,7 @@ object GraphOps {
       e.select(col("src").as("person_id"))
         .union(e.select(col("dst").as("person_id")))
         .distinct(), checkpointDir)
-    // the pageRank rank-loop switch: checkpointed frames lose size
-    // stats, so the vertex-sized score frames broadcast under the
-    // same counted ceiling
-    val bcast = resolveBroadcast(broadcastScores, verts)
-    def hint(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+    val bc = Checkpoints.broadcastRule(verts)
     // sum frame -> max-rescaled e6 scores over ALL vertices (missing
     // aggregate rows are zero-score vertices). The completed frame is
     // CUT before the 1-row max reads it: the max rides a broadcast
@@ -1908,7 +1801,7 @@ object GraphOps {
     // pplBuckets double-execution class, caught by the smoke ratio)
     def rescaled(sums: DataFrame, out: String): DataFrame = {
       val full = Checkpoints.cut(
-        verts.join(hint(sums), Seq("person_id"), "left_outer")
+        verts.join(bc(sums), Seq("person_id"), "left_outer")
           .select(col("person_id"), coalesce(col("s"), lit(0L)).as("s")),
         checkpointDir)
       val mx = full.agg(max(col("s")).as("mx"))
@@ -1921,11 +1814,11 @@ object GraphOps {
     var auth: DataFrame = verts.select(col("person_id"), lit(0L).as("auth_e6"))
     for (t <- 1 to iters) {
       auth = Checkpoints.cut(rescaled(
-        e.join(hint(hub.withColumnRenamed("person_id", "src")), Seq("src"))
+        e.join(bc(hub.withColumnRenamed("person_id", "src")), Seq("src"))
           .groupBy(col("dst").as("person_id"))
           .agg(sum(col("hub_e6")).as("s")), "auth_e6"), checkpointDir)
       hub = Checkpoints.cut(rescaled(
-        e.join(hint(auth.withColumnRenamed("person_id", "dst")), Seq("dst"))
+        e.join(bc(auth.withColumnRenamed("person_id", "dst")), Seq("dst"))
           .groupBy(col("src").as("person_id"))
           .agg(sum(col("auth_e6")).as("s")), "hub_e6"), checkpointDir)
     }
@@ -1959,17 +1852,16 @@ object GraphOps {
     * walk state is two strings, never neighbor lists. Frontiers cut
     * per step ([[Checkpoints]]).
     *
-    * The step join BROADCASTS the frontier when it fits (the
-    * [[pageRank]] rank-loop discipline, same
-    * [[BroadcastRanksMaxVertices]] ceiling resolved once off the
-    * materialized start frame — walks never split, so the frontier
-    * only ever shrinks): the ranked adjacency then streams
-    * map-side through every step with NO per-step edge-sized
-    * shuffle — the cost that made the walk chain's wall-clock track
-    * shuffle-spill throughput instead of data size at the second
-    * decade (r18 smoke: 2.2–2.8× session swings on identical
-    * plans). Above the ceiling the join degrades to the shuffled
-    * form, never OOM.
+    * The step join BROADCASTS the frontier when it fits: the frontier
+    * is a measured cut every step, so Spark's own
+    * `spark.sql.autoBroadcastJoinThreshold` decides (walks never
+    * split, so the frontier only ever shrinks). The ranked adjacency
+    * then streams map-side through every step with NO per-step
+    * edge-sized shuffle — the cost that made the walk chain's
+    * wall-clock track shuffle-spill throughput instead of data size
+    * at the second decade (r18 smoke: 2.2–2.8× session swings on
+    * identical plans). Above the threshold the join degrades to the
+    * shuffled form, never OOM.
     *
     * Callers should pass a distinct edge list — duplicate (src,dst)
     * rows would shift every rank after them.
@@ -1979,7 +1871,6 @@ object GraphOps {
     */
   def randomWalks(edges: DataFrame, startPred: Column, walkLen: Int,
       walksPerVertex: Int = 1,
-      broadcastFrontier: Option[Boolean] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     require(walkLen >= 1, s"walkLen must be >= 1, got $walkLen")
     require(walksPerVertex >= 1,
@@ -2002,24 +1893,13 @@ object GraphOps {
         concat(col("person_id"), lit("#"), col("r").cast("string"))
           .as("walk_id"),
         col("person_id").as("cur")), checkpointDir)
-    // walks never split, so the frontier only shrinks from here: one
-    // count of the (cut) start frame decides broadcast-vs-shuffle for
-    // every step — the pageRank resolveBroadcast discipline
-    val bcastF = broadcastFrontier.getOrElse {
-      val n = frontier.count()
-      log.info(s"randomWalks auto-broadcast: $n walks -> " +
-        (if (n <= BroadcastRanksMaxVertices) "broadcast" else "shuffle") +
-        " frontier")
-      n <= BroadcastRanksMaxVertices
-    }
-    def fhint(df: DataFrame): DataFrame = if (bcastF) broadcast(df) else df
     var out = frontier.select(
       col("walk_id"), lit(0L).as("step"), col("cur").as("person_id"))
     for (t <- 1 to walkLen) {
       val pick = pmod(Hashing.portableHash(
         concat(col("walk_id"), lit(s":$t:"), col("cur"))), col("out_deg")) + 1L
       frontier = Checkpoints.cut(
-        fhint(frontier).join(adj, frontier("cur") === adj("src"))
+        frontier.join(adj, frontier("cur") === adj("src"))
           .filter(col("nbr_rank") === pick)
           .select(col("walk_id"), col("dst").as("cur")), checkpointDir)
       out = out.unionAll(frontier.select(
@@ -2046,11 +1926,12 @@ object GraphOps {
     * sink rule.
     *
     * Scale shape: [[randomWalks]]' per-step frontier⋈adjacency join
-    * (frontier auto-broadcast under the same ceiling — the adjacency
-    * streams map-side, no per-step edge shuffle) plus, per step, one
-    * marker LEFT join of the candidates against the distinct edge
-    * list on the (prev, next) pair (edge-sized, id-only — the
-    * distance-1 test; this one join still shuffles, candidates are
+    * (the frontier is a measured cut and broadcasts under Spark's
+    * threshold — the adjacency streams map-side, no per-step edge
+    * shuffle) plus, per step, one marker LEFT join of the candidates
+    * against the distinct edge list on the (prev, next) pair
+    * (edge-sized, id-only — the distance-1 test; it shuffles unless
+    * the cut edge list fits Spark's threshold, candidates are
     * frontier × deg rows) and one cumulative-sum window PARTITIONED
     * BY walk (walk-local, ≤ deg(cur) rows per partition — never a
     * global sort). Candidates are frontier × deg rows, the same
@@ -2066,7 +1947,6 @@ object GraphOps {
   def node2vecWalks(edges: DataFrame, startPred: Column, walkLen: Int,
       wBack: Long = 250L, wSide: Long = 1000L, wFwd: Long = 500L,
       walksPerVertex: Int = 1,
-      broadcastFrontier: Option[Boolean] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     require(walkLen >= 1, s"walkLen must be >= 1, got $walkLen")
     require(walksPerVertex >= 1,
@@ -2094,15 +1974,6 @@ object GraphOps {
         concat(col("person_id"), lit("#"), col("r").cast("string"))
           .as("walk_id"),
         col("person_id").as("cur")), checkpointDir)
-    // frontier-broadcast resolution — the [[randomWalks]] rule
-    val bcastF = broadcastFrontier.getOrElse {
-      val n = f0.count()
-      log.info(s"node2vecWalks auto-broadcast: $n walks -> " +
-        (if (n <= BroadcastRanksMaxVertices) "broadcast" else "shuffle") +
-        " frontier")
-      n <= BroadcastRanksMaxVertices
-    }
-    def fhint(df: DataFrame): DataFrame = if (bcastF) broadcast(df) else df
     var out = f0.select(
       col("walk_id"), lit(0L).as("step"), col("cur").as("person_id"))
     // step 1: uniform, the randomWalks coin (no prev exists yet)
@@ -2110,14 +1981,14 @@ object GraphOps {
       concat(col("walk_id"), lit(":1:"), col("cur"))), col("out_deg")) + 1L
     // frontier carries (walk_id, prev, cur) from here on
     var frontier = Checkpoints.cut(
-      fhint(f0).join(adj, f0("cur") === adj("src"))
+      f0.join(adj, f0("cur") === adj("src"))
         .filter(col("nbr_rank") === pick1)
         .select(col("walk_id"), f0("cur").as("prev"), col("dst").as("cur")),
       checkpointDir)
     out = out.unionAll(frontier.select(
       col("walk_id"), lit(1L).as("step"), col("cur").as("person_id")))
     for (t <- 2 to walkLen) {
-      val cand = fhint(frontier).join(adj, frontier("cur") === adj("src"))
+      val cand = frontier.join(adj, frontier("cur") === adj("src"))
         .join(sideMark,
           frontier("prev") === col("msrc") && adj("dst") === col("mdst"),
           "left_outer")
@@ -2296,7 +2167,6 @@ object GraphOps {
     */
   def sgnsTrain(contexts: DataFrame, dim: Int = 4, epochs: Int = 2,
       negatives: Int = 2, lrShift: Int = 2, negBuckets: Int = 16,
-      broadcastModel: Option[Boolean] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     require(dim >= 1 && epochs >= 1 && negatives >= 0,
       s"dim/epochs >= 1, negatives >= 0; got $dim/$epochs/$negatives")
@@ -2319,17 +2189,10 @@ object GraphOps {
     val bucketSizes = vocab.select(col("bucket"), col("bsize")).distinct()
     // the model frames (u, v, per-epoch deltas) are vocab-sized while
     // the example frame is corpus-sized — the parameter-server shape.
-    // Broadcast the model side of every epoch join when the counted
-    // vocab fits the [[BroadcastRanksMaxVertices]] budget (the
-    // [[pageRank]] auto switch; checkpointed frames carry no stats)
-    lazy val vocabCount = vocab.count()
-    val bcastModel = broadcastModel.getOrElse {
-      val b = vocabCount <= BroadcastRanksMaxVertices
-      log.info(s"sgnsTrain auto-broadcast: $vocabCount vocab ids -> " +
-        (if (b) "broadcast" else "shuffle") + " model frames")
-      b
-    }
-    def h(df: DataFrame): DataFrame = if (bcastModel) broadcast(df) else df
+    // The model side of every epoch join is a measured cut (vocab, uv)
+    // that Spark's own threshold broadcasts when it fits; only the
+    // aggregated delta frame is derived, and it takes
+    // [[Checkpoints.broadcastRule]] off the model cut it updates
     val pos = pairs.select(col("center"), col("context").as("ctx"),
       lit(1L).as("y"))
     val neg = if (negatives == 0) pos.limit(0) else {
@@ -2344,7 +2207,7 @@ object GraphOps {
         .join(broadcast(bucketSizes), Seq("bucket"))
         .select(col("center"), col("bucket"),
           pmod(coin("r"), col("bsize")).as("vrank"))
-        .join(h(vocab.select(col("bucket"), col("vrank"), col("id"))),
+        .join(vocab.select(col("bucket"), col("vrank"), col("id")),
           Seq("bucket", "vrank"))
         .select(col("center"), col("id").as("ctx"), lit(0L).as("y"))
     }
@@ -2384,20 +2247,16 @@ object GraphOps {
     // only partitions the key space.
     var uv = Checkpoints.cut(
       initModel("u", 0).unionByName(initModel("v", 1)), checkpointDir)
-    // the delta frame spans BOTH sides (2·|V| rows) — gate its
-    // broadcast on the doubled count, not the vocab count the
-    // side-filtered probe frames use (an explicit knob governs both)
-    val bcastUv = broadcastModel.getOrElse(
-      2L * vocabCount <= BroadcastRanksMaxVertices)
-    def h2(df: DataFrame): DataFrame = if (bcastUv) broadcast(df) else df
+    // the delta frame spans BOTH sides (2·|V| rows), as does uv
+    val bc = Checkpoints.broadcastRule(uv)
     val clampQ10 = 8L * 1024L
     for (_ <- 1 to epochs) {
       val scored = examples
-        .join(h(uv.filter(col("side") === 0)
-          .select(col("id").as("center"), col("emb").as("uarr"))),
+        .join(uv.filter(col("side") === 0)
+          .select(col("id").as("center"), col("emb").as("uarr")),
           Seq("center"))
-        .join(h(uv.filter(col("side") === 1)
-          .select(col("id").as("ctx"), col("emb").as("varr"))),
+        .join(uv.filter(col("side") === 1)
+          .select(col("id").as("ctx"), col("emb").as("varr")),
           Seq("ctx"))
         .select(col("center"), col("ctx"), col("w"),
           col("uarr"), col("varr"),
@@ -2430,7 +2289,7 @@ object GraphOps {
         .select(col("side"), col("id"),
           array((0 until dim).map(d => col(s"_d$d")): _*).as("darr"))
       uv = Checkpoints.cut(
-        uv.join(h2(dAll), Seq("side", "id"), "left_outer")
+        uv.join(bc(dAll), Seq("side", "id"), "left_outer")
           .select(col("side"), col("id"),
             zip_with(col("emb"),
               coalesce(col("darr"), transform(dims, _ => lit(0L))),
@@ -2442,7 +2301,7 @@ object GraphOps {
     val labels = vocab.select(col("id").as("person_id"))
       .select(Hashing.portableHash(col("person_id")).as("id"),
         col("person_id"))
-    uv.filter(col("side") === 0).join(h(labels), Seq("id"))
+    uv.filter(col("side") === 0).join(labels, Seq("id"))
       .select(col("person_id"), col("emb"))
   }
 }

@@ -2143,7 +2143,6 @@ object Similarity {
       .cache()
     val poolSlim = pool.select(col("query_id"), col("cand_id"), col("rel_e6"))
     // step 1: pure relevance argmax (no redundancy term yet)
-    val scaffolding = scala.collection.mutable.ArrayBuffer[DataFrame](pool, pairs)
     // per-step selected frames are lineage-CUT, not just cached: a
     // cached union chain keeps its whole logical history, and by the
     // terminal action the plan held ~2.4k scan nodes (r18 plan audit,
@@ -2152,26 +2151,16 @@ object Similarity {
     // one step (guide: materialise an intermediate to truncate very
     // wide plans); the frames are ≤ |Q|·selectK rows. Dataset.unpersist
     // does NOT release localCheckpoint blocks (they live outside the
-    // CacheManager), so each cut records the persistent-RDD ids it
-    // created (the warmSharedGraph diff device — same single-session
-    // caveat: a concurrent persist would be swept in) and the
-    // superseded steps' blocks are unpersisted explicitly on exit.
-    val sc = embeddings.sparkSession.sparkContext
-    val cutIds = scala.collection.mutable.ArrayBuffer[Set[Int]]()
-    def cutTracked(df: DataFrame): DataFrame = {
-      val pre = sc.getPersistentRDDs.keySet.toSet
-      val out = graft.operators.Checkpoints.cut(df, checkpointDir)
-      cutIds += (sc.getPersistentRDDs.keySet.toSet -- pre)
-      out
-    }
-    var selected = cutTracked(poolSlim
+    // CacheManager), so each step's cut is released through
+    // [[Checkpoints.release]] once the next step's cut holds its rows —
+    // that cut's own blocks, never another query's.
+    var selected = Checkpoints.cut(poolSlim
       .groupBy(col("query_id"))
       .agg(min(struct((-col("rel_e6")).as("ns"), col("cand_id").as("cand_id"),
         col("rel_e6").as("rel_e6"))).as("m"))
       .select(col("query_id"), col("m.cand_id").as("cand_id"),
-        col("m.rel_e6").as("rel_e6"), lit(1L).as("step")))
+        col("m.rel_e6").as("rel_e6"), lit(1L).as("step")), checkpointDir)
     for (step <- 2 to selectK) {
-      scaffolding += selected
       val maxSim = pairs
         .join(broadcast(selected.select(col("query_id"),
           col("cand_id").as("other_id"))), Seq("query_id", "other_id"))
@@ -2189,16 +2178,14 @@ object Similarity {
           col("rel_e6").as("rel_e6"))).as("m"))
         .select(col("query_id"), col("m.cand_id").as("cand_id"),
           col("m.rel_e6").as("rel_e6"), lit(step.toLong).as("step"))
-      selected = cutTracked(selected.union(pick))
+      val next = Checkpoints.cut(selected.union(pick), checkpointDir)
+      Checkpoints.release(Seq(selected))
+      selected = next
     }
-    // materialize the (≤ |Q|·selectK-row) result cache, then release
-    // the pool-sized scaffolding AND the superseded per-step cut
-    // blocks — loop state must not outlive the call at corpus scale
-    // (only the final selected frame's blocks stay)
-    selected.count()
-    scaffolding.foreach(_.unpersist(false))
-    cutIds.dropRight(1).flatten.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    // release the pool-sized caches — loop state must not outlive the
+    // call at corpus scale (only the final selected cut's blocks stay)
+    pool.unpersist(false)
+    pairs.unpersist(false)
     selected
   }
 
@@ -2233,26 +2220,16 @@ object Similarity {
     val corpus = withQuant(embeddings).cache()
     val seed = corpus
       .join(broadcast(corpus.agg(min(col("vec_id")).as("vec_id"))), Seq("vec_id"))
-    val scaffolding = scala.collection.mutable.ArrayBuffer[DataFrame](corpus)
     // per-step selected frames are lineage-CUT, not just cached (the
     // mmrRerank rationale: the cached union chain reached ~3.6k scan
     // nodes in the r18 plan audit and planning dominated; cut frames
-    // are ≤ selectK rows). Cut blocks are tracked and the superseded
-    // steps released on exit — the mmrRerank device (unpersist alone
-    // cannot release localCheckpoint blocks).
-    val sc = embeddings.sparkSession.sparkContext
-    val cutIds = scala.collection.mutable.ArrayBuffer[Set[Int]]()
-    def cutTracked(df: DataFrame): DataFrame = {
-      val pre = sc.getPersistentRDDs.keySet.toSet
-      val out = graft.operators.Checkpoints.cut(df, checkpointDir)
-      cutIds += (sc.getPersistentRDDs.keySet.toSet -- pre)
-      out
-    }
-    var selected = cutTracked(
+    // are ≤ selectK rows). Each step's cut is released once the next
+    // one holds — the mmrRerank device (unpersist alone cannot release
+    // localCheckpoint blocks).
+    var selected = Checkpoints.cut(
       seed.select(col("vec_id"), col("q"), col("nq"),
-        lit(1L).as("step"), lit(0L).as("min_dist_q")))
+        lit(1L).as("step"), lit(0L).as("min_dist_q")), checkpointDir)
     for (step <- 2 to selectK) {
-      scaffolding += selected
       val sel = selected.select(col("vec_id").as("s_id"), col("q").as("sq"),
         col("nq").as("snq"))
       val minDist = corpus
@@ -2269,16 +2246,14 @@ object Similarity {
       val attached = corpus.join(broadcast(pick), Seq("vec_id"))
         .select(col("vec_id"), col("q"), col("nq"),
           lit(step.toLong).as("step"), col("min_dist_q"))
-      selected = cutTracked(selected.union(attached))
+      val next = Checkpoints.cut(selected.union(attached), checkpointDir)
+      Checkpoints.release(Seq(selected))
+      selected = next
     }
-    // materialize the ≤ selectK-row result cache, then release the
-    // corpus-sized quantized cache and the superseded per-round cut
-    // blocks — loop state must not outlive the call at corpus scale
-    // (only the final selected frame's blocks stay)
-    selected.count()
-    scaffolding.foreach(_.unpersist(false))
-    cutIds.dropRight(1).flatten.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    // release the corpus-sized quantized cache — loop state must not
+    // outlive the call at corpus scale (only the final selected cut's
+    // blocks stay)
+    corpus.unpersist(false)
     selected.select(col("vec_id"), col("step"), col("min_dist_q"))
   }
 

@@ -472,9 +472,11 @@ object TextOps {
     // inst was cut AND shuffled whole through an (doc, n, h) SMJ just
     // to recover positions). `cnt` is the only instance-order frame
     // that persists, it is double-consumed (tops + the dup tail), and
-    // its position lists sum to exactly the instance count — the same
-    // rows, grouped. `materializeInstances = false` opts out of both
-    // cuts: at corpus scales where token-order materialization
+    // only the dup-n groups collect positions (the top-gram groups'
+    // lists stay empty): their lists sum to exactly the dup-n instance
+    // count, so a doc of one token repeated k times buffers positions
+    // for the two dup ns only. `materializeInstances = false` opts out
+    // of both cuts: at corpus scales where token-order materialization
     // exceeds executor storage the honest trade is re-running the
     // linear generator per consumer instead of caching petabytes.
     val inst =
@@ -484,7 +486,8 @@ object TextOps {
     val cnt = cutIf(
       inst.groupBy(col("doc_id"), col("n"), col("h"))
         .agg(count(lit(1)).as("c"), max(col("clen")).as("clen"),
-          collect_list(col("pos")).as("poss")))
+          collect_list(when(col("n").isInCollection(dupNs.map(_.toLong)),
+            col("pos"))).as("poss")))
     val tops = cnt.filter(col("n").isInCollection(topNs.map(_.toLong)))
       .groupBy(col("doc_id"), col("n"))
       .agg(max(col("c") * col("clen")).as("cov"))
@@ -1229,13 +1232,6 @@ object TextOps {
     */
   case class LogisticModel(w: DataFrame, b: DataFrame, cands: DataFrame,
       hash: Hashing.HashTier, featureBuckets: Int) {
-    /** Broadcast-vs-shuffle call for the scorer's weight-probe join,
-      * counted ONCE per model instance (streaming scorers reuse the
-      * model every micro-batch — the decision must not re-count per
-      * batch). Same budget as the trainer's switch.
-      */
-    lazy val broadcastW: Boolean =
-      w.count() <= graft.operators.GraphOps.BroadcastRanksMaxVertices
     /** Persist + reload all frames — train once, score forever. */
     def materialized(dir: String): LogisticModel = {
       def rt(df: DataFrame, sub: String): DataFrame = {
@@ -1306,19 +1302,11 @@ object TextOps {
     val cands = labels.select(col("src").as("cand")).distinct()
     // the weight table is min(s·featureBuckets, s·train-vocab)-row
     // bounded while the probe side (example-feature grid × classes) is
-    // corpus-sized — the parameter-server shape. Broadcast the model
-    // side of the per-epoch probe join when the counted bound fits the
-    // [[graft.operators.GraphOps.BroadcastRanksMaxVertices]] budget
-    // (cut frames carry no stats, so Catalyst would SMJ regardless of
-    // size); above the bound the join stays shuffled, never OOM.
-    // The bound reads min(featureBuckets, |fx|) off the already-
-    // materialized cut frame — |fx| ≥ train-vocab, so the count is a
-    // conservative OVER-estimate (never broadcasts something bigger
-    // than counted) and costs one scan of local checkpoint blocks,
-    // not the dedicated distinct-count shuffle pass it replaces.
-    val wBound = cands.count() * math.min(featureBuckets.toLong, fx.count())
-    val bcastW = wBound <= graft.operators.GraphOps.BroadcastRanksMaxVertices
-    def hw(df: DataFrame): DataFrame = if (bcastW) broadcast(df) else df
+    // corpus-sized — the parameter-server shape. Every epoch's weight
+    // table is a measured cut, so Spark's own
+    // `spark.sql.autoBroadcastJoinThreshold` broadcasts the model side
+    // of the probe join when it fits; above it the join stays
+    // shuffled, never OOM.
     // zero-init weights as the sparse EMPTY frame: a feature enters
     // the table only when some epoch's gradient touches it
     var w = cands.limit(0).select(col("cand"),
@@ -1339,7 +1327,7 @@ object TextOps {
           col("doc_id"), col("cand"), col("src"), lit(0L).as("dw"))
         else {
           val dots = fx
-            .join(hw(w), Seq("f"))
+            .join(w, Seq("f"))
             .groupBy(col("doc_id"), col("cand"))
             .agg(sum(col("n") * col("wq")).as("dw"))
           grid.join(dots, Seq("doc_id", "cand"), "left_outer")
@@ -1404,16 +1392,15 @@ object TextOps {
       .select(col("doc_id"), explode(col("fs")).as("f"))
       .groupBy(col("doc_id"), col("f"))
       .agg(count(lit(1)).as("n"))
-    // trained weight table vs example-feature probe grid: broadcast
-    // the model side when its counted size fits the budget (the
-    // logisticTrain switch, counted once per model instance). INNER
-    // join on the feature key alone — w carries every (cand, wq) row
+    // trained weight table vs example-feature probe grid: the weight
+    // table is a measured cut (or a materialized parquet read), so
+    // Spark's own threshold broadcasts it when it fits. INNER join on
+    // the feature key alone — w carries every (cand, wq) row
     // per trained feature, so this reproduces the crossJoin×(cand, f)
     // probe's non-zero sums exactly; the dropped all-zero (doc, cand)
     // groups re-enter as coalesce(dw, 0) in the grid join below.
-    val wB = if (model.broadcastW) broadcast(model.w) else model.w
     val dots = fx
-      .join(wB, Seq("f"))
+      .join(model.w, Seq("f"))
       .groupBy(col("doc_id"), col("cand"))
       .agg(sum(col("n") * col("wq")).as("dw"))
     val grid = test.select(col("doc_id"), col("actual"))

@@ -47,6 +47,48 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Re-state a lineage cut (the `LogicalRDD` that `localCheckpoint()`
+    * / `checkpoint()` return) with MEASURED statistics. Spark seeds it
+    * with the optimizer's pre-cut estimate (`LogicalRDD.fromDataset`),
+    * which for joins and aggregates is off by orders of magnitude; the
+    * copy keeps the RDD, output partitioning, ordering and constraints
+    * and swaps only the statistics, so the planner's own size rules see
+    * the real frame. The session and statistics are `LogicalRDD`
+    * constructor arguments with no accessor, hence this shim.
+    */
+  def withStats(
+      cut: org.apache.spark.sql.execution.LogicalRDD,
+      spark: org.apache.spark.sql.SparkSession,
+      bytes: Long,
+      rows: Long): org.apache.spark.sql.DataFrame = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
+      BigInt(bytes), Some(BigInt(rows)))
+    dataset(session, cut.copy()(session, Some(stats), Some(cut.constraints)))
+  }
+
+  /** Bytes an RDD's persisted blocks hold in executor storage (memory +
+    * disk), as the block manager master holds them — one driver-side
+    * ask, no job. Executors report a block to the master before its
+    * task ends, so the figure is complete once the job that wrote the
+    * blocks returns (the status store behind `getRDDStorageInfo` is
+    * fed by the listener bus and can lag). The master is
+    * `private[spark]`.
+    */
+  def storedBytes(rdd: org.apache.spark.rdd.RDD[_]): Long =
+    org.apache.spark.SparkEnv.get.blockManager.master.getStorageStatus.iterator
+      .flatMap(_.rddBlocks)
+      .collect { case (org.apache.spark.storage.RDDBlockId(id, _), s) if id == rdd.id =>
+        s.memSize + s.diskSize }
+      .sum
+
+  /** `spark.sql.autoBroadcastJoinThreshold` as the planner reads it
+    * (bytes; negative = broadcast joins off).
+    */
+  def broadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
+
   /** Idempotently add a planner strategy to a live session — the
     * post-build equivalent of `SparkSessionExtensions.injectPlannerStrategy`.
     */

@@ -24,6 +24,18 @@ class GraphOpsSpec extends SparkSpec {
 
   private def docsDf: DataFrame = docs.toDF()
 
+  /** Runs `body` with broadcast joins off — the shuffle leg of the
+    * both-path cases (the broadcast rule reads the same threshold).
+    * Actions belong inside `body`: plans are made when they run.
+    */
+  private def shuffled[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try body
+    finally spark.conf.set(key, prev)
+  }
+
   test("P4: each doc explodes into exactly two directed edges with swapped endpoints") {
     val edges = GraphOps.edgesFromDocs(docsDf)
     assert(edges.count() === 2 * docs.length)
@@ -213,13 +225,10 @@ class GraphOpsSpec extends SparkSpec {
     assert(got("C") > got("A") && got("A") > got("D"))
     assert(got("D") === 150000000L)
 
-    val broadcastGot = GraphOps.pageRank(edges, 3, broadcastRanks = Some(true))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(broadcastGot === ref)
-    // all three knob values agree (auto picked broadcast here — 4
-    // vertices; the knob only moves plan shape, never ranks)
-    assert(GraphOps.pageRank(edges, 3, broadcastRanks = Some(false))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap === ref)
+    // the default run broadcasts the 4-vertex rank frames; the shuffled
+    // leg agrees (broadcast only moves plan shape, never ranks)
+    assert(shuffled(GraphOps.pageRank(edges, 3)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap) === ref)
   }
 
   test("personalizedPageRank: hand triangle; unreachable stays 0; off-graph seeds inert") {
@@ -234,9 +243,9 @@ class GraphOpsSpec extends SparkSpec {
     assert(got === Map(
       "a" -> 150000000L, "b" -> 127500000L, "c" -> 722500000L,
       "d" -> 0L, "e" -> 0L))
-    // broadcast form identical
-    assert(GraphOps.personalizedPageRank(edges, seeds, 2, broadcastRanks = Some(true))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap === got)
+    // shuffled form identical
+    assert(shuffled(GraphOps.personalizedPageRank(edges, seeds, 2)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap) === got)
     // seeds not in the graph contribute nothing and add no vertices
     val gotOff = GraphOps.personalizedPageRank(
       edges, Seq("a", "zz").toDF("person_id"), 2)
@@ -275,9 +284,9 @@ class GraphOpsSpec extends SparkSpec {
     assert(got === ref)
     // the heavy edge dominates: B far outranks C
     assert(got("B") > got("C"))
-    val broadcastGot = GraphOps.pageRankWeighted(edges, 3, broadcastRanks = Some(true))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(broadcastGot === ref)
+    val shuffledGot = shuffled(GraphOps.pageRankWeighted(edges, 3)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+    assert(shuffledGot === ref)
   }
 
   test("reliable-checkpoint mode is result-identical across the iterative ops") {
@@ -447,8 +456,8 @@ class GraphOpsSpec extends SparkSpec {
     assert(rowSet(GraphOps.labelPropagation(tris, rounds = 2)) === Set(
       Seq("A", "A"), Seq("B", "A"), Seq("C", "A"),
       Seq("D", "D"), Seq("E", "D"), Seq("F", "D")))
-    // broadcastLabels is a cost switch, not a semantics switch
-    assert(rowSet(GraphOps.labelPropagation(tris, rounds = 2, broadcastLabels = Some(true))) ===
+    // broadcasting the label table is a cost choice, not semantics
+    assert(shuffled(rowSet(GraphOps.labelPropagation(tris, rounds = 2))) ===
       rowSet(GraphOps.labelPropagation(tris, rounds = 2)))
   }
 
@@ -485,7 +494,7 @@ class GraphOpsSpec extends SparkSpec {
     // contraction is a no-op on the converged partition (merging the
     // triangles would lower Q, so level 2 keeps both supers)
     assert(rowSet(GraphOps.louvain(tris, moveRounds = 2, levels = 2)) === expected)
-    assert(rowSet(GraphOps.louvain(tris, 2, 2, broadcastLabels = Some(true))) === expected)
+    assert(shuffled(rowSet(GraphOps.louvain(tris, 2, 2))) === expected)
   }
 
   test("louvain: synchronous rounds + swap guard pinned on the bridged graph; contraction merges chased singletons") {
@@ -609,7 +618,7 @@ class GraphOpsSpec extends SparkSpec {
       ("D", "E"), ("E", "F"), ("D", "F"),
       ("C", "D")
     ).toDF("person_a", "person_b")
-    assert(rowSet(GraphOps.leiden(bridged, 2, 2, broadcastLabels = Some(true))) ===
+    assert(shuffled(rowSet(GraphOps.leiden(bridged, 2, 2))) ===
       rowSet(GraphOps.leiden(bridged, 2, 2)))
   }
 
@@ -1007,5 +1016,24 @@ class GraphOpsSpec extends SparkSpec {
     val t = GraphOps.sgnsTrain(tiny, dim = 2, epochs = 2, negBuckets = 1)
       .as[(String, Seq[Long])].collect().toMap
     assert(t.keySet === Set("x", "y"))
+  }
+
+  test("sccLabels releases its finished rounds' cuts: only the output's cut stays persisted") {
+    // three 2-cycles chained one way: three peel rounds, each with
+    // color and mark steps
+    val edges = Seq(("a", "b"), ("b", "a"), ("b", "c"), ("c", "d"), ("d", "c"),
+      ("d", "e"), ("e", "f"), ("f", "e")).toDF("src", "dst")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val out = GraphOps.sccLabels(edges)
+    val held = sc.getPersistentRDDs.keySet.toSet -- before
+    val backing = out.queryExecution.logical.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    assert(backing.nonEmpty)
+    assert(held === backing, s"cuts left persisted beyond the output's: ${held -- backing}")
+    assert(rowSet(out) === Set(
+      Seq("a", "a"), Seq("b", "a"), Seq("c", "c"), Seq("d", "c"),
+      Seq("e", "e"), Seq("f", "e")))
   }
 }

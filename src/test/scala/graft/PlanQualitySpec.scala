@@ -679,7 +679,7 @@ class PlanQualitySpec extends SparkSpec {
     val pairs = GraphOps.coOccurrencePairs(
       GraphOps.edgesFromDocs(Tables.relationshipDocs(spark, sfDir)),
       maxFanout = 20, minShared = 2)
-    val out = GraphOps.labelPropagation(pairs, rounds = 2, broadcastLabels = Some(true))
+    val out = GraphOps.labelPropagation(pairs, rounds = 2)
     val plan = formatted(out)
     assert(plan.contains("BroadcastHashJoin"),
       s"broadcastLabels must plan the round join as a broadcast:\n$plan")

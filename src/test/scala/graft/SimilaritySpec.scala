@@ -805,6 +805,28 @@ class SimilaritySpec extends SparkSpec {
       Seq(0L, 2L, 960000L, 3L)))
   }
 
+  test("mmrRerank releases only its own cuts: a concurrent query's localCheckpoints stay readable") {
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val frames = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.DataFrame]()
+    val other = new Thread(() => {
+      var i = 0L
+      while (!stop.get() && frames.size < 500) {
+        frames.add(spark.range(i, i + 20).toDF("id").localCheckpoint())
+        i += 1
+      }
+    })
+    other.start()
+    val out =
+      try Similarity.mmrRerank(mmrEmb, col("vec_id") === 0,
+        poolK = 3, selectK = 3, lambdaE3 = 700).collect()
+      finally { stop.set(true); other.join() }
+    assert(out.length === 3)
+    assert(!frames.isEmpty)
+    frames.forEach(f => assert(f.count() === 20L))
+    graft.operators.Checkpoints.release(
+      scala.jdk.CollectionConverters.IterableHasAsScala(frames).asScala)
+  }
+
   test("mmrRerank at lambdaE3=1000 is pure relevance order") {
     val out = Similarity.mmrRerank(mmrEmb, col("vec_id") === 0,
       poolK = 3, selectK = 3, lambdaE3 = 1000)

@@ -1537,7 +1537,10 @@ class TextOpsSpec extends SparkSpec {
       // degenerate self-overlap: top-2 count*chars EXCEEDS the base
       (2L, "ab ab ab ab"),
       (3L, ""),
-      (4L, null: String)
+      (4L, null: String),
+      // one token repeated k = 12 times: every window of every n is
+      // one hash group
+      (5L, Seq.fill(12)("ab").mkString(" "))
     ).toDF("doc_id", "text")
     val out = TextOps.gopherRepetition(docs)
       .as[(Long, Long, Long, Long, Long, Long, Long, Boolean)].collect()
@@ -1555,6 +1558,13 @@ class TextOpsSpec extends SparkSpec {
     // -> 1500 (the paper's per-occurrence accounting, > 1000)
     assert(out(2L)._3 === 1500L)
     assert(out(2L)._6 === 0L, "4 tokens have no 5-gram")
+    // doc 5: base 24; top-n = (13-n)*2n chars -> 44, 60, 72; both dup
+    // grams repeat and cover every token -> 1000
+    val d5 = out(5L)
+    assert(d5._2 === 12L)
+    assert(d5._3 === 1833L && d5._4 === 2500L && d5._5 === 3000L)
+    assert(d5._6 === 1000L && d5._7 === 1000L)
+    assert(!d5._8)
     // empty/null docs: all-zero signals (no repetition to flag)
     for (id <- Seq(3L, 4L)) {
       val d = out(id)
