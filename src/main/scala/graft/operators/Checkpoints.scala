@@ -1,11 +1,8 @@
 package graft.operators
 
-import scala.concurrent.{Await, TimeoutException}
-import scala.concurrent.duration._
-
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{broadcast, count, lit}
+import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Lineage cuts for the iterative operators (connected components,
@@ -39,8 +36,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   *
   * MEASURED SIZE. A cut carries its own size: the frame [[cut]]
   * returns is a `LogicalRDD` whose `Statistics` hold the exact row
-  * count, observed on the cut's own materialization job (no job is
-  * added), and the bytes of the blocks it wrote (executor storage for
+  * count, counted by the cut's own materialization job as it copies
+  * the rows (no job and no plan operator is added), and the bytes of
+  * the blocks it wrote (executor storage for
   * local cuts, checkpoint files for durable ones), read on the driver.
   * Spark's own checkpoint keeps the optimizer's pre-cut ESTIMATE
   * instead (a 150-row cut of a parquet join+aggregate reports
@@ -66,37 +64,25 @@ object Checkpoints {
 
   /** Materialize `df` and truncate its lineage, durable iff `dir` is
     * set, returning a frame that carries its measured rows and bytes
-    * (see MEASURED SIZE above). Both modes are eager and preserve the
-    * physical partitioning (Spark's `Dataset.checkpoint` keeps
-    * `outputPartitioning` on the resulting `LogicalRDD` either way), so
-    * co-partitioned iterative joins keep their shuffle-free rounds in
-    * both.
-    *
-    * Durable mode caches the frame (MEMORY_AND_DISK) around the
-    * reliable checkpoint so the file write never recomputes the
-    * upstream plan — the expensive joins/aggregates this knob
-    * protects. It is unpersisted as soon as the checkpoint files
-    * exist.
+    * (see MEASURED SIZE above). Both modes are eager, run ONE job (a
+    * durable cut writes its files in the materializing job, so no
+    * cache is needed to spare the upstream plan a second pass) and
+    * preserve the physical partitioning (`outputPartitioning` stays on
+    * the resulting `LogicalRDD` either way), so co-partitioned
+    * iterative joins keep their shuffle-free rounds in both.
     */
   def cut(df: DataFrame, dir: Option[String]): DataFrame = {
-    val obs = Observation()
-    val observed = df.observe(obs, count(lit(1)).as("rows"))
-    val raw = dir match {
-      case None => observed.localCheckpoint()
-      case Some(d) =>
-        val sc = df.sparkSession.sparkContext
-        sc.getCheckpointDir match {
-          case None => sc.setCheckpointDir(d)
-          case Some(cur) if !sameCheckpointDir(sc.hadoopConfiguration, d, cur) =>
-            log.warn(s"Checkpoints.cut: checkpoint dir already set to '$cur'; " +
-              s"ignoring requested '$d' (one dir per SparkContext)")
-          case _ => ()
-        }
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try observed.checkpoint()
-        finally df.unpersist()
+    dir.foreach { d =>
+      val sc = df.sparkSession.sparkContext
+      sc.getCheckpointDir match {
+        case None => sc.setCheckpointDir(d)
+        case Some(cur) if !sameCheckpointDir(sc.hadoopConfiguration, d, cur) =>
+          log.warn(s"Checkpoints.cut: checkpoint dir already set to '$cur'; " +
+            s"ignoring requested '$d' (one dir per SparkContext)")
+        case _ => ()
+      }
     }
-    val cutPlan = backing(raw).get
+    val (cutPlan, rows) = Bridge.checkpoint(df, durable = dir.isDefined)
     val rdd = cutPlan.rdd
     val bytes = rdd.getCheckpointFile match {
       case Some(f) =>
@@ -104,20 +90,8 @@ object Checkpoints {
         p.getFileSystem(rdd.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
       case None => Bridge.storedBytes(rdd)
     }
-    val rows =
-      try Await.result(obs.future, ObservationWait).getLong(0)
-      catch {
-        case _: TimeoutException =>
-          // the metric travels on the listener bus; a dropped event
-          // must cost one scan of the cut blocks, never a hang
-          log.warn(s"Checkpoints.cut: row count not observed within " +
-            s"$ObservationWait; counting the cut")
-          raw.count()
-      }
-    Bridge.withStats(cutPlan, raw.sparkSession, bytes, rows)
+    Bridge.withStats(cutPlan, df.sparkSession, bytes, rows)
   }
-
-  private val ObservationWait = 60.seconds
 
   /** Rows `cut` counted while it materialized. */
   def rows(cut: DataFrame): Long = measured(cut).rowCount.get.toLong
@@ -128,13 +102,22 @@ object Checkpoints {
   /** THE BROADCAST RULE (see above): `broadcast` for frames a loop
     * derives from `cut` by joins when `cut`'s measured bytes fit
     * `spark.sql.autoBroadcastJoinThreshold`, identity otherwise. Pass
-    * the loop's cut frame of the same or larger size class than the
-    * frames it hints (vertex frames for rank loops, the edge list
-    * when only edges are cut).
+    * a cut of the hinted frames' own size class: the vertex set for
+    * vertex-sized frames, never the edge list, which can outgrow the
+    * threshold while its vertices fit it many times over.
     */
   def broadcastRule(cut: DataFrame): DataFrame => DataFrame = {
     val threshold = Bridge.broadcastThreshold(cut.sparkSession)
     if (threshold >= 0 && bytes(cut) <= threshold) broadcast(_) else identity
+  }
+
+  /** [[broadcastRule]] for a loop that keeps no cut of its hinted
+    * frames' size class: `df` (typically the loop's distinct vertex
+    * set) is cut locally once to be measured and released at once.
+    */
+  def broadcastRuleFor(df: DataFrame): DataFrame => DataFrame = {
+    val c = cut(df, None)
+    try broadcastRule(c) finally release(Seq(c))
   }
 
   /** Free the executor blocks behind `cuts` — only the RDD each cut

@@ -749,9 +749,10 @@ object GraphOps {
         .distinct(), checkpointDir)
     // the per-round `keep` filter is vertex-sized; its two semi joins
     // against the edge list are the round's whole plan. It takes the
-    // [[Checkpoints.broadcastRule]] off the first edge cut: the vertex
-    // set is no larger than the edge list, and peeling only shrinks it
-    val bc = Checkpoints.broadcastRule(e)
+    // [[Checkpoints.broadcastRule]] measured once on the vertex set;
+    // peeling only shrinks it
+    val bc = Checkpoints.broadcastRuleFor(
+      e.select(col("a").as("v")).union(e.select(col("b").as("v"))).distinct())
     var prevEdges: Option[Long] = None
     var changed = true
     var round = 0
@@ -872,7 +873,7 @@ object GraphOps {
     * Scale shape: per round ONE edge-sized join (labels attach to the
     * symmetric edge list on the 1-column neighbor key; the
     * vertex-sized label table takes [[Checkpoints.broadcastRule]] off
-    * the cut edge list) and two map-side-combining aggregates on
+    * the cut vertex set) and two map-side-combining aggregates on
     * (vertex, label) / vertex keys. Label payload is one id-sized
     * value — no text, no neighbor lists. Rounds are a fixed small
     * constant (LPA quality saturates in ~5), each cut via
@@ -890,8 +891,8 @@ object GraphOps {
         .filter(col("v") =!= col("u"))
         .distinct(),
       checkpointDir)
-    val verts = sym.select(col("v")).distinct()
-    val bc = Checkpoints.broadcastRule(sym)
+    val verts = Checkpoints.cut(sym.select(col("v")).distinct(), checkpointDir)
+    val bc = Checkpoints.broadcastRule(verts)
     var lab = verts.select(col("v"), col("v").as("label"))
     for (r <- 1 to rounds) {
       val counts = sym
@@ -960,7 +961,7 @@ object GraphOps {
     *
     * Scale shape: per move round ONE edge-sized join attaches neighbor
     * labels (the vertex-sized label table takes
-    * [[Checkpoints.broadcastRule]] off the cut edge list), then map-side-
+    * [[Checkpoints.broadcastRule]] off the vertex set), then map-side-
     * combining aggregates on (vertex, community) / community keys; the
     * 1-row total-weight frame rides a broadcast cross join (the
     * [[modularity]] device). Candidate rows are bounded by the edge
@@ -1003,9 +1004,11 @@ object GraphOps {
         .withColumn("w", lit(1L)),
       checkpointDir)
     // the per-round label frames are vertex-sized and derived by joins:
-    // they take [[Checkpoints.broadcastRule]] off the level-1 edge cut;
-    // contraction only shrinks the graph, so it holds for every level
-    val bc = Checkpoints.broadcastRule(edges)
+    // they take [[Checkpoints.broadcastRule]] measured once on the
+    // level-1 vertex set; contraction only shrinks the graph, so it
+    // holds for every level
+    val bc = Checkpoints.broadcastRuleFor(
+      edges.select(col("a").as("v")).union(edges.select(col("b").as("v"))).distinct())
     var mapping: DataFrame = null
     for (level <- 1 to levels) {
       val lab = refine(edges, bc,
@@ -1552,10 +1555,11 @@ object GraphOps {
     // per-step color/mark frames are vertex-sized; the loop joins them
     // against the edge list dozens of times (maxRounds × maxSteps), so
     // the broadcast-vs-shuffle call is THE per-step plan decision. It
-    // is [[Checkpoints.broadcastRule]] off the first edge cut: the
-    // vertex set is no larger than the edge list, and peeling only
-    // shrinks the graph, so the answer holds for every round
-    val bc = Checkpoints.broadcastRule(e)
+    // is [[Checkpoints.broadcastRule]] measured once on the vertex set;
+    // peeling only shrinks the graph, so the answer holds for every
+    // round
+    val bc = Checkpoints.broadcastRuleFor(
+      e.select(col("s").as("v")).union(e.select(col("d").as("v"))).distinct())
     // self-loop-ONLY vertices are their own SCCs and never enter `e`;
     // a vertex with a self-loop AND other edges is labeled by the main
     // loop (the self-loop does not change mutual reachability), so it

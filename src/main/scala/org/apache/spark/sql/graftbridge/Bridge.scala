@@ -47,6 +47,33 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Eager `Dataset.localCheckpoint()` (or `checkpoint()` when
+    * `durable`) that also returns how many rows its one materializing
+    * job wrote. The steps are Spark's own — run the physical plan
+    * under a new SQL execution named like the built-in action, copy
+    * each row, mark the RDD for a local or reliable checkpoint,
+    * `doCheckpoint` it — with an accumulator on the copying map. Spark
+    * merges a result task's accumulator updates once per partition and
+    * before the job returns, so the count is exact and adds no job and
+    * no operator to the plan.
+    */
+  def checkpoint(
+      df: org.apache.spark.sql.DataFrame,
+      durable: Boolean): (org.apache.spark.sql.execution.LogicalRDD, Long) = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+    val qe = ds.queryExecution
+    val rows = ds.sparkSession.sparkContext.longAccumulator
+    val name = if (durable) "checkpoint" else "localCheckpoint"
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name)) {
+      qe.executedPlan.resetMetrics()
+      val rdd = qe.executedPlan.execute().map { r => rows.add(1L); r.copy() }
+      if (durable) rdd.checkpoint() else rdd.localCheckpoint()
+      rdd.doCheckpoint()
+      (org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, ds, ds.isStreaming),
+        rows.value.longValue)
+    }
+  }
+
   /** Re-state a lineage cut (the `LogicalRDD` that `localCheckpoint()`
     * / `checkpoint()` return) with MEASURED statistics. Spark seeds it
     * with the optimizer's pre-cut estimate (`LogicalRDD.fromDataset`),

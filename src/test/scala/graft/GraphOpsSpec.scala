@@ -446,6 +446,58 @@ class GraphOpsSpec extends SparkSpec {
       .count() === 0L)
   }
 
+  test("kCorePeel and labelPropagation broadcast vertex-sized frames while the edge list is over the threshold") {
+    // the loops cut only edge lists per round; their hinted frames are
+    // vertex-sized, so the broadcast rule must be measured on the
+    // vertex set. Round frames run behind cuts, so every executed plan
+    // is captured (the PlanQualitySpec sgnsTrain device), AQE off so no
+    // shuffle join is rewritten at run time.
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.operators.Checkpoints
+
+    val ids = (0 until 40).map(i => f"v$i%02d")
+    val edges = (for (a <- ids; b <- ids if a < b) yield (a, b)).toDF("src", "dst")
+    val vCut = Checkpoints.cut(ids.toDF("v"), None)
+    val eCut = Checkpoints.cut(edges.select(col("src").as("a"), col("dst").as("b")), None)
+    val (vBytes, eBytes) = (Checkpoints.bytes(vCut), Checkpoints.bytes(eCut))
+    Checkpoints.release(Seq(vCut, eCut))
+    assert(4 * vBytes < eBytes, s"vertex cut $vBytes B, edge cut $eBytes B")
+
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    val prev = keys.map(spark.conf.get)
+    spark.conf.set(keys(0), "false")
+    spark.conf.set(keys(1), (2 * vBytes).toString)
+    spark.listenerManager.register(listener)
+    val sentinel = 987654501L
+    try {
+      assert(GraphOps.kCorePeel(edges, 3, 2).count() === ids.size)
+      assert(GraphOps.labelPropagation(
+        edges.toDF("person_a", "person_b"), 2).count() === ids.size)
+      spark.range(sentinel, sentinel + 1).collect()
+      val deadline = System.nanoTime + 30L * 1000L * 1000L * 1000L
+      while (!plans.asScala.exists(_.toString.contains(sentinel.toString)) &&
+          System.nanoTime < deadline) Thread.sleep(25)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      keys.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
+    }
+    val ps = plans.asScala.toList
+    val smj = ps.flatMap(_.collect { case j: SortMergeJoinExec => j })
+    assert(smj.isEmpty, s"shuffled joins in the round plans:\n${smj.mkString("\n")}")
+    assert(ps.exists(_.collect { case b: BroadcastHashJoinExec => b }.nonEmpty),
+      "no broadcast join captured - capture broken?")
+  }
+
   test("labelPropagation: two disjoint triangles converge to their min labels") {
     val tris = Seq(
       ("A", "B"), ("B", "C"), ("A", "C"),
