@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.graftbridge.Bridge
@@ -106,9 +106,16 @@ object Checkpoints {
     * vertex-sized frames, never the edge list, which can outgrow the
     * threshold while its vertices fit it many times over.
     */
-  def broadcastRule(cut: DataFrame): DataFrame => DataFrame = {
-    val threshold = Bridge.broadcastThreshold(cut.sparkSession)
-    if (threshold >= 0 && bytes(cut) <= threshold) broadcast(_) else identity
+  def broadcastRule(cut: DataFrame): DataFrame => DataFrame =
+    if (fitsBroadcast(cut.sparkSession, bytes(cut))) broadcast(_) else identity
+
+  /** Whether `bytes` fit `spark.sql.autoBroadcastJoinThreshold` (the
+    * budget [[broadcastRule]] applies; a negative threshold fits
+    * nothing).
+    */
+  def fitsBroadcast(spark: SparkSession, bytes: BigInt): Boolean = {
+    val threshold = Bridge.broadcastThreshold(spark)
+    threshold >= 0 && bytes <= threshold
   }
 
   /** [[broadcastRule]] for a loop that keeps no cut of its hinted

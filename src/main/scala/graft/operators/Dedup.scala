@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.Hashing
 
@@ -1245,7 +1248,8 @@ object Dedup {
       // set is batch-sized, so the semi-join broadcasts)
       matchedIds => shingles(
         corpus.join(broadcast(matchedIds), Seq("doc_id"), "left_semi"),
-        n, hash = hash))
+        n, hash = hash),
+      checkpointDir)._1
   }
 
   /** Shared incremental-LSH core: candidates from (index ∪ new) × new
@@ -1253,26 +1257,47 @@ object Dedup {
     * plus whatever `corpusShOf(matchedIds)` supplies for the colliding
     * corpus docs (re-shingled text for the batch form, persisted
     * shingle-hash state for the streaming form).
+    *
+    * Each batch frame is computed once. The candidate pairs are cut, and
+    * the matched ids come off that cut in one pass. The verification
+    * shingle set (matched new docs ∪ matched corpus docs) is
+    * deduplicated and cut, so its three readers (sizes and both
+    * intersection sides) share one frame. A doc re-delivered in a later
+    * batch has its shingles in both inputs; the deduplication counts
+    * them once. The index side of the band join is neither
+    * deduplicated nor shuffled (duplicate index rows only repeat
+    * candidates, which the candidate `distinct` absorbs), and the new
+    * bands take the broadcast rule, so the join streams the index.
+    *
+    * Returns the pairs and the cuts made here; the caller releases the
+    * cuts once the pairs are written.
     */
   private[graft] def incrementalPairsCore(
       newSh: DataFrame,
       newBands: DataFrame,
       corpusBands: DataFrame,
       threshE3: Int,
-      corpusShOf: DataFrame => DataFrame): DataFrame = {
-    val allBands = corpusBands.unionByName(newBands)
-    val l = allBands.select(col("doc_id").as("doc_a"), col("band"), col("band_sig"))
-    val r = newBands.select(col("doc_id").as("doc_b"), col("band"), col("band_sig"))
+      corpusShOf: DataFrame => DataFrame,
+      cutDir: Option[String]): (DataFrame, Seq[DataFrame]) = {
+    val l = corpusBands.unionByName(newBands)
+      .select(col("doc_id").as("doc_a"), col("band"), col("band_sig"))
+    val r = Checkpoints.broadcastRule(newBands)(
+      newBands.select(col("doc_id").as("doc_b"), col("band"), col("band_sig")))
     // normalize (min, max): new↔new collisions arrive in both orders,
     // new↔corpus in one — distinct collapses them either way
-    val cands = l.join(r, Seq("band", "band_sig"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-      .distinct()
-    val matchedIds = cands.select(col("doc_a").as("doc_id"))
-      .union(cands.select(col("doc_b").as("doc_id"))).distinct()
-    exactJaccardE3(cands, newSh.unionByName(corpusShOf(matchedIds)), threshE3)
+    val cands = Checkpoints.cut(
+      l.join(r, Seq("band", "band_sig"))
+        .filter(col("doc_a") =!= col("doc_b"))
+        .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+          greatest(col("doc_a"), col("doc_b")).as("doc_b"))
+        .distinct(), cutDir)
+    val matchedIds = cands
+      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct()
+    val verifySh = Checkpoints.cut(
+      newSh.join(broadcast(matchedIds), Seq("doc_id"), "left_semi")
+        .unionByName(corpusShOf(matchedIds))
+        .distinct(), cutDir)
+    (exactJaccardE3(cands, verifySh, threshE3), Seq(cands, verifySh))
   }
 
   /** SimHash signatures: `bits`-wide (default 64), token-frequency
@@ -1313,26 +1338,42 @@ object Dedup {
     * turns pairwise near-duplicates into dedup CLUSTERS (each doc maps
     * to its component's minimum id, the canonical representative).
     *
-    * Iterative min-label propagation with pointer jumping: each round
-    * every vertex takes the min of its own, its neighbors', and its
-    * label's label (path halving) — fixpoint in O(log diameter) rounds
-    * instead of O(diameter). Each round is one neighbor join, one
-    * union-fused min aggregate (self ∪ neighbor messages — no separate
-    * self left-join), and one pointer-jump join; lineage is cut by an
-    * eager localCheckpoint whose job also carries the convergence
-    * metric via `observe` (labels only decrease, so the global label
-    * sum is strictly monotone: equal sums across rounds ⇔ fixpoint —
-    * no extra count job, no old-label column). The sum is observed in
-    * `decimal(38,0)`, not Long: doc ids are arbitrary 64-bit values in
-    * this API (hash-derived ids are common), and a wrapped Long sum
-    * would silently break the monotonicity test and stop the loop
-    * early with wrong labels. 38 digits bounds exact sums up to
-    * ~10¹⁹ ids of magnitude 2⁶³ — beyond any vertex count Spark can
-    * hold — and costs one decimal add per row inside the
-    * already-running checkpoint job.
+    * The pair list is cut once (both directions, partitioned on the
+    * join key). What follows depends on that cut's measured bytes,
+    * under the budget of [[Checkpoints.broadcastRule]]
+    * (`spark.sql.autoBroadcastJoinThreshold`, no option of its own):
     *
-    * `vertices` supplies the full id universe so singletons appear as
-    * their own component.
+    *  - at or under the threshold (with the vertex set's plan estimate
+    *    under it too), the components are computed in ONE task: a
+    *    union-find over the edge cut and the vertex ids
+    *    ([[unionFindLabels]]), whose label frame is cut. One job after
+    *    the edge cut, however deep the graph.
+    *  - above it, iterative min-label propagation with pointer
+    *    jumping, the 100 TB path: each round every vertex takes the min
+    *    of its own, its neighbors', and its label's label (path
+    *    halving) — fixpoint in O(log diameter) rounds instead of
+    *    O(diameter). Each round is one neighbor join, one union-fused
+    *    min aggregate (self ∪ neighbor messages), and one pointer-jump
+    *    join, cut by an eager localCheckpoint whose job also carries
+    *    the convergence metric via `observe`: labels only decrease, so
+    *    while the labelled set holds its size (the cut's row count) the
+    *    global label sum is strictly monotone, and equal sums and sizes
+    *    across rounds ⇔ fixpoint. The sum is observed in
+    *    `decimal(38,0)`, not Long: doc ids are arbitrary 64-bit values
+    *    in this API (hash-derived ids are common), and a wrapped Long
+    *    sum would break the monotonicity test. A loop still running
+    *    after [[StarFallbackRounds]] contracts and finishes on
+    *    [[largeSmallStarComponents]]. Each superseded round cut is
+    *    released once the next one holds.
+    *
+    * Both paths return the same rows (the loop's fixpoint): one per
+    * vertex of `vertices` (singletons as their own component) and one
+    * per pair endpoint absent from `vertices` that is connected to a
+    * vertex; every component is labelled by its least id in
+    * `vertices` (only those ids seed labels, so an absent endpoint
+    * never names a component, and a component with no vertex gets no
+    * rows). `maxRounds` and `broadcastLabels` steer the loop only. The
+    * edge cut is released before returning.
     */
   def connectedComponents(
       pairs: DataFrame,
@@ -1349,8 +1390,74 @@ object Dedup {
       pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
         .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
         .repartition(col("v")), checkpointDir)
+    val spark = pairs.sparkSession
+    val local = Checkpoints.fitsBroadcast(spark, Checkpoints.bytes(edges)) &&
+      Checkpoints.fitsBroadcast(spark, vertices.queryExecution.optimizedPlan.stats.sizeInBytes)
+    val labels =
+      if (local) {
+        val rows = edges.select(col("u").cast("long"), col("v").cast("long"), lit(true).as("edge"))
+          .unionByName(vertices.select(col("doc_id").cast("long").as("u"),
+            col("doc_id").cast("long").as("v"), lit(false).as("edge")))
+          .coalesce(1).rdd.mapPartitions(unionFindLabels)
+        val schema = StructType(Seq(
+          StructField("doc_id", LongType, nullable = false),
+          StructField("component_id", LongType, nullable = false)))
+        log.info("connectedComponents: edge cut within the broadcast threshold; " +
+          "union-find in one task")
+        Checkpoints.cut(spark.createDataFrame(rows, schema), checkpointDir)
+      } else propagateComponents(edges, vertices, maxRounds, broadcastLabels, checkpointDir)
+    Checkpoints.release(Seq(edges))
+    labels
+  }
+
+  /** One partition's components: `rows` carries the symmetric edge
+    * rows (`edge` true) and the vertex ids (`edge` false) of
+    * [[connectedComponents]]' local path, in any order. Union-find with
+    * path halving over the endpoints (memory: the endpoints plus the
+    * vertex ids), then each component takes its least vertex-set
+    * member as its label.
+    */
+  private def unionFindLabels(rows: Iterator[Row]): Iterator[Row] = {
+    val parent = mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    val members = mutable.LongMap.empty[Unit]
+    rows.foreach { r =>
+      val (a, b) = (r.getLong(0), r.getLong(1))
+      if (r.getBoolean(2)) {
+        parent.getOrElseUpdate(a, a)
+        parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      } else members(a) = ()
+    }
+    val endpoints = parent.keysIterator.toArray
+    val roots = endpoints.map(find)
+    val label = mutable.LongMap.empty[Long]
+    endpoints.indices.foreach { i =>
+      if (members.contains(endpoints(i)) && label.get(roots(i)).forall(endpoints(i) < _))
+        label(roots(i)) = endpoints(i)
+    }
+    members.keysIterator.filterNot(parent.contains).map(x => Row(x, x)) ++
+      endpoints.indices.iterator.flatMap(i => label.get(roots(i)).map(Row(endpoints(i), _)))
+  }
+
+  /** [[connectedComponents]]' propagation loop over its edge cut. The
+    * returned frame never reads `edges`, so the caller may release it.
+    */
+  private def propagateComponents(
+      edges: DataFrame,
+      vertices: DataFrame,
+      maxRounds: Int,
+      broadcastLabels: Boolean,
+      checkpointDir: Option[String]): DataFrame = {
     var labels = vertices.select(col("doc_id"), col("doc_id").as("label"))
+    var labelCut = Option.empty[DataFrame]
     var prevSum: Option[BigDecimal] = None
+    var prevRows = 0L
     var changed = true
     var round = 0
     // Rounds-to-fixpoint is the operator's scale driver. Clique-shaped
@@ -1404,13 +1511,20 @@ object Dedup {
         checkpointDir)
       val labelSum = Option(obs.get("label_sum"))
         .collect { case d: java.math.BigDecimal => BigDecimal(d) }
+      // endpoints absent from `vertices` join the labelled set as a
+      // neighbor's label reaches them, adding to the sum: a grown set
+      // is a change whatever the sum did
+      val rows = Checkpoints.rows(jumped)
       changed = (labelSum, prevSum) match {
-        case (Some(cur), Some(prev)) => cur < prev
+        case (Some(cur), Some(prev)) => cur < prev || rows > prevRows
         case (Some(_), None)         => true  // first round: no prior sum yet
         case (None, _)               => false // empty input: trivially converged
       }
       prevSum = labelSum
+      prevRows = rows
+      Checkpoints.release(labelCut)
       labels = jumped
+      labelCut = Some(jumped)
       round += 1
       log.info(s"connectedComponents round $round: label_sum=${labelSum.orNull}")
     }
@@ -1481,7 +1595,8 @@ object Dedup {
     * round count is O(log² n) worst-case (in practice ≤ the
     * pointer-jumping round count on the same graph). Used directly
     * for adversarial graphs, and as [[connectedComponents]]' fallback
-    * after [[StarFallbackRounds]] unconverged propagation rounds.
+    * after [[StarFallbackRounds]] unconverged propagation rounds. Each
+    * superseded round's edge cut is released once the next one holds.
     */
   private[graft] def largeSmallStarComponents(
       pairs: DataFrame,
@@ -1533,6 +1648,7 @@ object Dedup {
         case (None, _)               => false // edge set emptied: stars of size 1
       }
       prevSum = edgeSum
+      Checkpoints.release(Seq(e))
       e = next
       round += 1
       log.info(s"largeSmallStar round $round: edge_sum=${edgeSum.orNull}")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.Hashing
-import graft.operators.Dedup
+import graft.operators.{Checkpoints, Dedup}
 
 /** Misra-Gries summary state: ≤ k counters + tokens-seen total. */
 final case class HHState(counters: Map[String, Long], processed: Long)
@@ -57,11 +57,16 @@ object DocStreams {
     * `pairsDir`, and appends its own bands/shingles to the index.
     *
     * Per batch the work is batch-sized, not corpus-sized: only the new
-    * docs shingle/minhash, the band join probes the index on 16-byte
-    * keys, and only colliding corpus docs' shingle rows are read back
-    * for exact verification. The index grows by ~(bands + shingles)
-    * rows per doc — the same artifacts the batch pipeline would
-    * persist.
+    * docs shingle/minhash, the band join streams the index past the
+    * new bands (broadcast while they fit the broadcast threshold; the
+    * index is never deduplicated or shuffled), and only colliding
+    * corpus docs' shingle rows are read back for exact verification.
+    * Each batch frame is computed once: the new shingles, the new
+    * bands, the candidate pairs and the deduplicated verification
+    * shingle set are each cut ([[Dedup.incrementalPairsCore]]) and
+    * released once the batch commits. The index grows by
+    * ~(bands + shingles) rows per doc — the same artifacts the batch
+    * pipeline would persist.
     *
     * Retry semantics: the band/shingle tables commit through
     * [[IndexCommit]] (batch-id segments behind a manifest swap), so a
@@ -73,8 +78,8 @@ object DocStreams {
     * `compactEvery` batches the settled segments fold into one.
     *
     * `cutDir`: RDD-checkpoint dir for the in-batch lineage cuts
-    * (shingle frame + band table) — `None` = executor-memory
-    * `localCheckpoint`, `Some(dir)` = durable
+    * (shingles, bands, candidates, verification set) — `None` =
+    * executor-memory `localCheckpoint`, `Some(dir)` = durable
     * ([[graft.operators.Checkpoints.cut]]); distinct from
     * `checkpointDir`, the streaming offsets/commits location. Durable
     * mode writes NEW checkpoint files per micro-batch and old ones are
@@ -122,24 +127,24 @@ object DocStreams {
           IndexCommit.fold(spark, s"$stateDir/sh", batchId, shSchema,
             _.distinct())
         }
-        val newSh = graft.operators.Checkpoints.cut(
-          Dedup.shingles(batch, n, hash = hash), cutDir)
+        val newSh = Checkpoints.cut(Dedup.shingles(batch, n, hash = hash), cutDir)
         val newBands = Dedup.bandTableOf(newSh, bands, rowsPerBand, cutDir)
-        // distinct: manifest commits make same-batch replays exactly-
-        // once, but a doc RE-DELIVERED by the source in a different
-        // batch would leave duplicate (doc_id, sh) rows that inflate
-        // Jaccard intersection counts until the next compact fold
-        val stateSh = IndexCommit.readBefore(
-          spark, s"$stateDir/sh", batchId, shSchema).distinct()
-        val stateBands = IndexCommit.readBefore(
-          spark, s"$stateDir/bands", batchId, bandSchema).distinct()
-        val pairs = Dedup.incrementalPairsCore(
+        // neither index read is deduplicated whole: duplicate rows (a
+        // doc re-delivered in a later batch) repeat candidates, which
+        // the candidate distinct absorbs, and repeat shingles, which
+        // the verification set's distinct absorbs after the semi-join
+        val stateSh = IndexCommit.readBefore(spark, s"$stateDir/sh", batchId, shSchema)
+        val stateBands = IndexCommit.readBefore(spark, s"$stateDir/bands", batchId, bandSchema)
+        val (pairs, cuts) = Dedup.incrementalPairsCore(
           newSh, newBands, stateBands, threshE3,
-          matchedIds => stateSh.join(broadcast(matchedIds), Seq("doc_id"), "left_semi"))
-        pairs.write.mode("append").parquet(pairsDir)
-        IndexCommit.commitBatch(newBands, s"$stateDir/bands", batchId)
-        IndexCommit.commitBatch(newSh.select(col("doc_id"), col("sh")),
-          s"$stateDir/sh", batchId)
+          matchedIds => stateSh.join(broadcast(matchedIds), Seq("doc_id"), "left_semi"),
+          cutDir)
+        try {
+          pairs.write.mode("append").parquet(pairsDir)
+          IndexCommit.commitBatch(newBands, s"$stateDir/bands", batchId)
+          IndexCommit.commitBatch(newSh.select(col("doc_id"), col("sh")),
+            s"$stateDir/sh", batchId)
+        } finally Checkpoints.release(Seq(newSh, newBands) ++ cuts)
       }
       .start()
   }
@@ -303,8 +308,8 @@ object DocStreams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val hconf = spark.sessionState.newHadoopConf()
-        // layout guard + cross-batch-redelivery distinct: same
-        // rationale as fuzzyIngest above
+        // layout guard: same rationale as fuzzyIngest above; the
+        // distinct reads keep a re-delivered vector from repeating
         Seq(s"$stateDir/vecs" -> "embeddingIngest vector index",
           s"$stateDir/bands" -> "embeddingIngest band index").foreach {
           case (dir, what) =>

@@ -175,10 +175,13 @@ class DedupSpec extends SparkSpec {
     // components: {1,2,3,4} (path), {5,6}, singleton {7}
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L)).toDF("doc_a", "doc_b")
     val verts = (1L to 7L).toDF("doc_id")
-    val cc = Dedup.connectedComponents(pairs, verts)
-    assert(rowSet(cc) === Set(
+    val expected = Set(
       Seq(1L, 1L), Seq(2L, 1L), Seq(3L, 1L), Seq(4L, 1L),
-      Seq(5L, 5L), Seq(6L, 5L), Seq(7L, 7L)))
+      Seq(5L, 5L), Seq(6L, 5L), Seq(7L, 7L))
+    // the one-task union-find (edge cut within the threshold) and the
+    // propagation loop (broadcast off) give the same rows
+    assert(rowSet(Dedup.connectedComponents(pairs, verts)) === expected)
+    assert(shuffled(rowSet(Dedup.connectedComponents(pairs, verts))) === expected)
   }
 
   test("connected components: 64-bit hash-range ids that overflow a Long label sum") {
@@ -191,19 +194,87 @@ class DedupSpec extends SparkSpec {
     // path over the first 10, a 2-clique, and 8 singletons
     val pairs = ids.take(10).sliding(2).map(p => (p(0), p(1))).toSeq ++
       Seq((ids(10), ids(11)))
-    val cc = Dedup.connectedComponents(
-      pairs.toDF("doc_a", "doc_b"), ids.toDF("doc_id"))
+    def cc = rowSet(Dedup.connectedComponents(
+      pairs.toDF("doc_a", "doc_b"), ids.toDF("doc_id")))
     val expected = ids.take(10).map(i => Seq(i, ids.head)) ++
       Seq(Seq(ids(10), ids(10)), Seq(ids(11), ids(10))) ++
       ids.drop(12).map(i => Seq(i, i))
-    assert(rowSet(cc) === expected.toSet)
+    assert(cc === expected.toSet)
+    assert(shuffled(cc) === expected.toSet)
   }
 
   test("connected components: empty pair set leaves every doc a singleton") {
     val pairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     val verts = (1L to 3L).toDF("doc_id")
-    assert(rowSet(Dedup.connectedComponents(pairs, verts)) ===
-      Set(Seq(1L, 1L), Seq(2L, 2L), Seq(3L, 3L)))
+    val expected = Set(Seq(1L, 1L), Seq(2L, 2L), Seq(3L, 3L))
+    assert(rowSet(Dedup.connectedComponents(pairs, verts)) === expected)
+    assert(shuffled(rowSet(Dedup.connectedComponents(pairs, verts))) === expected)
+  }
+
+  test("connected components: endpoints absent from the vertex set take their component's least vertex") {
+    // 2, 3 and 4 are no vertices: they hang off vertex 1 by a path the
+    // labels reach one hop per round, so the labelled set grows while
+    // the label sum rises; {7, 8} holds no vertex, so it has no rows
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 8L), (9L, 10L)).toDF("doc_a", "doc_b")
+    val verts = Seq(1L, 5L, 10L).toDF("doc_id")
+    val expected = Set(Seq(1L, 1L), Seq(2L, 1L), Seq(3L, 1L), Seq(4L, 1L),
+      Seq(5L, 5L), Seq(9L, 10L), Seq(10L, 10L))
+    assert(rowSet(Dedup.connectedComponents(pairs, verts)) === expected)
+    assert(shuffled(rowSet(Dedup.connectedComponents(pairs, verts))) === expected)
+  }
+
+  test("connected components: a curation-sized pair graph runs in at most 3 jobs") {
+    // 1,000 docs with the benchmark corpus's near-dup families: 41
+    // pairs, 4 triples and one family of four, each a clique
+    val fams = (0 until 41).map(i => Seq(10L * i, 10L * i + 1)) ++
+      (0 until 4).map(i => Seq(500L + 10 * i, 501L + 10 * i, 502L + 10 * i)) ++
+      Seq(Seq(900L, 901L, 902L, 903L))
+    val pairs = (for (f <- fams; a <- f; b <- f if a < b) yield (a, b)).toDF("doc_a", "doc_b")
+    val verts = (0L until 1000L).toDF("doc_id")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).map(_.getProperty("spark.job.description")).orNull)
+    }
+    sc.addSparkListener(listener)
+    val cc = try {
+      sc.setJobDescription("cc")
+      try Dedup.connectedComponents(pairs, verts, broadcastLabels = true)
+      finally sc.setJobDescription(null)
+    } finally {
+      // a sentinel job: the listener bus delivers in order, so once it
+      // is seen every job of the call has been counted
+      sc.setJobDescription("sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime + 30L * 1000L * 1000L * 1000L
+      while (!jobs.contains("sentinel") && System.nanoTime < deadline) Thread.sleep(25)
+      sc.removeSparkListener(listener)
+    }
+    val n = jobs.toArray.count(_ == "cc")
+    assert(n <= 3, s"connectedComponents ran $n jobs")
+    val byFamily = fams.flatMap(f => f.map(d => d -> f.min)).toMap
+    assert(rowSet(cc) === (0L until 1000L).map(d => Seq(d, byFamily.getOrElse(d, d))).toSet)
+  }
+
+  test("connected components release their round and edge cuts: only the output's cut stays persisted") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (8L, 9L)).toDF("doc_a", "doc_b")
+    val verts = (1L to 10L).toDF("doc_id")
+    val sc = spark.sparkContext
+    def heldBeyondOutput(run: => DataFrame): Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = run
+      val held = sc.getPersistentRDDs.keySet.toSet -- before
+      val backing = out.queryExecution.logical.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.toSet
+      assert(backing.nonEmpty)
+      assert(rowSet(out).size === 10)
+      held -- backing
+    }
+    // the loop (broadcast off) runs several label rounds on this path
+    assert(shuffled(heldBeyondOutput(Dedup.connectedComponents(pairs, verts))).isEmpty)
+    assert(heldBeyondOutput(Dedup.connectedComponents(pairs, verts)).isEmpty)
   }
 
   test("large-star/small-star: same labels as label propagation on mixed fixtures") {
@@ -212,8 +283,9 @@ class DedupSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 3L), (5L, 6L), (5L, 6L))
       .toDF("doc_a", "doc_b")
     val verts = (1L to 7L).toDF("doc_id")
-    assert(rowSet(Dedup.largeSmallStarComponents(pairs, verts)) ===
-      rowSet(Dedup.connectedComponents(pairs, verts)))
+    val star = rowSet(Dedup.largeSmallStarComponents(pairs, verts))
+    assert(star === rowSet(Dedup.connectedComponents(pairs, verts)))
+    assert(star === shuffled(rowSet(Dedup.connectedComponents(pairs, verts))))
   }
 
   test("large-star/small-star: empty pair set and 64-bit hash-range ids") {
@@ -226,35 +298,49 @@ class DedupSpec extends SparkSpec {
     val ids = (0L until 20L).map(base + _)
     val pairs = ids.take(10).sliding(2).map(p => (p(0), p(1))).toSeq ++
       Seq((ids(10), ids(11)))
-    assert(rowSet(Dedup.largeSmallStarComponents(
-      pairs.toDF("doc_a", "doc_b"), ids.toDF("doc_id"))) ===
-      rowSet(Dedup.connectedComponents(
-        pairs.toDF("doc_a", "doc_b"), ids.toDF("doc_id"))))
+    val star = rowSet(Dedup.largeSmallStarComponents(
+      pairs.toDF("doc_a", "doc_b"), ids.toDF("doc_id")))
+    def cc = rowSet(Dedup.connectedComponents(
+      pairs.toDF("doc_a", "doc_b"), ids.toDF("doc_id")))
+    assert(star === cc)
+    assert(star === shuffled(cc))
   }
 
   test("star fallback under broadcastLabels mode labels a deep path to the min") {
     // the broadcast-rounds variant must hand off to the same
-    // contraction + star path (the fallback is mode-independent)
+    // contraction + star path (the fallback is mode-independent). The
+    // path's edge cut fits the default broadcast threshold, which
+    // would take the one-task union-find: broadcast joins are off here
+    // so the loop runs, and its broadcastLabels hints still apply
     val n = 3000L
     val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val verts = (0L until n).toDF("doc_id")
-    val cc = Dedup.connectedComponents(pairs, verts, maxRounds = 30,
-      broadcastLabels = true)
-    assert(cc.count() === n)
-    assert(cc.filter(col("component_id") =!= 0L).count() === 0L)
+    shuffled {
+      val cc = Dedup.connectedComponents(pairs, verts, maxRounds = 30,
+        broadcastLabels = true)
+      assert(cc.count() === n)
+      assert(cc.filter(col("component_id") =!= 0L).count() === 0L)
+    }
   }
 
   test("star fallback: a path deeper than the propagation budget labels to the min") {
     // a 5000-vertex path needs ~13 pointer-jumping rounds — past
     // StarFallbackRounds (10), so connectedComponents contracts and
     // finishes on the large-star/small-star quotient; every vertex
-    // must still land on the global minimum label
+    // must still land on the global minimum label. Broadcast joins are
+    // off so the loop runs (the path fits the union-find's threshold)
     val n = 5000L
     val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val verts = (0L until n).toDF("doc_id")
-    val cc = Dedup.connectedComponents(pairs, verts, maxRounds = 30)
-    assert(cc.count() === n)
-    assert(cc.filter(col("component_id") =!= 0L).count() === 0L)
+    shuffled {
+      val cc = Dedup.connectedComponents(pairs, verts, maxRounds = 30)
+      assert(cc.count() === n)
+      assert(cc.filter(col("component_id") =!= 0L).count() === 0L)
+    }
+    // the one-task union-find labels the same path in one job
+    val local = Dedup.connectedComponents(pairs, verts, maxRounds = 30)
+    assert(local.count() === n)
+    assert(local.filter(col("component_id") =!= 0L).count() === 0L)
   }
 
   test("exactSpanCoverage: overlapping windows, keep-first, merged islands") {

@@ -119,7 +119,8 @@ object GraftProps extends Properties("graft") {
   }
 
   /** Connected components ≡ a driver-side union-find on random graphs
-    * (min-id representative per component, singletons included).
+    * (min-id representative per component, singletons included), on
+    * both of its paths (broadcast threshold at its default, and off).
     */
   property("connectedComponents equals union-find") =
     forAll(Gen.listOfN(10, Gen.zip(Gen.chooseNum(1L, 8L), Gen.chooseNum(1L, 8L)))) { rawPairs =>
@@ -131,10 +132,11 @@ object GraftProps extends Properties("graft") {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val expected = (1L to 8L).map(i => Seq[Any](i, find(i))).toSet
-      val got = Dedup.connectedComponents(
+      def got = Dedup.connectedComponents(
         pairs.toDF("doc_a", "doc_b"), (1L to 8L).toDF("doc_id"))
         .collect().map(_.toSeq).toSet
-      got == expected
+      // the one-task union-find, then the propagation loop
+      got == expected && TestSpark.shuffled(got) == expected
     }
 
   /** The large-star/small-star edge-rewriting loop (Kiveris et al.)

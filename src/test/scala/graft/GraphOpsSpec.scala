@@ -24,18 +24,6 @@ class GraphOpsSpec extends SparkSpec {
 
   private def docsDf: DataFrame = docs.toDF()
 
-  /** Runs `body` with broadcast joins off — the shuffle leg of the
-    * both-path cases (the broadcast rule reads the same threshold).
-    * Actions belong inside `body`: plans are made when they run.
-    */
-  private def shuffled[T](body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try body
-    finally spark.conf.set(key, prev)
-  }
-
   test("P4: each doc explodes into exactly two directed edges with swapped endpoints") {
     val edges = GraphOps.edgesFromDocs(docsDf)
     assert(edges.count() === 2 * docs.length)
@@ -317,6 +305,10 @@ class GraphOpsSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b")
     val verts = (1L to 7L).toDF("doc_id")
     assert(rowSet(graft.operators.Dedup.connectedComponents(pairs, verts, checkpointDir = ckpt))
+      === rowSet(graft.operators.Dedup.connectedComponents(pairs, verts)))
+    // and the propagation loop's durable cuts (the one-task path above)
+    assert(shuffled(rowSet(graft.operators.Dedup.connectedComponents(
+      pairs, verts, checkpointDir = ckpt)))
       === rowSet(graft.operators.Dedup.connectedComponents(pairs, verts)))
     // durable checkpoint files actually landed under the knob's dir
     assert(spark.sparkContext.getCheckpointDir.exists(_.contains(

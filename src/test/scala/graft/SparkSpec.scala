@@ -27,6 +27,19 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `body` with broadcast joins off
+    * (`spark.sql.autoBroadcastJoinThreshold=-1`) — the shuffle leg of
+    * the both-path cases (the broadcast rule reads the same threshold).
+    * Actions belong inside `body`: plans are made when they run.
+    */
+  def shuffled[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try body
+    finally spark.conf.set(key, prev)
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {
@@ -38,4 +51,6 @@ trait SparkSpec extends AnyFunSuite {
 
   def strings(df: DataFrame, colName: String): Set[String] =
     df.select(colName).collect().map(_.getString(0)).toSet
+
+  def shuffled[T](body: => T): T = TestSpark.shuffled(body)
 }

@@ -624,6 +624,102 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("fuzzy ingest stream: a re-delivered document does not inflate Jaccard") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+      .select("doc_id", "text").as[FixDoc].collect().sortBy(_.doc_id)
+    val batch = rowSet(graft.operators.Dedup.minhashLshPairs(
+      base.toSeq.toDF("doc_id", "text")))
+    val (first, second) = base.splitAt(base.length / 2)
+    val firstIds = first.map(_.doc_id).toSet
+    // three near-dup docs of the first batch arrive again in the second:
+    // their shingles are then both new and in the index
+    val again = batch.toSeq.flatMap(r => Seq(r(0), r(1))).collect { case id: Long => id }
+      .filter(firstIds).distinct.sorted.take(3).toSet
+    assert(again.size === 3, "fixture should hold near-dups in the first batch")
+    val dirs = java.nio.file.Files.createTempDirectory("graft_fuzzy_redeliver").toString
+    val in = MemoryStream[FixDoc]
+    val q = graft.streaming.DocStreams.fuzzyIngest(
+      in.toDF(), s"$dirs/state", s"$dirs/pairs", s"$dirs/ckpt")
+    try {
+      Seq(first, second ++ first.filter(d => again(d.doc_id))).foreach { chunk =>
+        in.addData(chunk.toSeq)
+        q.processAllAvailable()
+      }
+      val streamed = rowSet(spark.read.parquet(s"$dirs/pairs"))
+      assert(streamed.forall(_(2).asInstanceOf[Long] <= 1000L), s"Jaccard over 1: $streamed")
+      // the re-delivered docs' pairs come again, with the same Jaccard
+      assert(streamed === batch)
+    } finally q.stop()
+  }
+
+  test("fuzzy ingest stream: no Exchange above the band-index scan") {
+    // per batch the work is batch-sized: the band join streams the
+    // index, which is never deduplicated, shuffled or broadcast whole.
+    // The batch's frames run behind cuts and writes, so every executed
+    // plan is captured
+    implicit val sqlCtx = spark.sqlContext
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+
+    val base = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+      .select("doc_id", "text").as[FixDoc].collect().sortBy(_.doc_id)
+    val dirs = java.nio.file.Files.createTempDirectory("graft_fuzzy_plan").toString
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the stream runs its batches on a clone of the session, which
+    // takes the listeners registered when the query starts
+    spark.listenerManager.register(listener)
+    val in = MemoryStream[FixDoc]
+    val q = graft.streaming.DocStreams.fuzzyIngest(
+      in.toDF(), s"$dirs/state", s"$dirs/pairs", s"$dirs/ckpt")
+    val sentinel = 987654502L
+    try {
+      in.addData(base.take(base.length / 2).toSeq)
+      q.processAllAvailable()
+      in.addData(base.drop(base.length / 2).toSeq)
+      q.processAllAvailable()
+      spark.range(sentinel, sentinel + 1).collect()
+      val deadline = System.nanoTime + 30L * 1000L * 1000L * 1000L
+      while (!plans.asScala.exists(_.toString.contains(sentinel.toString)) &&
+          System.nanoTime < deadline) Thread.sleep(25)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      q.stop()
+    }
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case st: QueryStageExec => Seq(st.plan)
+      case other => other.children
+    }
+    def isBandScan(p: SparkPlan) = p match {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.toString.contains(s"$dirs/state/bands"))
+      case _ => false
+    }
+    // band-index scans under an Exchange with no join between them
+    def exchanged(p: SparkPlan, under: Option[SparkPlan]): Seq[SparkPlan] = p match {
+      case f if isBandScan(f) => under.toSeq
+      case _: BaseJoinExec => kids(p).flatMap(exchanged(_, None))
+      case e: Exchange => kids(p).flatMap(exchanged(_, Some(e)))
+      case _ => kids(p).flatMap(exchanged(_, under))
+    }
+    def scans(p: SparkPlan): Int = (if (isBandScan(p)) 1 else 0) + kids(p).map(scans).sum
+    val ps = plans.asScala.toList
+    assert(ps.map(scans).sum > 0, "no band-index scan captured - capture broken?")
+    val bad = ps.flatMap(exchanged(_, None))
+    assert(bad.isEmpty, s"Exchange above the band-index scan:\n${bad.mkString("\n")}")
+  }
+
   test("bloom ingest stream: verdicts twin the batch probe, final sketch = whole-corpus build") {
     implicit val sqlCtx = spark.sqlContext
     val base = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
