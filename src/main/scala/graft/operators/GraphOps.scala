@@ -207,7 +207,6 @@ object GraphOps {
     */
   def bfsDepths(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
       checkpointEvery: Int = 4, materializeEdges: Boolean = true,
-      broadcastFrontier: Boolean = false,
       checkpointDir: Option[String] = None): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     val pairs = edges.select(col("src"), col("dst"))
@@ -216,23 +215,11 @@ object GraphOps {
       .withColumn("depth", lit(0L))
     var frontier = visited.select(col("person_id"))
     for (hop <- 1 to maxDepth) {
-      // frontier and visited are vertex-sized: with broadcastFrontier
-      // the expand and the already-visited anti join plan no edge-side
-      // exchange — a hop's only shuffle is the frontier distinct. Use
-      // it when frontiers stay SMALL relative to the edge partitions
-      // (seeded reachability on sparse graphs); on dense graphs where
-      // one hop reaches most vertices, re-broadcasting the visited set
-      // per hop loses to the shuffle join (measured on the bench
-      // fixture: 2.8s broadcast vs 2.1s shuffle at sf0.1)
-      val fIn = if (broadcastFrontier) broadcast(frontier) else frontier
       val next = e
-        .join(fIn, e("src") === fIn("person_id"))
+        .join(frontier, e("src") === frontier("person_id"))
         .select(e("dst").as("person_id"))
         .distinct()
-        .join(
-          if (broadcastFrontier) broadcast(visited.select(col("person_id")))
-          else visited.select(col("person_id")),
-          Seq("person_id"), "left_anti")
+        .join(visited.select(col("person_id")), Seq("person_id"), "left_anti")
       visited = visited.union(
         next.select(col("person_id"), lit(hop.toLong).as("depth")))
       frontier = next
@@ -719,9 +706,9 @@ object GraphOps {
     * SQL oracle unrolls the same rounds); once a round removes nothing
     * the result IS the exact k-core. `rounds = -1`: iterate to the
     * FIXPOINT — the exact k-core regardless of graph diameter (chases
-    * chains the fixed-round form truncates). Convergence rides the
-    * per-round checkpoint job via `observe` on the surviving edge
-    * count, the [[Dedup.connectedComponents]] pattern: the count only
+    * chains the fixed-round form truncates). Convergence reads the
+    * surviving edge count off the round's cut ([[Checkpoints.rows]],
+    * counted by the cut's own materialization job): the count only
     * decreases, so an unchanged count ⇔ no vertex fell below `k` ⇔
     * fixpoint — no extra count job per round. Output: each surviving
     * vertex with its degree in the remaining subgraph.

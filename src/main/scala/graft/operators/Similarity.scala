@@ -1635,7 +1635,8 @@ object Similarity {
     val newBands = bandTable(newEmbeddings, bands, rowsPerBand, checkpointDir)
     incrementalPairsCoreEmb(newQ, newBands, corpusBands, cosE6,
       matchedIds => withQuant(
-        corpus.join(broadcast(matchedIds), Seq("vec_id"), "left_semi")))
+        corpus.join(broadcast(matchedIds), Seq("vec_id"), "left_semi")),
+      checkpointDir)._1
   }
 
   /** Shared incremental-LSH core for embeddings: candidates from
@@ -1646,27 +1647,45 @@ object Similarity {
     * state for the streaming form). The candidate/verify discipline
     * of [[cosineNearDupPairs]]'s blocked branch, restricted to
     * new-touching pairs.
+    *
+    * Each batch frame is computed once, as in
+    * [[Dedup.incrementalPairsCore]]: the candidate pairs are cut and
+    * the matched ids come off that cut in one pass; the verification
+    * vectors (matched new ∪ matched corpus, one row per id) are cut
+    * for their two readers. The index side of the band join is neither
+    * deduplicated nor shuffled (duplicate index rows only repeat
+    * candidates, which the candidate `distinct` absorbs), and the new
+    * bands take the broadcast rule, so the join streams the index.
+    *
+    * Returns the pairs and the cuts made here; the caller releases the
+    * cuts once the pairs are written.
     */
   private[graft] def incrementalPairsCoreEmb(
       newQ: DataFrame,
       newBands: DataFrame,
       corpusBands: DataFrame,
       cosE6: Long,
-      corpusQOf: DataFrame => DataFrame): DataFrame = {
+      corpusQOf: DataFrame => DataFrame,
+      cutDir: Option[String]): (DataFrame, Seq[DataFrame]) = {
     val l = corpusBands.unionByName(newBands)
       .select(col("vec_id").as("id_a"), col("band"), col("bucket"))
-    val r = newBands.select(col("vec_id").as("id_b"), col("band"), col("bucket"))
+    val r = Checkpoints.broadcastRule(newBands)(
+      newBands.select(col("vec_id").as("id_b"), col("band"), col("bucket")))
     // normalize (min, max): new↔new collisions arrive in both orders,
     // new↔corpus in one — distinct collapses them either way
-    val cands = l.join(r, Seq("band", "bucket"))
-      .filter(col("id_a") =!= col("id_b"))
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-      .distinct()
-    val matchedIds = cands.select(col("id_a").as("vec_id"))
-      .union(cands.select(col("id_b").as("vec_id"))).distinct()
-    val vecs = newQ.unionByName(corpusQOf(matchedIds)).dropDuplicates("vec_id")
-    cands
+    val cands = Checkpoints.cut(
+      l.join(r, Seq("band", "bucket"))
+        .filter(col("id_a") =!= col("id_b"))
+        .select(least(col("id_a"), col("id_b")).as("id_a"),
+          greatest(col("id_a"), col("id_b")).as("id_b"))
+        .distinct(), cutDir)
+    val matchedIds = cands
+      .select(explode(array(col("id_a"), col("id_b"))).as("vec_id")).distinct()
+    val vecs = Checkpoints.cut(
+      newQ.join(broadcast(matchedIds), Seq("vec_id"), "left_semi")
+        .unionByName(corpusQOf(matchedIds))
+        .dropDuplicates("vec_id"), cutDir)
+    val pairs = cands
       .join(vecs.select(col("vec_id").as("id_a"), col("q").as("q_a"), col("nq").as("n_a")),
         Seq("id_a"))
       .join(vecs.select(col("vec_id").as("id_b"), col("q").as("q_b"), col("nq").as("n_b")),
@@ -1677,6 +1696,7 @@ object Similarity {
         (col("n_a").cast("double") * col("n_b").cast("double")).as("nn"))
       .filter(col("dot_q").cast("double") >= lit(cosE6.toDouble / 1e6) * sqrt(col("nn")))
       .select(col("id_a"), col("id_b"), col("dot_q"))
+    (pairs, Seq(cands, vecs))
   }
 
   /** SemDeDup-shaped semantic dedup: partition the corpus into k-means

@@ -900,11 +900,21 @@ object TextOps {
       min(when(col("cum") * 3 >= col("n") * 2, col("s"))).as("t2"))
     scored.crossJoin(broadcast(th)).select(
       col("doc_id"), col("n_trigrams"), col("bits_per_trigram_e3"),
-      when(col("n_trigrams") === 0, "tail")
-        .when(col("bits_per_trigram_e3") <= col("t1"), "head")
-        .when(col("bits_per_trigram_e3") <= col("t2"), "middle")
-        .otherwise("tail").as("bucket"))
+      pplBucket(col("t1"), col("t2")).as("bucket"))
   }
+
+  /** The head/middle/tail label of a trigram-LM-scored row
+    * (`n_trigrams`, `bits_per_trigram_e3`) against tercile thresholds
+    * `t1 <= t2`: at most `t1` is head, at most `t2` middle, the rest
+    * and every unscorable (0-trigram) doc tail. [[pplBuckets]] passes
+    * the thresholds it derives; a streaming screen passes frozen
+    * literals.
+    */
+  def pplBucket(t1: Column, t2: Column): Column =
+    when(col("n_trigrams") === 0, "tail")
+      .when(col("bits_per_trigram_e3") <= t1, "head")
+      .when(col("bits_per_trigram_e3") <= t2, "middle")
+      .otherwise("tail")
 
   /** Self-trained multinomial Naive-Bayes SOURCE classifier — the
     * fastText-shaped quality/domain-classifier stage of a curation

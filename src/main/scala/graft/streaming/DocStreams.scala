@@ -107,47 +107,39 @@ object DocStreams {
     val shSchema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("sh", LongType, nullable = false)))
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sessionState.newHadoopConf()
-        // layout guard, like spanIngest/lineIngest/webIngest: a
-        // pre-manifest (plain-append) state dir would otherwise read
-        // as an EMPTY index and dedup against nothing
-        Seq(s"$stateDir/bands" -> "fuzzyIngest band index",
-          s"$stateDir/sh" -> "fuzzyIngest shingle index").foreach {
-          case (dir, what) =>
-            val p = new org.apache.hadoop.fs.Path(dir)
-            IndexCommit.requireManifestLayout(p.getFileSystem(hconf), p, what)
-        }
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-          IndexCommit.fold(spark, s"$stateDir/bands", batchId, bandSchema,
-            _.distinct())
-          IndexCommit.fold(spark, s"$stateDir/sh", batchId, shSchema,
-            _.distinct())
-        }
-        val newSh = Checkpoints.cut(Dedup.shingles(batch, n, hash = hash), cutDir)
-        val newBands = Dedup.bandTableOf(newSh, bands, rowsPerBand, cutDir)
-        // neither index read is deduplicated whole: duplicate rows (a
-        // doc re-delivered in a later batch) repeat candidates, which
-        // the candidate distinct absorbs, and repeat shingles, which
-        // the verification set's distinct absorbs after the semi-join
-        val stateSh = IndexCommit.readBefore(spark, s"$stateDir/sh", batchId, shSchema)
-        val stateBands = IndexCommit.readBefore(spark, s"$stateDir/bands", batchId, bandSchema)
-        val (pairs, cuts) = Dedup.incrementalPairsCore(
-          newSh, newBands, stateBands, threshE3,
-          matchedIds => stateSh.join(broadcast(matchedIds), Seq("doc_id"), "left_semi"),
-          cutDir)
-        try {
-          pairs.write.mode("append").parquet(pairsDir)
-          IndexCommit.commitBatch(newBands, s"$stateDir/bands", batchId)
-          IndexCommit.commitBatch(newSh.select(col("doc_id"), col("sh")),
-            s"$stateDir/sh", batchId)
-        } finally Checkpoints.release(Seq(newSh, newBands) ++ cuts)
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      // neither index read is deduplicated whole: duplicate rows (a
+      // doc re-delivered in a later batch) repeat candidates, which
+      // the candidate distinct absorbs, and repeat shingles, which
+      // the verification set's distinct absorbs after the semi-join
+      val stateBands = IndexCommit.openBefore(batch.sparkSession,
+        s"$stateDir/bands", batchId, bandSchema, compactEvery, "fuzzyIngest band index")
+      val stateSh = IndexCommit.openBefore(batch.sparkSession,
+        s"$stateDir/sh", batchId, shSchema, compactEvery, "fuzzyIngest shingle index")
+      val newSh = Checkpoints.cut(Dedup.shingles(batch, n, hash = hash), cutDir)
+      val newBands = Dedup.bandTableOf(newSh, bands, rowsPerBand, cutDir)
+      val (pairs, cuts) = Dedup.incrementalPairsCore(
+        newSh, newBands, stateBands, threshE3,
+        matchedIds => stateSh.join(broadcast(matchedIds), Seq("doc_id"), "left_semi"),
+        cutDir)
+      try {
+        pairs.write.mode("append").parquet(pairsDir)
+        IndexCommit.commitBatch(newBands, s"$stateDir/bands", batchId)
+        IndexCommit.commitBatch(newSh.select(col("doc_id"), col("sh")),
+          s"$stateDir/sh", batchId)
+      } finally Checkpoints.release(Seq(newSh, newBands) ++ cuts)
+    }
   }
+
+  /** Run `body` on every micro-batch of `input` (foreachBatch), with
+    * the streaming offsets/commits under `checkpointDir`.
+    */
+  private def eachBatch(input: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    input.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(body)
+      .start()
 
   /** Continuous Bloom-admission ingest — the streaming face of
     * [[Dedup.bloomBuild]] / [[Dedup.bloomMightContain]] and the cheap
@@ -209,59 +201,56 @@ object DocStreams {
       StructField("bits", LongType, nullable = false)))
     val nWords = (m + 62L) / 63L
     val root = s"$stateDir/bloom"
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val rootP = new org.apache.hadoop.fs.Path(root)
-        val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
-        IndexCommit.requireManifestLayout(fs, rootP, "bloomIngest sketch store")
-        // the pre-r17 sketch lived at $stateDir/bloom_v<N>, NOT under
-        // the new root — a guard on the (absent) new root alone would
-        // pass and the resumed stream would silently restart from an
-        // empty sketch, flipping every probe verdict to 'unseen'
-        val parentP = new org.apache.hadoop.fs.Path(stateDir)
-        if (fs.exists(parentP)) {
-          val legacy = fs.listStatus(parentP).map(_.getPath.getName)
-            .filter(_.matches("bloom_v\\d+"))
-          require(legacy.isEmpty,
-            s"bloomIngest: '$stateDir' holds legacy sketch dirs " +
-              s"${legacy.sorted.mkString(", ")} — migrate the newest " +
-              "(read it, commitBatch it as one cumulative segment under " +
-              s"'$root') before resuming.")
-        }
-        // the newest committed snapshot STRICTLY BEFORE this batch: a
-        // replay of batch b must not probe b's own snapshot
-        val state = IndexCommit.readLatestBefore(
-            spark, root, batchId, wordSchema) match {
-          case Some(df) =>
-            // the dense-table contract, checked at the stream boundary
-            // too: a state dir built with a LARGER m would otherwise
-            // cover every probe word and silently false-negative (the
-            // batch operators only detect the smaller-build direction)
-            val stateWords = df.count()
-            require(stateWords == nWords,
-              s"bloomIngest: committed sketch has $stateWords words, " +
-                s"expected $nWords - stateDir was built with a different m")
-            df
-          case None => Dedup.bloomBuild(batch.limit(0), m, k, hash = hash)
-        }
-        val cached = batch.select(col("doc_id"), col("text")).cache()
-        try {
-          Dedup.bloomMightContain(cached, state, m, k, hash = hash)
-            .write.mode("append").parquet(outDir)
-          val merged = state
-            .unionByName(Dedup.bloomBuild(cached, m, k, hash = hash))
-            .groupBy(col("word_idx"))
-            .agg(expr("bit_or(bits)").as("bits"))
-            .collect()
-          IndexCommit.commitBatch(
-            spark.createDataFrame(
-              spark.sparkContext.parallelize(merged.toSeq, 1), wordSchema),
-            root, batchId, cumulative = true)
-        } finally cached.unpersist(blocking = false)
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val rootP = new org.apache.hadoop.fs.Path(root)
+      val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
+      IndexCommit.requireManifestLayout(fs, rootP, "bloomIngest sketch store")
+      // the pre-r17 sketch lived at $stateDir/bloom_v<N>, NOT under
+      // the new root — a guard on the (absent) new root alone would
+      // pass and the resumed stream would silently restart from an
+      // empty sketch, flipping every probe verdict to 'unseen'
+      val parentP = new org.apache.hadoop.fs.Path(stateDir)
+      if (fs.exists(parentP)) {
+        val legacy = fs.listStatus(parentP).map(_.getPath.getName)
+          .filter(_.matches("bloom_v\\d+"))
+        require(legacy.isEmpty,
+          s"bloomIngest: '$stateDir' holds legacy sketch dirs " +
+            s"${legacy.sorted.mkString(", ")} — migrate the newest " +
+            "(read it, commitBatch it as one cumulative segment under " +
+            s"'$root') before resuming.")
       }
-      .start()
+      // the newest committed snapshot STRICTLY BEFORE this batch: a
+      // replay of batch b must not probe b's own snapshot
+      val state = IndexCommit.readLatestBefore(
+          spark, root, batchId, wordSchema) match {
+        case Some(df) =>
+          // the dense-table contract, checked at the stream boundary
+          // too: a state dir built with a LARGER m would otherwise
+          // cover every probe word and silently false-negative (the
+          // batch operators only detect the smaller-build direction)
+          val stateWords = df.count()
+          require(stateWords == nWords,
+            s"bloomIngest: committed sketch has $stateWords words, " +
+              s"expected $nWords - stateDir was built with a different m")
+          df
+        case None => Dedup.bloomBuild(batch.limit(0), m, k, hash = hash)
+      }
+      val cached = batch.select(col("doc_id"), col("text")).cache()
+      try {
+        Dedup.bloomMightContain(cached, state, m, k, hash = hash)
+          .write.mode("append").parquet(outDir)
+        val merged = state
+          .unionByName(Dedup.bloomBuild(cached, m, k, hash = hash))
+          .groupBy(col("word_idx"))
+          .agg(expr("bit_or(bits)").as("bits"))
+          .collect()
+        IndexCommit.commitBatch(
+          spark.createDataFrame(
+            spark.sparkContext.parallelize(merged.toSeq, 1), wordSchema),
+          root, batchId, cumulative = true)
+      } finally cached.unpersist(blocking = false)
+    }
   }
 
   /** Continuous embedding ingest — the streaming twin of
@@ -273,9 +262,12 @@ object DocStreams {
     * own bands/vectors to the index.
     *
     * Per batch the work is batch-sized: only the new vectors quantize
-    * and band, the band join probes the index on 24-byte keys, and
-    * only colliding corpus vectors' quantized rows are read back for
-    * exact cosine verification. Under any batch composition the
+    * and band, the band join streams the index past the new bands
+    * (the index is never deduplicated or shuffled), and only
+    * colliding corpus vectors' quantized rows are read back for exact
+    * cosine verification. The quantized batch, its bands, the
+    * candidate pairs and the verification vectors are each cut once
+    * and released when the batch commits. Under any batch composition the
     * accumulated pair set equals the batch
     * [[graft.operators.Similarity.cosineNearDupPairs]] blocked run
     * over the full corpus (every pair is new-touching when its later
@@ -303,37 +295,30 @@ object DocStreams {
     val vecSchema = StructType(Seq(
       StructField("vec_id", LongType, nullable = false),
       StructField("q", org.apache.spark.sql.types.ArrayType(LongType), nullable = true)))
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sessionState.newHadoopConf()
-        // layout guard: same rationale as fuzzyIngest above; the
-        // distinct reads keep a re-delivered vector from repeating
-        Seq(s"$stateDir/vecs" -> "embeddingIngest vector index",
-          s"$stateDir/bands" -> "embeddingIngest band index").foreach {
-          case (dir, what) =>
-            val p = new org.apache.hadoop.fs.Path(dir)
-            IndexCommit.requireManifestLayout(p.getFileSystem(hconf), p, what)
-        }
-        val sim = graft.operators.Similarity
-        val newQ = graft.operators.Checkpoints.cut(sim.withQuant(batch), cutDir)
-        val newBands = sim.bandTable(batch, bands, rowsPerBand, cutDir)
-        val stateVecs = IndexCommit.readBefore(
-          spark, s"$stateDir/vecs", batchId, vecSchema).distinct()
-        val stateBands = IndexCommit.readBefore(
-          spark, s"$stateDir/bands", batchId, bandSchema).distinct()
-        val pairs = sim.incrementalPairsCoreEmb(
-          newQ, newBands, stateBands, cosE6,
-          matchedIds => stateVecs
-            .join(broadcast(matchedIds), Seq("vec_id"), "left_semi")
-            .withColumn("nq", sim.normQ(col("q"))))
+    val sim = graft.operators.Similarity
+    eachBatch(vecs, checkpointDir) { (batch, batchId) =>
+      // neither index read is deduplicated whole (the fuzzyIngest
+      // rule): the candidate distinct and the verification set's
+      // dropDuplicates absorb a re-delivered vector's repeated rows
+      val stateBands = IndexCommit.openBefore(batch.sparkSession,
+        s"$stateDir/bands", batchId, bandSchema, 0, "embeddingIngest band index")
+      val stateVecs = IndexCommit.openBefore(batch.sparkSession,
+        s"$stateDir/vecs", batchId, vecSchema, 0, "embeddingIngest vector index")
+      val newQ = Checkpoints.cut(sim.withQuant(batch), cutDir)
+      val newBands = sim.bandTable(batch, bands, rowsPerBand, cutDir)
+      val (pairs, cuts) = sim.incrementalPairsCoreEmb(
+        newQ, newBands, stateBands, cosE6,
+        matchedIds => stateVecs
+          .join(broadcast(matchedIds), Seq("vec_id"), "left_semi")
+          .withColumn("nq", sim.normQ(col("q"))),
+        cutDir)
+      try {
         pairs.write.mode("append").parquet(pairsDir)
         IndexCommit.commitBatch(newBands, s"$stateDir/bands", batchId)
         IndexCommit.commitBatch(newQ.select(col("vec_id"), col("q")),
           s"$stateDir/vecs", batchId)
-      }
-      .start()
+      } finally Checkpoints.release(Seq(newQ, newBands) ++ cuts)
+    }
   }
 
   /** Continuous heavy-hitter tokens per source — a Misra-Gries
@@ -485,312 +470,55 @@ object DocStreams {
       m.collect { case (t, c) if c - d > 0 => t -> (c - d) }
     }
 
-  /** Stream-static NB classification: score each micro-batch of
-    * documents against a FROZEN batch-trained model
-    * ([[graft.operators.TextOps.nbTrain]], typically `.materialized`
-    * to parquet so the training plan never re-executes) with the batch
-    * scorer — the train-once / score-forever deployment of the
-    * curation classifier, where the crawl stream is filtered by a
-    * model fitted on last month's corpus. Per batch the work is
-    * batch-sized: token instances probe the count table by 8-byte
-    * keys and the candidate grid broadcasts, exactly the
-    * [[graft.operators.TextOps.nbScore]] plan.
+  /** Stream-static scoring: apply a batch scorer to each micro-batch
+    * of `input` and write its rows to `outDir` with
+    * [[writeBatchPartition]]. `score` is the batch operator itself,
+    * closed over a FROZEN artifact built once offline (typically
+    * `.materialized` to parquet so its training or build plan never
+    * re-executes) — the train-once / score-forever deployment:
     *
-    * Retry semantics: exactly-once by partition. Each micro-batch's
-    * scores land in a `batch_id=<epoch>` partition written with
-    * dynamic partition overwrite, so a replayed batch REPLACES its own
-    * partition instead of appending duplicate rows — row counts, not
-    * just row sets, survive a retry. Consumers that don't care about
-    * provenance just don't select `batch_id`.
+    *  - classifiers: `TextOps.nbScore(_, nbModel)`,
+    *    `TextOps.linearScore(_, linearModel)`,
+    *    `TextOps.logisticScore(_, logisticModel)` (each model carries
+    *    its own hash tier and bucket count, so the scorer cannot
+    *    mis-fold a probe);
+    *  - retrieval: `Similarity.ivfProbe(ivfIndex, _, nProbe, k)`,
+    *    `Similarity.graphProbe(graphIndex, _, k, beam, rounds, seedProbes)`;
+    *  - the CCNet perplexity screen:
+    *    `TextOps.trigramLmScoreWith(_, lmModel).withColumn("bucket",
+    *    TextOps.pplBucket(lit(t1E3), lit(t2E3)))`, with the tercile
+    *    thresholds frozen from an offline [[graft.operators.TextOps.pplBuckets]]
+    *    run (CCNet computes its cutoffs once on the reference
+    *    distribution, not per shard).
+    *
+    * Per batch the work is the batch scorer's plan over the batch, so
+    * the union of the stream's output equals the scorer over the
+    * whole input (StreamingSpec law, one case per scorer above).
+    * Retry semantics: exactly-once by partition (see
+    * [[writeBatchPartition]]).
     */
-  def nbClassifyStream(
-      docs: DataFrame,
-      model: graft.operators.TextOps.NbModel,
-      outDir: String,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeScoredBatch(batch, model, outDir, batchId)
-      }
-      .start()
+  def scoreStream(input: DataFrame, outDir: String, checkpointDir: String)(
+      score: DataFrame => DataFrame): StreamingQuery =
+    eachBatch(input, checkpointDir) { (batch, batchId) =>
+      writeBatchPartition(score(batch), outDir, batchId)
+    }
 
-  /** One [[nbClassifyStream]] micro-batch write — the replay-
-    * idempotence seam (a retried foreachBatch invocation re-runs this
-    * with the SAME batchId and must leave the sink unchanged).
+  /** The one sink of the batch-partitioned streams ([[scoreStream]],
+    * [[spanIngest]], [[lineIngest]], [[webIngest]]) and their replay-
+    * idempotence seam: `rows` land in the `batch_id=<batchId>`
+    * partition of `outDir`, written with dynamic partition overwrite,
+    * so a replayed batch (a foreachBatch retry re-runs with the SAME
+    * batchId) REPLACES its own partition instead of appending
+    * duplicate rows — row counts, not just row sets, survive a retry.
+    * Consumers that don't care about provenance just don't select
+    * `batch_id`.
     */
-  private[graft] def writeScoredBatch(
-      batch: DataFrame,
-      model: graft.operators.TextOps.NbModel,
-      outDir: String,
+  private[graft] def writeBatchPartition(rows: DataFrame, outDir: String,
       batchId: Long): Unit = {
     val p = new org.apache.hadoop.fs.Path(outDir)
     requireBatchPartitionedDir(
-      p.getFileSystem(batch.sparkSession.sessionState.newHadoopConf()), p,
-      "nbClassifyStream sink")
-    // the model carries its own hash tier — a scorer-side tier
-    // could silently mismatch the trained count table
-    graft.operators.TextOps.nbScore(batch, model)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
-  }
-
-  /** Stream-static hashed-LINEAR classification — [[nbClassifyStream]]
-    * with the frozen [[graft.operators.TextOps.LinearModel]] (the
-    * fastText-grade one-vs-rest odds scorer): score each micro-batch
-    * against a batch-trained, typically `.materialized` model with the
-    * batch scorer. Per batch the work is batch-sized — hashed
-    * unigram+bigram buckets probe the (cand, bucket) count table on
-    * 16-byte keys, the candidate grid broadcasts — exactly the
-    * [[graft.operators.TextOps.linearScore]] plan.
-    *
-    * Retry semantics: identical to [[nbClassifyStream]] —
-    * exactly-once by `batch_id=<epoch>` dynamic partition overwrite.
-    */
-  /** Stream-static ANN serving — the retrieval-tier face of the
-    * [[nbClassifyStream]] train-once/score-forever contract: probe
-    * each micro-batch of query vectors `(vec_id, embedding)` against
-    * a FROZEN [[graft.operators.Similarity.IvfIndex]] (built once
-    * with `ivfBuild`, typically `.materialized` to parquet so the
-    * k-means/assignment plans never re-execute) with the batch probe.
-    * Per batch the work is batch-sized: queries route to their
-    * `nProbe` cells against the broadcast centroid table, candidates
-    * join on the cell id, and the per-query partial top-k
-    * (WindowGroupLimit) keeps k rows per partition.
-    *
-    * Retry semantics: identical to [[nbClassifyStream]] —
-    * exactly-once by `batch_id=<epoch>` dynamic partition overwrite.
-    */
-  def annSearchStream(
-      queries: DataFrame,
-      index: graft.operators.Similarity.IvfIndex,
-      outDir: String,
-      checkpointDir: String,
-      nProbe: Int = 4,
-      k: Int = 5): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeAnnBatch(batch, index, outDir, batchId, nProbe, k)
-      }
-      .start()
-
-  /** One [[annSearchStream]] micro-batch write — the replay-
-    * idempotence seam.
-    */
-  private[graft] def writeAnnBatch(
-      batch: DataFrame,
-      index: graft.operators.Similarity.IvfIndex,
-      outDir: String,
-      batchId: Long,
-      nProbe: Int,
-      k: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(outDir)
-    requireBatchPartitionedDir(
-      p.getFileSystem(batch.sparkSession.sessionState.newHadoopConf()), p,
-      "annSearchStream sink")
-    graft.operators.Similarity.ivfProbe(index, batch, nProbe, k)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
-  }
-
-  /** Stream-static beam search over a frozen
-    * [[graft.operators.Similarity.GraphIndex]] — [[annSearchStream]]'s
-    * twin for the graph-navigable tier (the engine's highest-recall
-    * retrieval path, RECALL.md). Each micro-batch of query vectors
-    * probes the prebuilt kNN graph via
-    * [[graft.operators.Similarity.graphProbe]]: LSH-bucket (+
-    * `seedProbes` multi-probe flips) seeds → `rounds` of
-    * expand-and-rerank, all against the FROZEN graph + corpus frames —
-    * the graph build (the only corpus-sized cost) never re-runs.
-    * Retry semantics: exactly-once by `batch_id=<epoch>` dynamic
-    * partition overwrite (the [[annSearchStream]] contract).
-    */
-  def graphSearchStream(
-      queries: DataFrame,
-      index: graft.operators.Similarity.GraphIndex,
-      outDir: String,
-      checkpointDir: String,
-      k: Int = 5,
-      beam: Int = 8,
-      rounds: Int = 2,
-      seedProbes: Int = 0): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeGraphSearchBatch(batch, index, outDir, batchId, k, beam,
-          rounds, seedProbes)
-      }
-      .start()
-
-  /** One [[graphSearchStream]] micro-batch write — the replay-
-    * idempotence seam, mirroring [[writeAnnBatch]]. No checkpoint cut:
-    * a micro-batch's `rounds`-deep lineage over frozen frames is
-    * shallow by construction.
-    */
-  private[graft] def writeGraphSearchBatch(
-      batch: DataFrame,
-      index: graft.operators.Similarity.GraphIndex,
-      outDir: String,
-      batchId: Long,
-      k: Int,
-      beam: Int,
-      rounds: Int,
-      seedProbes: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(outDir)
-    requireBatchPartitionedDir(
-      p.getFileSystem(batch.sparkSession.sessionState.newHadoopConf()), p,
-      "graphSearchStream sink")
-    graft.operators.Similarity.graphProbe(index, batch, k, beam, rounds,
-      seedProbes)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
-  }
-
-  def linearClassifyStream(
-      docs: DataFrame,
-      model: graft.operators.TextOps.LinearModel,
-      outDir: String,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeLinearScoredBatch(batch, model, outDir, batchId)
-      }
-      .start()
-
-  /** One [[linearClassifyStream]] micro-batch write — the
-    * replay-idempotence seam, mirroring [[writeScoredBatch]].
-    */
-  private[graft] def writeLinearScoredBatch(
-      batch: DataFrame,
-      model: graft.operators.TextOps.LinearModel,
-      outDir: String,
-      batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(outDir)
-    requireBatchPartitionedDir(
-      p.getFileSystem(batch.sparkSession.sessionState.newHadoopConf()), p,
-      "linearClassifyStream sink")
-    // the model carries its hash tier AND bucket count — either
-    // changed scorer-side would silently mis-fold every probe
-    graft.operators.TextOps.linearScore(batch, model)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
-  }
-
-  /** Stream-static TRAINED-LOGISTIC classification —
-    * [[linearClassifyStream]] with the frozen
-    * [[graft.operators.TextOps.LogisticModel]] (the gradient-trained
-    * one-vs-rest scorer): each micro-batch scores through the batch
-    * scorer's sparse-weight probe plan. Training stays a batch job
-    * (the full-batch epochs need the whole corpus); streaming only
-    * ever SCORES — the frozen-model contract all three classifier
-    * twins share. Retry semantics: exactly-once by
-    * `batch_id=<epoch>` dynamic partition overwrite.
-    */
-  def logisticClassifyStream(
-      docs: DataFrame,
-      model: graft.operators.TextOps.LogisticModel,
-      outDir: String,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeLogisticScoredBatch(batch, model, outDir, batchId)
-      }
-      .start()
-
-  /** One [[logisticClassifyStream]] micro-batch write — the
-    * replay-idempotence seam, mirroring [[writeLinearScoredBatch]].
-    */
-  private[graft] def writeLogisticScoredBatch(
-      batch: DataFrame,
-      model: graft.operators.TextOps.LogisticModel,
-      outDir: String,
-      batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(outDir)
-    requireBatchPartitionedDir(
-      p.getFileSystem(batch.sparkSession.sessionState.newHadoopConf()), p,
-      "logisticClassifyStream sink")
-    graft.operators.TextOps.logisticScore(batch, model)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
-  }
-
-  /** Streaming PERPLEXITY screen — CCNet at ingest: score each
-    * micro-batch against a FROZEN
-    * [[graft.operators.TextOps.TrigramLmModel]] (trained offline on
-    * the reference corpus, typically `.materialized`) with the batch
-    * scorer, and label head/middle/tail against FROZEN tercile
-    * thresholds (`t1E3`/`t2E3`, taken from an offline
-    * [[graft.operators.TextOps.pplBuckets]] run — CCNet computes its
-    * cutoffs on the reference distribution once, not per shard). This
-    * is the missing streaming face of the LM-screen tier: the
-    * classifier screens got their stream twins in r16
-    * ([[linearClassifyStream]]), the LM screen gets its here.
-    *
-    * Per batch the work is batch-sized: one fused shingle scan +
-    * vocabulary-sized hash-key probes — exactly the
-    * [[graft.operators.TextOps.trigramLmScoreWith]] plan plus one
-    * literal-threshold CASE. Stateless; exactly-once by `batch_id`
-    * dynamic partition overwrite (the [[linearClassifyStream]]
-    * contract).
-    *
-    * Output per batch: `(doc_id, n_trigrams, n_backoff, bits_total,
-    * bits_per_trigram_e3, keep, bucket, batch_id)`.
-    */
-  def pplIngest(
-      docs: DataFrame,
-      model: graft.operators.TextOps.TrigramLmModel,
-      t1E3: Long,
-      t2E3: Long,
-      outDir: String,
-      checkpointDir: String,
-      maxBitsE3: Long = 12000): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writePplScoredBatch(batch, model, t1E3, t2E3, maxBitsE3, outDir, batchId)
-      }
-      .start()
-
-  /** One [[pplIngest]] micro-batch write — the replay-idempotence
-    * seam, mirroring [[writeLinearScoredBatch]].
-    */
-  private[graft] def writePplScoredBatch(
-      batch: DataFrame,
-      model: graft.operators.TextOps.TrigramLmModel,
-      t1E3: Long,
-      t2E3: Long,
-      maxBitsE3: Long,
-      outDir: String,
-      batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(outDir)
-    requireBatchPartitionedDir(
-      p.getFileSystem(batch.sparkSession.sessionState.newHadoopConf()), p,
-      "pplIngest sink")
-    graft.operators.TextOps.trigramLmScoreWith(batch, model, maxBitsE3)
-      .withColumn("bucket",
-        when(col("n_trigrams") === 0, "tail")
-          .when(col("bits_per_trigram_e3") <= t1E3, "head")
-          .when(col("bits_per_trigram_e3") <= t2E3, "middle")
-          .otherwise("tail"))
-      .withColumn("batch_id", lit(batchId))
+      p.getFileSystem(rows.sparkSession.sessionState.newHadoopConf()), p)
+    rows.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
@@ -806,10 +534,9 @@ object DocStreams {
     * Spark bookkeeping (`_SUCCESS`, `_temporary`, hidden files) is
     * not data and is ignored.
     */
-  private[graft] def requireBatchPartitionedDir(
+  private def requireBatchPartitionedDir(
       fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path,
-      what: String): Unit =
+      dir: org.apache.hadoop.fs.Path): Unit =
     if (fs.exists(dir)) {
       val legacy = fs.listStatus(dir).filter { st =>
         val n = st.getPath.getName
@@ -818,7 +545,7 @@ object DocStreams {
       }
       if (legacy.nonEmpty)
         throw new IllegalStateException(
-          s"$what: '$dir' contains non-batch_id-partitioned entries " +
+          s"batch_id sink '$dir' contains non-batch_id-partitioned entries " +
             s"(e.g. '${legacy.head.getPath.getName}') — a legacy " +
             "flat-layout output from a pre-partitioned version. Point " +
             "the stream at a fresh directory (or migrate the old files " +
@@ -845,7 +572,7 @@ object DocStreams {
     * hashes written into its own `batch_id` partition with dynamic
     * partition overwrite, so a replay rewrites that partition with
     * identical rows. Coverage rows follow the same discipline — the
-    * [[nbClassifyStream]] replay-idempotence pattern.
+    * [[writeBatchPartition]] replay-idempotence pattern.
     *
     * A long-running stream accrues one index partition per batch, and
     * every batch re-reads the whole index — so every `compactEvery`
@@ -863,13 +590,8 @@ object DocStreams {
       hash: Hashing.HashTier = Hashing.Fast,
       cutDir: Option[String] = None,
       compactEvery: Int = 16): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        spanIngestBatch(batch, stateDir, outDir, k, hash, cutDir, batchId,
-          compactEvery)
-      }
-      .start()
+    eachBatch(docs, checkpointDir)(
+      spanIngestBatch(_, stateDir, outDir, k, hash, cutDir, _, compactEvery))
 
   /** One [[spanIngest]] micro-batch — the replay-idempotence seam (a
     * retried foreachBatch re-runs this with the SAME batchId and must
@@ -891,44 +613,28 @@ object DocStreams {
       cutDir: Option[String],
       batchId: Long,
       compactEvery: Int = 16): Unit = {
-    val spark = batch.sparkSession
-    val whSchema = StructType(Seq(
-      StructField("wh", LongType, nullable = false)))
     val idxRoot = s"$stateDir/wh"
-    val idxPath = new org.apache.hadoop.fs.Path(idxRoot)
-    val conf = spark.sessionState.newHadoopConf()
-    // each dir's check runs against ITS OWN filesystem: state and sink
-    // may legitimately live on different schemes (local state, object-
-    // store sink), and the index FS would throw Wrong-FS on the other
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    requireBatchPartitionedDir(outPath.getFileSystem(conf), outPath,
-      "spanIngest coverage sink")
-    IndexCommit.requireManifestLayout(idxPath.getFileSystem(conf), idxPath,
-      "spanIngest window-hash index")
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      IndexCommit.fold(spark, idxRoot, batchId, whSchema, _.distinct())
-    val index = IndexCommit.readBefore(spark, idxRoot, batchId, whSchema)
+    val index = IndexCommit.openBefore(batch.sparkSession, idxRoot, batchId,
+      StructType(Seq(StructField("wh", LongType, nullable = false))),
+      compactEvery, "spanIngest window-hash index")
     val totals = batch.select(col("doc_id"),
       size(graft.operators.TextOps.tokens(col("text"))).cast("long").as("n_tokens"))
-    val wins = graft.operators.Checkpoints.cut(
-      graft.operators.Dedup.positionedWindows(batch, k, "text", "doc_id", hash),
-      cutDir)
+    val wins = Checkpoints.cut(
+      Dedup.positionedWindows(batch, k, "text", "doc_id", hash), cutDir)
     // duplicated = earlier within the batch (the batch operator's
     // keep-first rule, shared code) OR already in the corpus index
-    val nonFirst = graft.operators.Dedup.keepFirstNonFirst(wins)
+    val nonFirst = Dedup.keepFirstNonFirst(wins)
       .unionByName(wins.join(index, Seq("wh"), "left_semi")
         .select(col("doc_id"), col("widx")))
       .distinct()
-    graft.operators.Dedup.spanCoverageFrom(
-      totals, graft.operators.Dedup.spanIslands(nonFirst, k))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
-    IndexCommit.commitBatch(
-      wins.select(col("wh")).distinct().join(index, Seq("wh"), "left_anti"),
-      idxRoot, batchId)
+    try {
+      writeBatchPartition(
+        Dedup.spanCoverageFrom(totals, Dedup.spanIslands(nonFirst, k)),
+        outDir, batchId)
+      IndexCommit.commitBatch(
+        wins.select(col("wh")).distinct().join(index, Seq("wh"), "left_anti"),
+        idxRoot, batchId)
+    } finally Checkpoints.release(Seq(wins))
   }
 
   /** Continuous LINE dedup — the streaming twin of
@@ -972,13 +678,8 @@ object DocStreams {
       hash: Hashing.HashTier = Hashing.Fast,
       cutDir: Option[String] = None,
       compactEvery: Int = 16): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        lineIngestBatch(batch, stateDir, outDir, minChars, hash, cutDir,
-          batchId, compactEvery)
-      }
-      .start()
+    eachBatch(docs, checkpointDir)(
+      lineIngestBatch(_, stateDir, outDir, minChars, hash, cutDir, _, compactEvery))
 
   /** One [[lineIngest]] micro-batch — the replay-idempotence seam
     * (same contract as [[spanIngestBatch]]).
@@ -992,66 +693,49 @@ object DocStreams {
       cutDir: Option[String],
       batchId: Long,
       compactEvery: Int = 16): Unit = {
-    val spark = batch.sparkSession
-    val idxRoot = s"$stateDir/lh"
-    val idxPath = new org.apache.hadoop.fs.Path(idxRoot)
-    val conf = spark.sessionState.newHadoopConf()
-    // per-path filesystems (the spanIngestBatch rule): state and sink
-    // may live on different schemes
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    requireBatchPartitionedDir(outPath.getFileSystem(conf), outPath,
-      "lineIngest sink")
-    IndexCommit.requireManifestLayout(idxPath.getFileSystem(conf), idxPath,
-      "lineIngest line-hash index")
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      IndexCommit.fold(spark, idxRoot, batchId, lhSchema, _.distinct())
-    val (rebuilt, newHashes) =
-      lineDedupVsIndex(batch, idxRoot, batchId, minChars, hash, cutDir)
-    rebuilt
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
-    IndexCommit.commitBatch(newHashes, idxRoot, batchId)
+    val (rebuilt, newHashes, inst) = lineDedupVsIndex(batch, stateDir, batchId,
+      minChars, hash, cutDir, compactEvery, "lineIngest line-hash index")
+    try {
+      writeBatchPartition(rebuilt, outDir, batchId)
+      IndexCommit.commitBatch(newHashes, s"$stateDir/lh", batchId)
+    } finally Checkpoints.release(Seq(inst))
   }
-
-  /** Schema of the line-hash index segments (shared by
-    * [[lineIngestBatch]] and [[webIngestBatch]]).
-    */
-  private val lhSchema = StructType(Seq(
-    StructField("h", LongType, nullable = false)))
 
   /** The line-dedup-against-index core shared by [[lineIngestBatch]]
     * and [[webIngestBatch]]: dedup `batch` keep-first against the
-    * on-disk line-hash index (entries with `batch_id < batchId`) plus
+    * on-disk line-hash index under `stateDir/lh` (segments below
+    * `batchId`, opened through [[IndexCommit.openBefore]]) plus
     * earlier occurrences within the batch, and derive the NEW
     * first-occurrence hashes to append. Returns
     * `(rebuilt(doc_id, n_lines, n_dropped, retained_text),
-    * newHashes(h))` — both unwritten, so each caller owns its sinks.
+    * newHashes(h), lineInstances)` — the frames unwritten, so each
+    * caller owns its sinks, and the line-instance cut they read, which
+    * the caller releases once both are written.
     */
-  private[graft] def lineDedupVsIndex(
+  private def lineDedupVsIndex(
       batch: DataFrame,
-      idxRoot: String,
+      stateDir: String,
       batchId: Long,
       minChars: Int,
       hash: Hashing.HashTier,
-      cutDir: Option[String]): (DataFrame, DataFrame) = {
-    val spark = batch.sparkSession
-    val index = IndexCommit.readBefore(spark, idxRoot, batchId, lhSchema)
-    val inst = graft.operators.Checkpoints.cut(
-      graft.operators.Dedup.lineInstances(batch, minChars, "text", "doc_id", hash),
-      cutDir)
+      cutDir: Option[String],
+      compactEvery: Int,
+      what: String): (DataFrame, DataFrame, DataFrame) = {
+    val index = IndexCommit.openBefore(batch.sparkSession, s"$stateDir/lh",
+      batchId, StructType(Seq(StructField("h", LongType, nullable = false))),
+      compactEvery, what)
+    val inst = Checkpoints.cut(
+      Dedup.lineInstances(batch, minChars, "text", "doc_id", hash), cutDir)
     // dropped = later keep-first occurrence within the batch (shared
     // batch rule) OR line already in the corpus index
-    val drops = graft.operators.Dedup.lineNonFirst(inst)
+    val drops = Dedup.lineNonFirst(inst)
       .unionByName(inst.join(index, Seq("h"), "left_semi")
         .select(col("doc_id"), col("pos")))
       .distinct()
-    val rebuilt = graft.operators.Dedup.lineRebuild(batch, drops, "text", "doc_id")
+    val rebuilt = Dedup.lineRebuild(batch, drops, "text", "doc_id")
     val newHashes = inst.select(col("h")).distinct()
       .join(index, Seq("h"), "left_anti")
-    (rebuilt, newHashes)
+    (rebuilt, newHashes, inst)
   }
 
   /** Continuous WEB FRONT DOOR — the streaming twin of
@@ -1107,13 +791,8 @@ object DocStreams {
       hash: Hashing.HashTier = Hashing.Fast,
       cutDir: Option[String] = None,
       compactEvery: Int = 16): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        webIngestBatch(batch, stateDir, outDir, domainK, urlCol, textCol,
-          minLineChars, hash, cutDir, batchId, compactEvery)
-      }
-      .start()
+    eachBatch(docs, checkpointDir)(webIngestBatch(_, stateDir, outDir, domainK,
+      urlCol, textCol, minLineChars, hash, cutDir, _, compactEvery))
 
   /** One [[webIngest]] micro-batch — the replay-idempotence seam. */
   private[graft] def webIngestBatch(
@@ -1129,23 +808,10 @@ object DocStreams {
       batchId: Long,
       compactEvery: Int = 16): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val spark = batch.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    requireBatchPartitionedDir(outPath.getFileSystem(conf), outPath,
-      "webIngest sink")
-    val idxRoot = s"$stateDir/lh"
-    val idxPath = new org.apache.hadoop.fs.Path(idxRoot)
-    IndexCommit.requireManifestLayout(idxPath.getFileSystem(conf), idxPath,
-      "webIngest line-hash index")
     val dqRoot = s"$stateDir/dq"
-    val dqPath = new org.apache.hadoop.fs.Path(dqRoot)
-    IndexCommit.requireManifestLayout(dqPath.getFileSystem(conf), dqPath,
-      "webIngest domain-quota index")
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-      IndexCommit.fold(spark, idxRoot, batchId, lhSchema, _.distinct())
-      IndexCommit.fold(spark, dqRoot, batchId, dqSchema, _.distinct())
-    }
+    val dqSchema = StructType(Seq(
+      StructField("reg_domain", org.apache.spark.sql.types.StringType, nullable = true),
+      StructField("doc_id", LongType, nullable = false)))
     // 1) URL gate (FIRST — the webCurate pinned ordering)
     val parts = graft.operators.TextOps.urlParts(
         batch.select(col("doc_id"), col(urlCol)), urlCol)
@@ -1158,8 +824,8 @@ object DocStreams {
       .filter(col("n_kept") > 0)
       .select(col("doc_id"), col("clean_text").as("text"))
     // 3) line dedup vs the corpus index (shared core)
-    val (rebuilt, newHashes) = lineDedupVsIndex(
-      stripped, idxRoot, batchId, minLineChars, hash, cutDir)
+    val (rebuilt, newHashes, inst) = lineDedupVsIndex(stripped, stateDir,
+      batchId, minLineChars, hash, cutDir, compactEvery, "webIngest line-hash index")
     // 4) domain quota vs prior admissions; cut so the sink write and
     // the admission-index write compute the ranking window once.
     // The index stores one (reg_domain, doc_id) row per ADMISSION —
@@ -1168,13 +834,14 @@ object DocStreams {
     // an additive count here would be safe — the r16 review finding's
     // whole class, retired by the device; the DISTINCT survives only
     // as semantics (an admission is a set member, not a tally).
-    val prior = IndexCommit.readBefore(spark, dqRoot, batchId, dqSchema)
+    val prior = IndexCommit.openBefore(batch.sparkSession, dqRoot, batchId,
+        dqSchema, compactEvery, "webIngest domain-quota index")
       .distinct()
       .groupBy(col("reg_domain"))
       .agg(count(lit(1)).as("prior"))
     val w = Window.partitionBy(col("reg_domain"))
       .orderBy(col("hkey").asc, col("doc_id").asc)
-    val admitted = graft.operators.Checkpoints.cut(
+    val admitted = Checkpoints.cut(
       rebuilt
         .filter(length(col("retained_text")) > 0)
         .select(col("doc_id"), hash(col("retained_text")).as("hkey"))
@@ -1185,22 +852,13 @@ object DocStreams {
           (col("bn") + coalesce(col("prior"), lit(0L))).as("rn"))
         .filter(col("rn") <= domainK),
       cutDir)
-    admitted
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
-    IndexCommit.commitBatch(newHashes, idxRoot, batchId)
-    IndexCommit.commitBatch(
-      admitted.select(col("reg_domain"), col("doc_id")), dqRoot, batchId)
+    try {
+      writeBatchPartition(admitted, outDir, batchId)
+      IndexCommit.commitBatch(newHashes, s"$stateDir/lh", batchId)
+      IndexCommit.commitBatch(
+        admitted.select(col("reg_domain"), col("doc_id")), dqRoot, batchId)
+    } finally Checkpoints.release(Seq(inst, admitted))
   }
-
-  /** Schema of the domain-quota admission index segments. */
-  private val dqSchema = StructType(Seq(
-    StructField("reg_domain", org.apache.spark.sql.types.StringType,
-      nullable = true),
-    StructField("doc_id", LongType, nullable = false)))
 
   /** Stream-static blocklist filter: drop stream documents whose
     * content matches a static blocklist (takedown lists, eval-set

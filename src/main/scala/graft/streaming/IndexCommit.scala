@@ -137,6 +137,22 @@ object IndexCommit {
       .map(s => spark.read.schema(schema).parquet(s"$root/${s.dir}"))
   }
 
+  /** Open an incremental store for batch `batchId`: fail fast on a
+    * foreign layout ([[requireManifestLayout]], `what` names the store
+    * in the error), fold the settled segments with `distinct` every
+    * `compactEvery` batches (`0` never folds), and return
+    * [[readBefore]] — the per-batch sequence every incremental index
+    * of [[DocStreams]] runs before it probes.
+    */
+  def openBefore(spark: SparkSession, root: String, batchId: Long,
+      schema: StructType, compactEvery: Int, what: String): DataFrame = {
+    val (fs, rootP) = fsOf(spark, root)
+    requireManifestLayout(fs, rootP, what)
+    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+      fold(spark, root, batchId, schema, _.distinct())
+    readBefore(spark, root, batchId, schema)
+  }
+
   /** Commit one batch's rows (incremental) or the whole-state
     * snapshot (`cumulative = true`): write `seg_<batchId>` fully,
     * then swap the manifest. A replayed batch rewrites the same dir
@@ -191,8 +207,8 @@ object IndexCommit {
     val merged = graft.operators.Checkpoints.cut(
       merge(spark.read.schema(schema)
         .parquet(settled.map(s => s"$root/${s.dir}"): _*)), None)
-    merged.write.mode("overwrite").parquet(s"$root/$dir")
-    merged.unpersist()
+    try merged.write.mode("overwrite").parquet(s"$root/$dir")
+    finally graft.operators.Checkpoints.release(Seq(merged))
     publish(spark, root,
       Segment(dir, keep) +: all.filterNot(_.maxBatch < batchId))
   }

@@ -125,10 +125,6 @@ class GraphOpsSpec extends SparkSpec {
     val shallow = GraphOps.bfsDepths(edges, seeds, 1)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(shallow === Map("A" -> 0L, "B" -> 1L, "C" -> 1L))
-    // broadcast-frontier form is result-identical
-    val bcast = GraphOps.bfsDepths(edges, seeds, 3, broadcastFrontier = true)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    assert(bcast === out)
   }
 
   test("kCorePeel: converged peel equals the exact k-core; chains need their rounds") {

@@ -78,6 +78,20 @@ class IndexCommitSpec extends SparkSpec {
     assert(dirsOf(root) === Set("fold_3", "seg_4"))
   }
 
+  test("fold releases its cut: a fold adds no entry to getPersistentRDDs") {
+    val root = tmpRoot()
+    (0 to 3).foreach(i => IndexCommit.commitBatch(
+      seg(i.toLong -> 1L), root, i.toLong))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    IndexCommit.fold(spark, root, 4L, schema, identity)
+    val held = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(held.isEmpty, s"fold left persisted RDDs: $held")
+    // the fold itself landed, and reads through it
+    assert(dirsOf(root) === Set("fold_3"))
+    assert(IndexCommit.readBefore(spark, root, 99L, schema).count() === 4L)
+  }
+
   test("CRASH between fold write and stale delete: reads stay exactly-once under SUM") {
     val root = tmpRoot()
     (0 to 3).foreach(i => IndexCommit.commitBatch(

@@ -47,6 +47,45 @@ class StreamingSpec extends SparkSpec {
         (f.getName.startsWith("seg_") || f.getName.startsWith("fold_")))
       .map(_.getName)
 
+  /** The [[graft.streaming.DocStreams.scoreStream]] contract for one
+    * batch scorer: `rows` replayed through a memory stream in three
+    * chunks land in the sink as exactly the rows `score` gives over
+    * the whole input (set AND count: an append-mode sink would pass a
+    * set compare while duplicating rows), and a replayed batch (a
+    * foreachBatch retry re-running the sink write with its own
+    * batchId, twice) leaves its partition's row count and the whole
+    * sink unchanged. Returns the streamed rows without `batch_id`.
+    */
+  private def scoreStreamLaw[T <: Product: org.apache.spark.sql.Encoder](
+      rows: Seq[T], dirs: String)(
+      score: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    implicit val sqlCtx = spark.sqlContext
+    def frame(part: Seq[T]) = spark.createDataset(part).toDF()
+    val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
+    val in = MemoryStream[T]
+    val q = graft.streaming.DocStreams.scoreStream(
+      in.toDF(), s"$dirs/out", s"$dirs/ckpt")(score)
+    try chunks.foreach { chunk =>
+      in.addData(chunk)
+      q.processAllAvailable()
+    } finally q.stop()
+    val out = spark.read.parquet(s"$dirs/out")
+    val batch = score(frame(rows)).collect()
+    assert(batch.nonEmpty)
+    assert(out.count() === batch.length.toLong)
+    assert(rowSet(out.drop("batch_id")) === batch.map(_.toSeq).toSet)
+    val last = (chunks.length - 1).toLong
+    val before = rowSet(out)
+    val lastCount = out.filter(col("batch_id") === last).count()
+    (1 to 2).foreach(_ => graft.streaming.DocStreams.writeBatchPartition(
+      score(frame(chunks.last)), s"$dirs/out", last))
+    val replayed = spark.read.parquet(s"$dirs/out")
+    assert(replayed.filter(col("batch_id") === last).count() === lastCount)
+    assert(rowSet(replayed) === before)
+    replayed.drop("batch_id")
+  }
+
   case class Ev(event_id: Long, user_id: String, event_type: String, ts: Timestamp, value: Double)
 
   private def t(sec: Long) = new Timestamp(sec * 1000)
@@ -812,6 +851,71 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("embedding ingest stream: no Exchange above the band- or vector-index scan") {
+    // the fuzzyIngest discipline for its cosine twin: neither index
+    // read is deduplicated whole, the band join streams the band index
+    // past the broadcast new bands, and the vector index is only read
+    // through the semi-join on the matched ids
+    implicit val sqlCtx = spark.sqlContext
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+
+    val base = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select("vec_id", "embedding").as[FixVec].collect().sortBy(_.vec_id)
+    val dirs = java.nio.file.Files.createTempDirectory("graft_embing_plan").toString
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val in = MemoryStream[FixVec]
+    val q = graft.streaming.DocStreams.embeddingIngest(
+      in.toDF(), s"$dirs/state", s"$dirs/pairs", s"$dirs/ckpt")
+    val sentinel = 987654503L
+    try {
+      in.addData(base.take(base.length / 2).toSeq)
+      q.processAllAvailable()
+      in.addData(base.drop(base.length / 2).toSeq)
+      q.processAllAvailable()
+      spark.range(sentinel, sentinel + 1).collect()
+      val deadline = System.nanoTime + 30L * 1000L * 1000L * 1000L
+      while (!plans.asScala.exists(_.toString.contains(sentinel.toString)) &&
+          System.nanoTime < deadline) Thread.sleep(25)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      q.stop()
+    }
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case st: QueryStageExec => Seq(st.plan)
+      case other => other.children
+    }
+    def isIndexScan(p: SparkPlan) = p match {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists { r =>
+        r.toString.contains(s"$dirs/state/bands") || r.toString.contains(s"$dirs/state/vecs")
+      }
+      case _ => false
+    }
+    def exchanged(p: SparkPlan, under: Option[SparkPlan]): Seq[SparkPlan] = p match {
+      case f if isIndexScan(f) => under.toSeq
+      case _: BaseJoinExec => kids(p).flatMap(exchanged(_, None))
+      case e: Exchange => kids(p).flatMap(exchanged(_, Some(e)))
+      case _ => kids(p).flatMap(exchanged(_, under))
+    }
+    def scans(p: SparkPlan): Int = (if (isIndexScan(p)) 1 else 0) + kids(p).map(scans).sum
+    val ps = plans.asScala.toList
+    assert(ps.map(scans).sum > 0, "no index scan captured - capture broken?")
+    val bad = ps.flatMap(exchanged(_, None))
+    assert(bad.isEmpty, s"Exchange above an index scan:\n${bad.mkString("\n")}")
+  }
+
   test("fuzzy ingest stream refuses a pre-manifest (plain parquet) state dir") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -855,8 +959,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ann search stream over a frozen IVF index equals the batch probe") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dirs = java.nio.file.Files.createTempDirectory("graft_ann").toString
     // build once, freeze to parquet — the serving shape the op documents
@@ -864,34 +966,11 @@ class StreamingSpec extends SparkSpec {
       .materialized(s"$dirs/index")
     val queries = emb.filter(col("vec_id") < 12)
       .select("vec_id", "embedding").as[FixVec].collect().sortBy(_.vec_id)
-    val in = MemoryStream[FixVec]
-    val q = graft.streaming.DocStreams.annSearchStream(
-      in.toDF(), index, s"$dirs/out", s"$dirs/ckpt", nProbe = 4, k = 5)
-    try {
-      val chunks = queries.grouped(math.max(queries.length / 3, 1)).toSeq
-      chunks.foreach { chunk =>
-        in.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-      val streamed = rowSet(spark.read.parquet(s"$dirs/out")
-        .select("query_id", "neighbor_id", "dot_q", "rank"))
-      val batch = rowSet(graft.operators.Similarity.ivfProbe(
-        index, queries.toSeq.toDF("vec_id", "embedding"), nProbe = 4, k = 5))
-      assert(streamed === batch)
-      assert(streamed.nonEmpty)
-      // replaying the last batch overwrites its own partition (the
-      // exactly-once-by-partition contract)
-      graft.streaming.DocStreams.writeAnnBatch(
-        chunks.last.toSeq.toDF("vec_id", "embedding"),
-        index, s"$dirs/out", (chunks.length - 1).toLong, 4, 5)
-      assert(rowSet(spark.read.parquet(s"$dirs/out")
-        .select("query_id", "neighbor_id", "dot_q", "rank")) === batch)
-    } finally q.stop()
+    scoreStreamLaw(queries.toSeq, dirs)(
+      graft.operators.Similarity.ivfProbe(index, _, nProbe = 4, k = 5))
   }
 
   test("graph search stream over a frozen kNN-graph index equals the batch probe") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dirs = java.nio.file.Files.createTempDirectory("graft_gstream").toString
     // build once (the only corpus-sized cost), freeze to parquet
@@ -899,31 +978,8 @@ class StreamingSpec extends SparkSpec {
       .materialized(s"$dirs/index")
     val queries = emb.filter(col("vec_id") < 12)
       .select("vec_id", "embedding").as[FixVec].collect().sortBy(_.vec_id)
-    val in = MemoryStream[FixVec]
-    val q = graft.streaming.DocStreams.graphSearchStream(
-      in.toDF(), index, s"$dirs/out", s"$dirs/ckpt",
-      k = 5, beam = 8, rounds = 2, seedProbes = 2)
-    try {
-      val chunks = queries.grouped(math.max(queries.length / 3, 1)).toSeq
-      chunks.foreach { chunk =>
-        in.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-      val streamed = rowSet(spark.read.parquet(s"$dirs/out")
-        .select("query_id", "neighbor_id", "dot_q", "rank"))
-      val batch = rowSet(graft.operators.Similarity.graphProbe(
-        index, queries.toSeq.toDF("vec_id", "embedding"),
-        k = 5, beam = 8, rounds = 2, seedProbes = 2))
-      assert(streamed === batch)
-      assert(streamed.nonEmpty)
-      // replaying the last batch overwrites its own partition (the
-      // exactly-once-by-partition contract)
-      graft.streaming.DocStreams.writeGraphSearchBatch(
-        chunks.last.toSeq.toDF("vec_id", "embedding"),
-        index, s"$dirs/out", (chunks.length - 1).toLong, 5, 8, 2, 2)
-      assert(rowSet(spark.read.parquet(s"$dirs/out")
-        .select("query_id", "neighbor_id", "dot_q", "rank")) === batch)
-    } finally q.stop()
+    scoreStreamLaw(queries.toSeq, dirs)(graft.operators.Similarity.graphProbe(
+      index, _, k = 5, beam = 8, rounds = 2, seedProbes = 2))
   }
 
   test("fuzzy ingest stream: durable cutDir mode accumulates identical pairs") {
@@ -950,7 +1006,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("nb classify stream over a replayed fixture slice equals the batch scorer") {
-    implicit val sqlCtx = spark.sqlContext
     import graft.operators.TextOps
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "source", "text")
@@ -960,37 +1015,14 @@ class StreamingSpec extends SparkSpec {
     val model = TextOps.nbTrain(docs.filter(isTrain)).materialized(s"$dirs/model")
     val test = docs.filter(!isTrain).as[FixSrcDoc].collect().sortBy(_.doc_id)
     assert(test.nonEmpty, "fixture slice should hold out some docs")
-    val in = MemoryStream[FixSrcDoc]
-    val q = graft.streaming.DocStreams.nbClassifyStream(
-      in.toDF(), model, s"$dirs/out", s"$dirs/ckpt")
-    try {
-      test.grouped(math.max(test.length / 3, 1)).foreach { chunk =>
-        in.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-      val out = spark.read.parquet(s"$dirs/out").drop("batch_id")
-      val streamed = rowSet(out)
-      // COUNT equality, not just set equality: an append-mode sink
-      // would survive a set compare while silently duplicating rows
-      assert(out.count() === test.length.toLong)
-      // batch-composition-blind: per-doc scoring against a frozen model
-      assert(streamed === rowSet(TextOps.nbScore(docs.filter(!isTrain), model)))
-      // and the whole chain equals the monolithic classifier
-      assert(streamed === rowSet(TextOps.nbSourceClassify(docs, trainPermille = 900)))
-      // replay idempotence: re-running a batch write with its original
-      // batchId (what a foreachBatch retry does) must leave the sink's
-      // row COUNT unchanged — the partition is replaced, not appended
-      graft.streaming.DocStreams.writeScoredBatch(
-        test.take(5).toSeq.toDF("doc_id", "source", "text"), model, s"$dirs/out", 0L)
-      graft.streaming.DocStreams.writeScoredBatch(
-        test.take(5).toSeq.toDF("doc_id", "source", "text"), model, s"$dirs/out", 0L)
-      val replayed = spark.read.parquet(s"$dirs/out")
-      assert(replayed.filter(col("batch_id") === 0L).count() === 5L)
-    } finally q.stop()
+    val streamed = scoreStreamLaw(test.toSeq, dirs)(TextOps.nbScore(_, model))
+    // one row per held-out doc
+    assert(streamed.count() === test.length.toLong)
+    // and the whole chain equals the monolithic classifier
+    assert(rowSet(streamed) === rowSet(TextOps.nbSourceClassify(docs, trainPermille = 900)))
   }
 
   test("linear classify stream over a replayed fixture slice equals the batch scorer") {
-    implicit val sqlCtx = spark.sqlContext
     import graft.operators.TextOps
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "source", "text")
@@ -999,34 +1031,14 @@ class StreamingSpec extends SparkSpec {
     val model = TextOps.linearTrain(docs.filter(isTrain)).materialized(s"$dirs/model")
     val test = docs.filter(!isTrain).as[FixSrcDoc].collect().sortBy(_.doc_id)
     assert(test.nonEmpty, "fixture slice should hold out some docs")
-    val in = MemoryStream[FixSrcDoc]
-    val q = graft.streaming.DocStreams.linearClassifyStream(
-      in.toDF(), model, s"$dirs/out", s"$dirs/ckpt")
-    try {
-      test.grouped(math.max(test.length / 3, 1)).foreach { chunk =>
-        in.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-      val out = spark.read.parquet(s"$dirs/out").drop("batch_id")
-      val streamed = rowSet(out)
-      assert(out.count() === test.length.toLong)
-      // batch-composition-blind: per-doc scoring against a frozen model
-      assert(streamed === rowSet(TextOps.linearScore(docs.filter(!isTrain), model)))
-      // and the whole chain equals the monolithic classifier
-      assert(streamed === rowSet(TextOps.linearSourceClassify(docs, trainPermille = 900)))
-      // replay idempotence (foreachBatch retry): partition replaced,
-      // never appended
-      graft.streaming.DocStreams.writeLinearScoredBatch(
-        test.take(5).toSeq.toDF("doc_id", "source", "text"), model, s"$dirs/out", 0L)
-      graft.streaming.DocStreams.writeLinearScoredBatch(
-        test.take(5).toSeq.toDF("doc_id", "source", "text"), model, s"$dirs/out", 0L)
-      val replayed = spark.read.parquet(s"$dirs/out")
-      assert(replayed.filter(col("batch_id") === 0L).count() === 5L)
-    } finally q.stop()
+    val streamed = scoreStreamLaw(test.toSeq, dirs)(TextOps.linearScore(_, model))
+    assert(streamed.count() === test.length.toLong)
+    // and the whole chain equals the monolithic classifier
+    assert(rowSet(streamed) ===
+      rowSet(TextOps.linearSourceClassify(docs, trainPermille = 900)))
   }
 
   test("logistic classify stream over a replayed fixture slice equals the batch scorer") {
-    implicit val sqlCtx = spark.sqlContext
     import graft.operators.TextOps
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "source", "text")
@@ -1036,32 +1048,12 @@ class StreamingSpec extends SparkSpec {
       lrShift = 10).materialized(s"$dirs/model")
     val test = docs.filter(!isTrain).as[FixSrcDoc].collect().sortBy(_.doc_id)
     assert(test.nonEmpty, "fixture slice should hold out some docs")
-    val in = MemoryStream[FixSrcDoc]
-    val q = graft.streaming.DocStreams.logisticClassifyStream(
-      in.toDF(), model, s"$dirs/out", s"$dirs/ckpt")
-    try {
-      test.grouped(math.max(test.length / 3, 1)).foreach { chunk =>
-        in.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-      val out = spark.read.parquet(s"$dirs/out").drop("batch_id")
-      val streamed = rowSet(out)
-      assert(out.count() === test.length.toLong)
-      // batch-composition-blind: per-doc scoring against a frozen model
-      assert(streamed === rowSet(TextOps.logisticScore(docs.filter(!isTrain), model)))
-      // and the whole chain equals the monolithic classifier
-      assert(streamed === rowSet(
-        TextOps.logisticSourceClassify(docs, trainPermille = 900,
-          epochs = 2, lrShift = 10)))
-      // replay idempotence (foreachBatch retry): partition replaced,
-      // never appended
-      graft.streaming.DocStreams.writeLogisticScoredBatch(
-        test.take(5).toSeq.toDF("doc_id", "source", "text"), model, s"$dirs/out", 0L)
-      graft.streaming.DocStreams.writeLogisticScoredBatch(
-        test.take(5).toSeq.toDF("doc_id", "source", "text"), model, s"$dirs/out", 0L)
-      val replayed = spark.read.parquet(s"$dirs/out")
-      assert(replayed.filter(col("batch_id") === 0L).count() === 5L)
-    } finally q.stop()
+    val streamed = scoreStreamLaw(test.toSeq, dirs)(TextOps.logisticScore(_, model))
+    assert(streamed.count() === test.length.toLong)
+    // and the whole chain equals the monolithic classifier
+    assert(rowSet(streamed) === rowSet(
+      TextOps.logisticSourceClassify(docs, trainPermille = 900,
+        epochs = 2, lrShift = 10)))
   }
 
   test("span ingest stream over ordered fixture slices equals batch coverage") {
@@ -1239,17 +1231,17 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("pplIngest: frozen model + frozen thresholds — stream equals batch scorer and pplBuckets; replay stable") {
-    implicit val sqlCtx = spark.sqlContext
+    import graft.operators.TextOps
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
     val P = graft.functions.Hashing.Portable
     // offline: train on the 900-permille slice, freeze model +
     // tercile thresholds (the CCNet deployment order)
-    val model = graft.operators.TextOps.trigramLmTrain(
+    val model = TextOps.trigramLmTrain(
       docs.filter(pmod(P(col("text")), lit(1000L)) < 900), hash = P)
       .materialized(
         java.nio.file.Files.createTempDirectory("graft_ppl_m").toString)
-    val scored = graft.operators.TextOps.trigramLmScoreWith(docs, model)
+    val scored = TextOps.trigramLmScoreWith(docs, model)
       .select("doc_id", "n_trigrams", "bits_per_trigram_e3")
       .as[(Long, Long, Long)].collect()
     val sig = scored.filter(_._2 > 0).map(_._3).sorted
@@ -1258,33 +1250,19 @@ class StreamingSpec extends SparkSpec {
     val t1 = cum.collectFirst { case (s, c) if c * 3 >= n => s }.get
     val t2 = cum.collectFirst { case (s, c) if c * 3 >= 2 * n => s }.get
     val dirs = java.nio.file.Files.createTempDirectory("graft_ppl").toString
-    val in = MemoryStream[FixDoc]
     val base = docs.as[FixDoc].collect().sortBy(_.doc_id)
-    val q = graft.streaming.DocStreams.pplIngest(
-      in.toDF(), model, t1, t2, s"$dirs/out", s"$dirs/ckpt")
-    try {
-      base.grouped(math.max(base.length / 3, 1)).foreach { chunk =>
-        in.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-      val out = spark.read.parquet(s"$dirs/out")
-      // stateless scorer: the union over batches IS the batch scorer
-      assert(rowSet(out.drop("batch_id").drop("bucket")) ===
-        rowSet(graft.operators.TextOps.trigramLmScoreWith(docs, model)))
-      // frozen thresholds from the same corpus reproduce pplBuckets
-      val expected = graft.operators.TextOps.pplBuckets(docs, hash = P)
-        .select("doc_id", "bucket").as[(Long, String)].collect().toMap
-      val got = out.select("doc_id", "bucket")
-        .as[(Long, String)].collect().toMap
-      assert(got === expected)
-      // replay the LAST batch: byte-stable sink
-      val chunks = base.grouped(math.max(base.length / 3, 1)).toSeq
-      val before = rowSet(spark.read.parquet(s"$dirs/out"))
-      graft.streaming.DocStreams.writePplScoredBatch(
-        chunks.last.toSeq.toDF("doc_id", "text"), model, t1, t2, 12000L,
-        s"$dirs/out", (chunks.size - 1).toLong)
-      assert(rowSet(spark.read.parquet(s"$dirs/out")) === before)
-    } finally q.stop()
+    val out = scoreStreamLaw(base.toSeq, dirs)(
+      TextOps.trigramLmScoreWith(_, model)
+        .withColumn("bucket", TextOps.pplBucket(lit(t1), lit(t2))))
+    // stateless scorer: the union over batches IS the batch scorer
+    assert(rowSet(out.drop("bucket")) ===
+      rowSet(TextOps.trigramLmScoreWith(docs, model)))
+    // frozen thresholds from the same corpus reproduce pplBuckets
+    val expected = TextOps.pplBuckets(docs, hash = P)
+      .select("doc_id", "bucket").as[(Long, String)].collect().toMap
+    val got = out.select("doc_id", "bucket")
+      .as[(Long, String)].collect().toMap
+    assert(got === expected)
   }
 
   test("webIngest quota-index compaction sums settled counts without changing admissions") {
@@ -1387,9 +1365,9 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, "srcA", "some text"), (2L, "srcB", "other text"))
         .toDF("doc_id", "source", "text"))
     val e = intercept[IllegalStateException] {
-      graft.streaming.DocStreams.writeScoredBatch(
-        Seq((3L, "srcA", "new text")).toDF("doc_id", "source", "text"),
-        model, s"$dirs/out", 0L)
+      graft.streaming.DocStreams.writeBatchPartition(graft.operators.TextOps.nbScore(
+        Seq((3L, "srcA", "new text")).toDF("doc_id", "source", "text"), model),
+        s"$dirs/out", 0L)
     }
     assert(e.getMessage.contains("legacy"))
     val e2 = intercept[IllegalStateException] {
@@ -1402,9 +1380,9 @@ class StreamingSpec extends SparkSpec {
     // files) passes the guard untouched
     Seq((1L, "x")).toDF("doc_id", "text").withColumn("batch_id", lit(0L))
       .write.mode("overwrite").partitionBy("batch_id").parquet(s"$dirs/ok")
-    graft.streaming.DocStreams.writeScoredBatch(
-      Seq((3L, "srcA", "new text")).toDF("doc_id", "source", "text"),
-      model, s"$dirs/ok", 1L)
+    graft.streaming.DocStreams.writeBatchPartition(graft.operators.TextOps.nbScore(
+      Seq((3L, "srcA", "new text")).toDF("doc_id", "source", "text"), model),
+      s"$dirs/ok", 1L)
   }
 
   test("stream-static blocklist filter drops blocked content mid-stream") {
