@@ -2,7 +2,6 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.GraphOps
@@ -34,13 +33,7 @@ object GraphDiag {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outMd = args.lift(1).getOrElse("ANF.md")
     val maxT = args.lift(2).map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val pairs = GraphOps.coOccurrencePairs(
       GraphOps.edgesFromDocs(Tables.relationshipDocs(spark, sfDir)),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -29,8 +29,8 @@ import graft.sources.Tables
   * queries = finer resolution), k = 10.
   *
   * Usage: `runMain graft.Recall [sfDir] [outMd]` — regenerates
-  * RECALL.md. Wall-clock per row is a single local[32] run at sf0.1,
-  * informational only (Bench owns timing discipline).
+  * RECALL.md. Wall-clock per row is a single [[LocalSession]] run at
+  * sf0.1, informational only (Bench owns timing discipline).
   */
 object Recall {
 
@@ -39,13 +39,7 @@ object Recall {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outMd = args.lift(1).getOrElse("RECALL.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val emb = Tables.embeddings(spark, sfDir)
     val pred: Column = col("vec_id") % 50 === 0
@@ -215,7 +209,7 @@ object Recall {
     sb ++= "(LSH — the reranker's cost axis; brute force would be "
     sb ++= s"${corpusN - 1}).\n"
     sb ++= "Candidate recall is the ceiling any reranker over those candidates\n"
-    sb ++= "can reach. Seconds are one local[32] run, informational.\n\n"
+    sb ++= s"can reach. Seconds are one ${spark.sparkContext.master} run, informational.\n\n"
     sb ++= "| family | budget | metric | recall | per-query | sec |\n"
     sb ++= "|---|---|---|---|---|---|\n"
     rows.foreach { r =>

@@ -564,15 +564,7 @@ object ScaleSmoke {
         s"unknown chain(s) ${unknown.mkString(", ")}; valid: ${Chains.mkString(", ")}")
     }
     val chains = chainFilter.fold(Chains)(f => Chains.filter(f))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same oracle timezone convention as Verify/Bench (events NTZ cast)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // supplier.parquet is the newest generated table (r16, the g_scc
     // fixture) — its absence means a pre-existing gen dir from an
@@ -762,14 +754,7 @@ object ScaleSmoke {
         s"unknown chain(s) ${unknown.mkString(", ")}; valid: ${Sf10Chains.mkString(", ")}")
     }
     val chains = chainFilter.fold(Sf10Chains)(f => Sf10Chains.filter(f))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     for ((dir, n) <- Seq(gen1 -> 10, gen10 -> 100))
       if (!new java.io.File(s"$dir/documents.parquet").exists() ||
           !new java.io.File(s"$dir/embeddings.parquet").exists() ||

@@ -266,24 +266,33 @@ object SparkEntry {
     base ++ modeVariantOracles(base)
   }
 
-  /** Broadcast-fallback twins: the same contamination operators with
-    * the probe-side broadcast hint dropped (`broadcastProbes = false`,
-    * the beyond-broadcast-budget path). They share the hinted rows'
-    * oracle SQL verbatim — the parameter is plan-shape-only, and
-    * running both modes through the oracle proves it row-for-row.
+  /** Beyond-budget twins: the same contamination operators run on
+    * inputs built in a child session whose
+    * `spark.sql.autoBroadcastJoinThreshold` is -1, so the measured
+    * probe-side decision takes the shuffle path that a probe set past
+    * the broadcast budget takes. They share the default rows' oracle
+    * SQL verbatim — the threshold moves plan shape only, and running
+    * both paths through the oracle proves it row-for-row.
     */
-  private def modeVariantQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d_contam_shuffle" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.contamination(docs, docs.filter(col("doc_id") % 50 === 0), 3, 2,
-        Hashing.Portable, broadcastProbes = false)
-        .filter(col("doc_id") =!= col("probe_id"))
-    }),
-    "d_span_contam_shuffle" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.exactSpanContamination(docs, docs.filter(col("doc_id") % 50 === 0), 16,
-        minSharedWindows = 2, hash = Hashing.Portable, broadcastProbes = false)
-    }))
+  private def modeVariantQueries: Map[String, (SparkSession, String) => DataFrame] = {
+    def beyondBudget(s: SparkSession): SparkSession = {
+      val child = s.newSession()
+      child.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      child
+    }
+    Map(
+      "d_contam_shuffle" -> ((s, dir) => {
+        val docs = Tables.documents(beyondBudget(s), dir)
+        Dedup.contamination(docs, docs.filter(col("doc_id") % 50 === 0), 3, 2,
+          Hashing.Portable)
+          .filter(col("doc_id") =!= col("probe_id"))
+      }),
+      "d_span_contam_shuffle" -> ((s, dir) => {
+        val docs = Tables.documents(beyondBudget(s), dir)
+        Dedup.exactSpanContamination(docs, docs.filter(col("doc_id") % 50 === 0), 16,
+          minSharedWindows = 2, hash = Hashing.Portable)
+      }))
+  }
 
   private def modeVariantOracles(base: Map[String, String]): Map[String, String] = Map(
     "d_contam_shuffle" -> base("d_contamination"),
@@ -405,11 +414,10 @@ object SparkEntry {
     "g_bfs_depth" -> ((s, dir) => {
       val seeds = Tables.teamMembers(s, dir)
         .filter(col("team_id") === "N1").select(col("person_id"))
-      // broadcastFrontier stays OFF here: on this dense bipartite
-      // fixture one hop reaches most vertices, so re-broadcasting the
-      // visited set per hop costs more than the small shuffle join
-      // (measured 2.1s vs 2.8s at sf0.1) — the switch is for graphs
-      // whose frontier stays small relative to the edge partitions
+      // no per-hop hint: the frontier and visited joins are planned by
+      // Spark's own estimates (on this dense bipartite fixture one hop
+      // reaches most vertices, and re-broadcasting the visited set per
+      // hop measured 2.8s against 2.1s shuffled at sf0.1)
       GraphOps.bfsDepths(edgesOf(s, dir), seeds, 3, materializeEdges = false)
     }),
 

@@ -384,7 +384,7 @@ object Dedup {
       maxDf: Int,
       hash: Hashing.HashTier,
       checkpointDir: Option[String]): (DataFrame, DataFrame) = {
-    val sh = shingles(docs, n, hash = hash).cache()
+    val sh = Checkpoints.cut(shingles(docs, n, hash = hash), checkpointDir)
     // df attaches to every (doc, shingle) row with ONE aggregate + one
     // join, materialized once; the capped and hot branches below are
     // in-memory filters of it rather than two independent re-aggs of
@@ -725,19 +725,18 @@ object Dedup {
     *
     * Scale shape: corpus windows come from the O(chars) rolling
     * kernel; the probe window set (distinct 8-byte hashes, positions
-    * dropped) BROADCASTS — the corpus-sized window stream is filtered
-    * map-side and only (doc, probe, offset) hits reach the shuffle,
-    * output-bound like [[contamination]]'s probe join. Run-lengths
+    * dropped) is cut ([[Checkpoints.cut]]), so Spark's threshold
+    * decides the window join from its measured bytes. An eval-suite
+    * probe set fits `spark.sql.autoBroadcastJoinThreshold` and
+    * BROADCASTS — the corpus-sized window stream is filtered map-side
+    * and only (doc, probe, offset) hits reach the shuffle,
+    * output-bound like [[contamination]]'s probe join. A probe corpus
+    * past that budget shuffles the join on the 8-byte `wh` key
+    * instead — same rows (DedupSpec equivalence law), and the only
+    * data moving is corpus (doc, widx, wh) triples plus the probe
+    * window set; text never enters an exchange either way. Run-lengths
     * are the classic `offset − row_number()` islands per (doc, probe)
     * pair — no position explosion.
-    *
-    * The broadcast assumes the usual eval-suite shape (≤ ~10^7
-    * distinct (probe, window-hash) rows — 16 bytes each). For a probe
-    * corpus past the broadcast budget, `broadcastProbes = false`
-    * drops the hint and the window join shuffles on the 8-byte `wh`
-    * key instead — same rows (DedupSpec equivalence law), and the
-    * only data moving is corpus (doc, widx, wh) triples plus the
-    * probe window set; text never enters an exchange in either mode.
     */
   def exactSpanContamination(
       docs: DataFrame,
@@ -746,23 +745,20 @@ object Dedup {
       minSharedWindows: Int = 1,
       textCol: String = "text",
       idCol: String = "doc_id",
-      hash: Hashing.HashTier = Hashing.Fast,
-      broadcastProbes: Boolean = true): DataFrame = {
+      hash: Hashing.HashTier = Hashing.Fast): DataFrame = {
     require(minSharedWindows >= 1, s"minSharedWindows must be >= 1, got $minSharedWindows")
-    val hintP: DataFrame => DataFrame =
-      if (broadcastProbes) broadcast(_) else identity
     val dw = docs
       .select(col(idCol).as("doc_id"),
         posexplode(graft.functions.NativeOps.rollingHashes(
           col(textCol), k, hash.portable)))
       .toDF("doc_id", "widx", "wh")
       .withColumn("widx", col("widx").cast("long"))
-    val pw = probes
+    val pw = Checkpoints.cut(probes
       .select(col(idCol).as("probe_id"),
         explode(graft.functions.NativeOps.rollingHashes(
           col(textCol), k, hash.portable)).as("wh"))
-      .distinct()
-    val hits = dw.join(hintP(pw), Seq("wh"))
+      .distinct(), None)
+    val hits = dw.join(pw, Seq("wh"))
       .select(col("doc_id"), col("probe_id"), col("widx"))
       .distinct()
     val rw = org.apache.spark.sql.expressions.Window
@@ -1051,28 +1047,26 @@ object Dedup {
     * `(doc_id, probe_id, n_shared)` — the decontamination join every
     * pretraining pipeline runs before training.
     *
-    * Scale shape: the probe side (benchmark suites — thousands of
-    * docs) is broadcast, so the corpus-side shingle stream never
-    * shuffles; the count aggregates on (doc, probe) with map-side
-    * combine. For probe sets too large to broadcast,
-    * `broadcastProbes = false` drops the hint and the same plan
-    * degrades to a shuffled hash join on the 8-byte shingle key —
-    * same rows (DedupSpec equivalence law), text still never enters
-    * an exchange (the fused shingle kernel emits hashes map-side).
+    * Scale shape: the probe shingles are cut ([[Checkpoints.cut]]),
+    * so Spark's threshold decides the probe join from their measured
+    * bytes. A benchmark suite (thousands of docs) fits
+    * `spark.sql.autoBroadcastJoinThreshold` and broadcasts, so the
+    * corpus-side shingle stream never shuffles; the count aggregates
+    * on (doc, probe) with map-side combine. A probe set past that
+    * budget gets a shuffled join on the 8-byte shingle key — same
+    * rows (DedupSpec equivalence law), text still never enters an
+    * exchange (the fused shingle kernel emits hashes map-side).
     */
   def contamination(
       docs: DataFrame,
       probes: DataFrame,
       n: Int = 3,
       minShared: Int = 5,
-      hash: Hashing.HashTier = Hashing.Fast,
-      broadcastProbes: Boolean = true): DataFrame = {
-    val hintP: DataFrame => DataFrame =
-      if (broadcastProbes) broadcast(_) else identity
+      hash: Hashing.HashTier = Hashing.Fast): DataFrame = {
     val dSh = shingles(docs, n, hash = hash)
-    val pSh = shingles(probes, n, hash = hash)
-      .select(col("doc_id").as("probe_id"), col("sh"))
-    dSh.join(hintP(pSh), Seq("sh"))
+    val pSh = Checkpoints.cut(shingles(probes, n, hash = hash)
+      .select(col("doc_id").as("probe_id"), col("sh")), None)
+    dSh.join(pSh, Seq("sh"))
       .groupBy(col("doc_id"), col("probe_id"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
@@ -1158,7 +1152,7 @@ object Dedup {
       threshE3: Int = 500,
       hash: Hashing.HashTier = Hashing.Fast,
       checkpointDir: Option[String] = None): DataFrame = {
-    val sh = shingles(docs, n, hash = hash).cache()
+    val sh = Checkpoints.cut(shingles(docs, n, hash = hash), checkpointDir)
     val banded = bandTableOf(sh, bands, rowsPerBand, checkpointDir)
     occupancyProbe(banded, Seq("band", "band_sig"), DefaultOccupancyCap,
       "minhashLshPairs", capped = false,
@@ -1241,7 +1235,7 @@ object Dedup {
       threshE3: Int = 500,
       hash: Hashing.HashTier = Hashing.Fast,
       checkpointDir: Option[String] = None): DataFrame = {
-    val newSh = shingles(newDocs, n, hash = hash).cache()
+    val newSh = Checkpoints.cut(shingles(newDocs, n, hash = hash), checkpointDir)
     val newBands = bandTableOf(newSh, bands, rowsPerBand, checkpointDir)
     incrementalPairsCore(newSh, newBands, corpusBands, threshE3,
       // only corpus docs that collided re-shingle (the candidate id

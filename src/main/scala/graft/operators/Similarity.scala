@@ -44,30 +44,19 @@ object Similarity {
     */
   val DefaultBandCap: Int = 128
 
-  /** One-slot registry for the in-memory band table of the most
-    * recent [[bandedCandidates]] call (session-lifetime `.cache()`
-    * frames otherwise accumulate one band table per operator call —
-    * the r14 leak). Each new call unpersists the previous entry;
-    * [[releaseBandCache]] frees the last one. Unpersisting a cached
-    * (not checkpointed) frame is recompute-safe: a still-unconsumed
-    * earlier result just rebuilds its band table from lineage.
+  /** [[CacheSlot]] for the in-memory band table of the most recent
+    * [[bandedCandidates]] call (session-lifetime `.cache()` frames
+    * otherwise accumulate one band table per operator call — the r14
+    * leak).
     */
-  private val lastBandCache =
-    new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
+  private val bandSlot = new CacheSlot
 
   /** Free the band table cached by the most recent banded operator
     * call ([[knnGraph]] / [[cosineNearDupPairs]] / [[nnDescentRefine]]
     * construction). Harness loops that build many banded plans in one
     * session should call this after consuming each result.
     */
-  def releaseBandCache(): Unit =
-    lastBandCache.getAndSet(None).foreach { df =>
-      // the slot is static: the frame may belong to an already-stopped
-      // SparkContext (session cycled in-process) — a stale unpersist
-      // must not fail the NEXT session's operator construction
-      try df.unpersist(blocking = false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+  def releaseBandCache(): Unit = bandSlot.release()
 
   /** `floor(x·1e6 + 0.5)` per element — the exactness contract.
     * Native codegen kernel; the HOF twin
@@ -1002,16 +991,14 @@ object Similarity {
     * [[graft.operators.Dedup.bandTableOf]] rationale; the frame is
     * 24-byte rows × bands per vector, never vectors). In-memory runs
     * use `.cache()` (keeps size stats, and unpersisting is
-    * recompute-safe) registered in the one-slot [[lastBandCache]] so
+    * recompute-safe) registered in the one-slot [[bandSlot]] so
     * repeated operator calls hold at most ONE band table (r15, after
-    * the r14 localCheckpoint form leaked one block set per call).
-    * One-slot means CONSUME-BEFORE-NEXT-CONSTRUCTION: constructing a
-    * second banded operator before consuming the first's result
-    * un-caches the first (its band table then rebuilds from lineage —
-    * correct, but the double-banding the slot exists to prevent);
-    * `checkpointDir` runs keep the durable reliable-checkpoint form
-    * (no executor blocks to leak). The occupancy probe's blocking
-    * aggregate doubles as the cache materializer — and then
+    * the r14 localCheckpoint form leaked one block set per call;
+    * consume each result before constructing the next, see
+    * [[CacheSlot]]); `checkpointDir` runs keep the durable
+    * reliable-checkpoint form (no executor blocks to leak). The
+    * occupancy probe's blocking aggregate doubles as the cache
+    * materializer — and then
     * probed by [[graft.operators.Dedup.occupancyProbe]]: one
     * key-bounded aggregate job that warns when any bucket exceeds the
     * active cap (capped run: the sub-split is ACTIVE, in-bucket recall
@@ -1027,31 +1014,10 @@ object Similarity {
       directed: Boolean,
       op: String = "bandedCandidates",
       checkpointDir: Option[String] = None): DataFrame = {
-    val bandPlan = corpus.select(
-        col("vec_id"),
-        explode(lshBandBuckets(col("q"), bands, rowsPerBand)).as("bb"))
-      .select(col("vec_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+    val bandPlan = bandRows(corpus, bands, rowsPerBand)
     val withB = checkpointDir match {
       case Some(_) => Checkpoints.cut(bandPlan, checkpointDir)
-      case None =>
-        // free the PREVIOUS slot BEFORE persisting the new plan: a
-        // repeated identical call (Bench trials) produces a
-        // sameResult-equal plan whose persist() shares the existing
-        // CacheManager entry — unpersisting the old frame afterwards
-        // would delete that shared entry and leave the new call fully
-        // uncached (double-banding, the regression this slot prevents)
-        releaseBandCache()
-        val cached = bandPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // CAS-RETRY, never set() and never self-unpersist: set() would
-        // silently overwrite a concurrent construction's entry (leaking
-        // its persisted blocks for the session), and unpersisting our
-        // own frame on a lost race would also kill a sameResult-SHARED
-        // CacheManager entry (identical concurrent plans persist onto
-        // one entry), destroying the winner's caching too. Evict the
-        // other claim and retry — last claim wins, the sequential
-        // one-slot semantics.
-        while (!lastBandCache.compareAndSet(None, Some(cached))) releaseBandCache()
-        cached
+      case None => bandSlot.claim(bandPlan)
     }
     Dedup.occupancyProbe(
       withB, Seq("band", "bucket"), maxBucketSize.getOrElse(DefaultBandCap),
@@ -1136,7 +1102,7 @@ object Similarity {
     * the window sort.
     *
     * Band-cache ordering (in-memory runs): the blocked form registers
-    * its band table in the one-slot [[lastBandCache]] — CONSUME this
+    * its band table in the one-slot [[bandSlot]] — CONSUME this
     * result before constructing the next banded operator, or the next
     * construction evicts this one's cache and its band table rebuilds
     * from lineage (correct, but double-banded).
@@ -1521,7 +1487,7 @@ object Similarity {
     * partition; crossJoin keeps the left side partitioned.
     *
     * Band-cache ordering (in-memory blocked runs): the band table
-    * lives in the one-slot [[lastBandCache]] — consume this result
+    * lives in the one-slot [[bandSlot]] — consume this result
     * before constructing the next banded operator (see [[knnGraph]]).
     */
   def cosineNearDupPairs(
@@ -1595,12 +1561,19 @@ object Similarity {
       bands: Int = 4,
       rowsPerBand: Int = 4,
       checkpointDir: Option[String] = None): DataFrame =
-    Checkpoints.cut(
-      withQuant(embeddings).select(
+    Checkpoints.cut(bandRows(withQuant(embeddings), bands, rowsPerBand), checkpointDir)
+
+  /** `(vec_id, band, bucket)` band rows of a quantized frame
+    * (`vec_id`, `q`) — the one banding projection behind
+    * [[bandTable]], [[bandedCandidates]] and both incremental forms,
+    * which band their already-cut quantized batch rather than
+    * quantizing it again.
+    */
+  private[graft] def bandRows(quantized: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    quantized.select(
         col("vec_id"),
         explode(lshBandBuckets(col("q"), bands, rowsPerBand)).as("bb"))
-        .select(col("vec_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket")),
-      checkpointDir)
+      .select(col("vec_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
 
   /** Incremental embedding near-dup — the banded-LSH cosine twin of
     * [[Dedup.incrementalNearDupPairs]]: pairs `(id_a, id_b, dot_q)`
@@ -1632,7 +1605,7 @@ object Similarity {
       checkpointDir: Option[String] = None): DataFrame = {
     // materialized: the quantized batch feeds banding AND verification
     val newQ = Checkpoints.cut(withQuant(newEmbeddings), checkpointDir)
-    val newBands = bandTable(newEmbeddings, bands, rowsPerBand, checkpointDir)
+    val newBands = Checkpoints.cut(bandRows(newQ, bands, rowsPerBand), checkpointDir)
     incrementalPairsCoreEmb(newQ, newBands, corpusBands, cosE6,
       matchedIds => withQuant(
         corpus.join(broadcast(matchedIds), Seq("vec_id"), "left_semi")),

@@ -16,74 +16,30 @@ import graft.functions.Hashing
   */
 object TextOps {
 
-  /** One-slot registry for the corpus-sized LM instance frame cached
-    * by the most recent [[bigramLmScore]] / [[trigramLmScore]] call —
-    * the [[Similarity.lastBandCache]] device applied to the LM family
-    * (r16, after ADVICE flagged the same session-lifetime leak class
-    * at a much larger footprint: one cached corpus-sized frame PER
-    * scoring call). Each new call releases the previous entry;
-    * [[releaseLmCache]] frees the last one. Unpersisting a cached
-    * frame is recompute-safe — a still-unconsumed earlier score just
-    * rebuilds its instances from lineage.
+  /** [[CacheSlot]] for the corpus-sized LM instance frame cached by
+    * the most recent [[bigramLmScore]] / [[trigramLmScore]] call (one
+    * cached corpus-sized frame PER scoring call otherwise).
     */
-  private val lastLmCache =
-    new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
+  private val lmSlot = new CacheSlot
 
-  /** One-slot registry for [[bm25MultiQuery]]'s vocabulary-restricted
-    * index frame — its OWN slot, not [[lastLmCache]]: sharing the LM
+  /** [[CacheSlot]] for [[bm25MultiQuery]]'s vocabulary-restricted
+    * index frame — its OWN slot, not [[lmSlot]]: sharing the LM
     * family's slot meant constructing any bigram/trigram LM score
     * before the returned retrieval frame executed silently evicted the
     * index (double corpus scan back), and vice versa (r18 ADVICE).
     */
-  private val lastBm25Cache =
-    new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
-
-  private def releaseSlot(
-      slot: java.util.concurrent.atomic.AtomicReference[Option[DataFrame]])
-      : Unit =
-    slot.getAndSet(None).foreach { df =>
-      // static slot: the frame may belong to an already-stopped
-      // SparkContext (session cycled in-process)
-      try df.unpersist(blocking = false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+  private val bm25Slot = new CacheSlot
 
   /** Free the instance frame cached by the most recent LM scoring
     * call. Harness loops scoring many corpora in one session should
     * call this after consuming each result.
     */
-  def releaseLmCache(): Unit = releaseSlot(lastLmCache)
+  def releaseLmCache(): Unit = lmSlot.release()
 
   /** Free the index frame cached by the most recent [[bm25MultiQuery]]
     * call (same discipline as [[releaseLmCache]]).
     */
-  def releaseBm25Cache(): Unit = releaseSlot(lastBm25Cache)
-
-  /** Release the slot's previous entry, persist `plan`, and claim the
-    * slot — the unpersist-old-BEFORE-persist-new + CAS discipline of
-    * [[Similarity.bandedCandidates]] (a repeated identical plan is
-    * sameResult-equal and would share the CacheManager entry;
-    * unpersisting old AFTER would kill the shared entry, and a lost
-    * CAS race must cost only our own caching, never leak the winner's).
-    */
-  private def claimSlot(
-      slot: java.util.concurrent.atomic.AtomicReference[Option[DataFrame]],
-      plan: DataFrame): DataFrame = {
-    releaseSlot(slot)
-    val cached = plan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // CAS-RETRY, never self-unpersist: if a concurrent construction
-    // slid into the slot between our release and here, evict IT and
-    // claim again — last claim wins, exactly the sequential one-slot
-    // semantics. Unpersisting our own frame on a lost race would also
-    // kill a sameResult-SHARED CacheManager entry (identical
-    // concurrent plans persist onto one entry) and destroy the
-    // winner's caching along with ours.
-    while (!slot.compareAndSet(None, Some(cached))) releaseSlot(slot)
-    cached
-  }
-
-  private def claimLmCache(plan: DataFrame): DataFrame =
-    claimSlot(lastLmCache, plan)
+  def releaseBm25Cache(): Unit = bm25Slot.release()
 
   /** Whitespace tokens as an array column. */
   def tokens(text: Column): Column = regexp_extract_all(text, lit("\\S+"), lit(0))
@@ -422,7 +378,6 @@ object TextOps {
       docs: DataFrame,
       dupNs: Seq[Int] = Seq(5, 10),
       textCol: String = "text",
-      materializeInstances: Boolean = true,
       checkpointDir: Option[String] = None): DataFrame = {
     val topNs = Seq(2, 3, 4)
     require(dupNs.size == 2 && dupNs.head < dupNs.last &&
@@ -434,19 +389,17 @@ object TextOps {
     // (n=10): e3 threshold = 200 - 10n
     def dupThr(n: Int): Long = 200L - 10L * n
     val ns = topNs ++ dupNs.distinct.sorted
-    // BOTH multi-consumer frames are cut under the materialize flag
-    // (below): the tokenized frame `t` feeds three consumers (base,
-    // the instance generator, lensFrame), so the cut runs the regexp
-    // tokenize ONCE instead of three times; it stores token+length
-    // arrays (~2× text), strictly smaller than the ~Σn-rows-per-token
-    // instance frame the pre-r19 shape materialized.
-    def cutIf(df: DataFrame): DataFrame =
-      if (materializeInstances) graft.operators.Checkpoints.cut(df, checkpointDir)
-      else df
-    val t = cutIf(docs.select(col("doc_id"),
+    // BOTH multi-consumer frames are cut: the tokenized frame `t`
+    // feeds three consumers (base, the instance generator, lensFrame),
+    // so the cut runs the regexp tokenize ONCE instead of three times;
+    // it stores token+length arrays (~2× text), strictly smaller than
+    // the ~Σn-rows-per-token instance frame the pre-r19 shape
+    // materialized.
+    val t = Checkpoints.cut(docs.select(col("doc_id"),
         tokens(coalesce(col(textCol), lit(""))).as("toks"))
       .select(col("doc_id"), col("toks"),
-        transform(col("toks"), x => length(x).cast("long")).as("lens")))
+        transform(col("toks"), x => length(x).cast("long")).as("lens")),
+      checkpointDir)
     val base = t.select(col("doc_id"),
       size(col("toks")).cast("long").as("n_tokens"),
       aggregate(col("lens"), lit(0L), (a, v) => a + v).as("char_base"))
@@ -475,19 +428,17 @@ object TextOps {
     // only the dup-n groups collect positions (the top-gram groups'
     // lists stay empty): their lists sum to exactly the dup-n instance
     // count, so a doc of one token repeated k times buffers positions
-    // for the two dup ns only. `materializeInstances = false` opts out
-    // of both cuts: at corpus scales where token-order materialization
-    // exceeds executor storage the honest trade is re-running the
-    // linear generator per consumer instead of caching petabytes.
+    // for the two dup ns only.
     val inst =
       t.select(col("doc_id"), explode(instArr).as("g"))
         .select(col("doc_id"), col("g.n").as("n"), col("g.pos").as("pos"),
           col("g.h").as("h"), col("g.clen").as("clen"))
-    val cnt = cutIf(
+    val cnt = Checkpoints.cut(
       inst.groupBy(col("doc_id"), col("n"), col("h"))
         .agg(count(lit(1)).as("c"), max(col("clen")).as("clen"),
           collect_list(when(col("n").isInCollection(dupNs.map(_.toLong)),
-            col("pos"))).as("poss")))
+            col("pos"))).as("poss")),
+      checkpointDir)
     val tops = cnt.filter(col("n").isInCollection(topNs.map(_.toLong)))
       .groupBy(col("doc_id"), col("n"))
       .agg(max(col("c") * col("clen")).as("cov"))
@@ -570,7 +521,7 @@ object TextOps {
     * (MEMORY_AND_DISK) after the call so the three aggregations share
     * one tokenize+hash scan — the right trade for a scoring pass that
     * is consumed once and for repeated re-scoring in a session. The
-    * frame is registered in the one-slot [[lastLmCache]] (r16): the
+    * frame is registered in the one-slot [[lmSlot]] (r16): the
     * next LM scoring call releases it automatically, so repeated
     * calls hold at most ONE corpus-sized frame; consume each result
     * before the next construction, and call [[releaseLmCache]] after
@@ -587,7 +538,7 @@ object TextOps {
       hash: Hashing.HashTier = Hashing.Fast): DataFrame = {
     import graft.functions.NativeOps.shingleHashes
     // one row per bigram INSTANCE: (doc, prefix-token hash, bigram hash)
-    val inst = claimLmCache(docs.select(
+    val inst = lmSlot.claim(docs.select(
         col(idCol).as("doc_id"),
         shingleHashes(col(textCol), 1, hash.portable).as("h1"),
         posexplode(shingleHashes(col(textCol), 2, hash.portable)))
@@ -674,7 +625,7 @@ object TextOps {
     // one row per trigram INSTANCE, all five hash roles attached; the
     // is_train flag rides the SAME projection (it needs the text
     // column, which the instance frame drops)
-    val inst = claimLmCache(
+    val inst = lmSlot.claim(
       trigramInst(docs, textCol, idCol, hash, Some(trainPermille)))
     val (c3, p3, c2, p2, cu, tv) = trigramTables(inst.filter(col("is_train")))
     val ic = inst.groupBy(
@@ -1720,9 +1671,10 @@ object TextOps {
     * distinct-word table; candidate (position, length) substrings
     * explode VOCABULARY-side (|words| · len · maxPieceChars rows —
     * corpus-independent); the vocab join resolves every position's
-    * longest match set-orientedly (map-side against the broadcast
-    * vocab — `broadcastVocab = false` shuffles on the piece string
-    * for beyond-budget vocabularies); and the per-word left-to-right
+    * longest match set-orientedly (the distinct vocabulary is cut,
+    * so the join broadcasts it map-side iff its measured bytes fit
+    * `spark.sql.autoBroadcastJoinThreshold` and shuffles on the piece
+    * string past that budget); and the per-word left-to-right
     * walk is a codegen'd `aggregate` HOF over the position→step map —
     * O(len) per word, no driver loop, no per-word shuffle.
     */
@@ -1731,11 +1683,9 @@ object TextOps {
       vocab: DataFrame,
       maxPieceChars: Int = 16,
       textCol: String = "text",
-      unk: String = "[UNK]",
-      broadcastVocab: Boolean = true): DataFrame = {
+      unk: String = "[UNK]"): DataFrame = {
     require(maxPieceChars >= 1, s"maxPieceChars must be >= 1, got $maxPieceChars")
-    val hintV: DataFrame => DataFrame =
-      if (broadcastVocab) broadcast(_) else identity
+    val pieces = Checkpoints.cut(vocab.select(col("piece")).distinct(), None)
     val words = docs.select(explode(tokens(col(textCol))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
     val cands = words.select(col("word"),
@@ -1748,7 +1698,7 @@ object TextOps {
       .select(col("word"), col("c.p").as("p"), col("c.l").as("l"),
         col("c.piece").as("piece"))
     val steps = cands
-      .join(hintV(vocab.select(col("piece")).distinct()), Seq("piece"))
+      .join(pieces, Seq("piece"))
       .groupBy(col("word"), col("p")).agg(max(col("l")).as("step"))
       .groupBy(col("word"))
       .agg(map_from_entries(collect_list(struct(col("p"), col("step")))).as("m"))
@@ -1798,9 +1748,10 @@ object TextOps {
     * scan reduces text to the distinct-word table; candidate
     * `(position, piece)` substrings explode vocabulary-side
     * (|words|·len·maxPieceChars rows — corpus-independent); one vocab
-    * join prices every candidate (broadcast map-side probe, or
-    * `broadcastVocab = false` to shuffle on the piece string for
-    * beyond-budget vocabularies); and the per-word Viterbi is a
+    * join prices every candidate against the cut vocabulary (a
+    * broadcast map-side probe iff its measured bytes fit
+    * `spark.sql.autoBroadcastJoinThreshold`, a shuffle on the piece
+    * string past that budget); and the per-word Viterbi is a
     * codegen'd `aggregate` HOF — forward DP over an array of
     * `cost·2²⁰ + pieces` keys, whose integer MIN is exactly the
     * lexicographic (cost, pieces) min. Pieces have length ≥ 1, so
@@ -1818,11 +1769,10 @@ object TextOps {
       docs: DataFrame,
       vocab: DataFrame,
       maxPieceChars: Int = 16,
-      textCol: String = "text",
-      broadcastVocab: Boolean = true): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     require(maxPieceChars >= 1, s"maxPieceChars must be >= 1, got $maxPieceChars")
-    val hintV: DataFrame => DataFrame =
-      if (broadcastVocab) broadcast(_) else identity
+    val costs = Checkpoints.cut(
+      vocab.select(col("piece"), col("cost_bits").cast("long").as("cb")), None)
     val words = docs.select(explode(tokens(col(textCol))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
     val cands = words.select(col("word"),
@@ -1834,8 +1784,7 @@ object TextOps {
       .select(col("word"), col("c.p").as("p"), col("c.l").as("l"),
         col("c.piece").as("piece"))
     val priced = cands
-      .join(hintV(vocab.select(col("piece"),
-        col("cost_bits").cast("long").as("cb"))), Seq("piece"))
+      .join(costs, Seq("piece"))
       .groupBy(col("word"), col("p"))
       .agg(collect_list(struct(col("l"), col("cb"))).as("opts"))
       .groupBy(col("word"))
@@ -2784,17 +2733,17 @@ object TextOps {
     * before the `query_id` shuffle. Nothing driver-side, nothing
     * O(corpus) wide.
     *
-    * The query-frame broadcasts assume the usual retrieval shape (up
-    * to ~10^6 (query_id, term) rows). `broadcastQueries = false` is
-    * the beyond-broadcast-budget fallback: the vocab / df / per-query
-    * joins lose their `broadcast()` hints and shuffle on `term` —
-    * same rows (TextOpsSpec equivalence), candidates stay
+    * Broadcast or shuffle is measured, not chosen by the caller: the
+    * distinct `(query_id, term)` frame is cut once
+    * ([[Checkpoints.cut]]), and [[Checkpoints.broadcastRule]] off that
+    * cut hints the vocab, df and per-query joins — broadcast iff the
+    * query frame's measured bytes fit
+    * `spark.sql.autoBroadcastJoinThreshold`. A query set past that
+    * budget shuffles all three on `term` — same rows (TextOpsSpec
+    * equivalence under a disabled threshold), candidates stay
     * vocabulary-bounded, and only the matching (doc, term) partials
-    * plus the query frame move through the exchanges; the 1-row
-    * corpus-constants frame stays broadcast in both modes. The
-    * correctness-irrelevant difference is plan shape only (gated the
-    * other way round by PlanQualitySpec: no broadcast hash join on the
-    * term joins in fallback mode).
+    * plus the query frame move through the exchanges. The 1-row
+    * corpus-constants frame broadcasts either way.
     *
     * Output: `(query_id, doc_id, score_e3, rank)`, rank 1..k per
     * query by (score desc, doc_id asc).
@@ -2806,16 +2755,16 @@ object TextOps {
       k1E3: Long = 1200L,
       bE3: Long = 750L,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      broadcastQueries: Boolean = true): DataFrame = {
+      idCol: String = "doc_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1, "k must be positive")
-    // query-set-sized frames ride broadcast or shuffle per the caller's
-    // budget call; the 1-row constants frame is below any budget
-    val hintQ: DataFrame => DataFrame =
-      if (broadcastQueries) broadcast(_) else identity
-    // duplicate (query_id, term) rows must not double-count a term
-    val q = queries.select(col("query_id"), col("term")).distinct()
+    // duplicate (query_id, term) rows must not double-count a term;
+    // the query-set-sized frames derived from the cut (vocab, df)
+    // take its broadcast rule, and the 1-row constants frame is below
+    // any budget
+    val q = Checkpoints.cut(
+      queries.select(col("query_id"), col("term")).distinct(), None)
+    val hintQ = Checkpoints.broadcastRule(q)
     val vocab = q.select(col("term")).distinct()
     val perDoc = docs.select(
       col(idCol), size(tokens(col(textCol))).cast("long").as("dl"))
@@ -2823,7 +2772,7 @@ object TextOps {
       count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_tok"))
     // inverted index over the query vocabulary only: explode pipelines
     // into the broadcast probe, partial agg combines map-side.
-    // CACHED (one-slot device, its OWN lastBm25Cache slot — sharing
+    // CACHED (one-slot device, its OWN bm25Slot — sharing
     // the LM family's slot let an interleaved LM construction evict a
     // still-unconsumed index, r18 ADVICE): the frame has TWO
     // consumers — the df table and the scoring branch — and the
@@ -2834,7 +2783,7 @@ object TextOps {
     // never corpus-sized. cache, not localCheckpoint: the plan keeps
     // its stats (downstream broadcasts survive) and the PlanQuality
     // gates still see the probe join.
-    val hits = claimSlot(lastBm25Cache, docs
+    val hits = bm25Slot.claim(docs
       .select(col(idCol), tokens(col(textCol)).as("toks"))
       .select(col(idCol), size(col("toks")).cast("long").as("dl"),
         explode(col("toks")).as("term"))

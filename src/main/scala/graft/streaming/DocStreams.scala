@@ -305,7 +305,7 @@ object DocStreams {
       val stateVecs = IndexCommit.openBefore(batch.sparkSession,
         s"$stateDir/vecs", batchId, vecSchema, 0, "embeddingIngest vector index")
       val newQ = Checkpoints.cut(sim.withQuant(batch), cutDir)
-      val newBands = sim.bandTable(batch, bands, rowsPerBand, cutDir)
+      val newBands = Checkpoints.cut(sim.bandRows(newQ, bands, rowsPerBand), cutDir)
       val (pairs, cuts) = sim.incrementalPairsCoreEmb(
         newQ, newBands, stateBands, cosE6,
         matchedIds => stateVecs

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, collect_list, length, lit, min, size, substring, xxhash64}
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Hashing
 import graft.operators.Dedup
@@ -425,10 +426,10 @@ class DedupSpec extends SparkSpec {
       k = 3, hash = Hashing.Portable)
     assert(rowSet(self.filter(col("doc_id") === 1L)) ===
       Set(Seq(1L, 1L, 5L, 7L)))
-    // broadcastProbes=false (the beyond-broadcast-budget shuffle path)
-    // is plan-shape-only: row-identical to the hinted default
-    assert(rowSet(Dedup.exactSpanContamination(docs, probes, k = 3,
-      hash = Hashing.Portable, broadcastProbes = false)) === rowSet(all))
+    // the beyond-broadcast-budget shuffle path is plan-shape-only:
+    // row-identical to the broadcast default
+    assert(shuffled(rowSet(Dedup.exactSpanContamination(docs, probes, k = 3,
+      hash = Hashing.Portable))) === rowSet(all))
   }
 
   test("spanRemoval: keep-first block dedup reassembles retained text") {
@@ -596,9 +597,9 @@ class DedupSpec extends SparkSpec {
     assert(rowSet(hits) === Set(Seq(1L, 10L, 2L)))
     // floor of 3 excludes the 2-shingle overlap
     assert(Dedup.contamination(corpus, probes, n = 3, minShared = 3).count() === 0)
-    // shuffle-fallback mode is row-identical to the broadcast default
-    assert(rowSet(Dedup.contamination(corpus, probes, n = 3, minShared = 2,
-      broadcastProbes = false)) === rowSet(hits))
+    // the shuffle path is row-identical to the broadcast default
+    assert(shuffled(rowSet(Dedup.contamination(corpus, probes, n = 3,
+      minShared = 2))) === rowSet(hits))
   }
 
   test("sourceOverlap: shared-shingle matrix, containment, clique-shingle cap") {
@@ -691,6 +692,30 @@ class DedupSpec extends SparkSpec {
     // new-corpus and new-new near-dups are
     assert(inc.exists(r => r(0) == 1L && r(1) == 5L))
     assert(inc.exists(r => r(0) == 15L && r(1) == 20L))
+  }
+
+  test("batch near-dup forms leave no CacheManager entry behind") {
+    // a fixture no other case uses, so a session-lifetime .cache() of
+    // its shingle frame would be a NEW entry, not a shared one
+    val docs = Seq(
+      (1L, "cache leak probe alpha beta gamma delta epsilon zeta"),
+      (2L, "cache leak probe alpha beta gamma delta epsilon eta"),
+      (5L, "cache leak probe alpha beta gamma delta epsilon theta"),
+      (7L, "unrelated words that share nothing with the probe text")
+    ).toDF("doc_id", "text")
+    val isNew = col("doc_id") % 5 === 0
+    val corpus = docs.filter(!isNew)
+    val newDocs = docs.filter(isNew)
+    // the shingle frames the three operators build; storageLevel asks
+    // the CacheManager for an entry matching each plan
+    val shingleFrames = Seq(Dedup.shingles(docs, 3), Dedup.shingles(newDocs, 3))
+    def cached = shingleFrames.filter(_.storageLevel != StorageLevel.NONE)
+    assert(cached.isEmpty)
+    Dedup.ngramJaccardPairs(docs, n = 3, threshE3 = 100).collect()
+    Dedup.minhashLshPairs(docs, n = 3).collect()
+    Dedup.incrementalNearDupPairs(newDocs, corpus,
+      Dedup.bandTableOf(Dedup.shingles(corpus, 3), 4, 2)).collect()
+    assert(cached.isEmpty, s"operators left cached shingle frames: $cached")
   }
 
   test("perceptual hash: identical content identical bits; an edit flips few") {

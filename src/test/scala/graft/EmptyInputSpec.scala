@@ -134,13 +134,13 @@ class EmptyInputSpec extends SparkSpec {
       Seq(1L -> "ab").toDF("doc_id", "text"),
       Seq.empty[(String, Long)].toDF("piece", "cost_bits"))) ===
       Set(Seq("ab", 1L, false, null, null)))
-    // contamination shuffle fallback on empty probes stays empty
-    assert(Dedup.contamination(
-      Seq(1L -> "a b c d").toDF("doc_id", "text"), emptyDocs,
-      broadcastProbes = false).count() === 0)
-    assert(Dedup.exactSpanContamination(
-      Seq(1L -> "a b c d").toDF("doc_id", "text"), emptyDocs, k = 3,
-      broadcastProbes = false).count() === 0)
+    // contamination's shuffle path on empty probes stays empty
+    shuffled {
+      assert(Dedup.contamination(
+        Seq(1L -> "a b c d").toDF("doc_id", "text"), emptyDocs).count() === 0)
+      assert(Dedup.exactSpanContamination(
+        Seq(1L -> "a b c d").toDF("doc_id", "text"), emptyDocs, k = 3).count() === 0)
+    }
     // salted exact-span on an empty corpus
     assert(Dedup.exactSpanCoverage(emptyDocs, k = 3, saltFactor = 8).count() === 0)
   }
@@ -155,14 +155,14 @@ class EmptyInputSpec extends SparkSpec {
     val one = Seq(1L -> Array(1.0f, 2.0f)).toDF("vec_id", "embedding")
     assert(Similarity.cosineNearDupPairs(one, 400000L,
       blocked = true, maxBucketSize = Some(1)).count() === 0)
-    // bm25MultiQuery shuffle fallback on empty docs and on empty queries
+    // bm25MultiQuery's shuffle path on empty docs and on empty queries
     val q = Seq(1L -> "term").toDF("query_id", "term")
-    assert(TextOps.bm25MultiQuery(emptyDocs, q, 5,
-      broadcastQueries = false).count() === 0)
-    assert(TextOps.bm25MultiQuery(
-      Seq((1L, "some text")).toDF("doc_id", "text"),
-      Seq.empty[(Long, String)].toDF("query_id", "term"), 5,
-      broadcastQueries = false).count() === 0)
+    shuffled {
+      assert(TextOps.bm25MultiQuery(emptyDocs, q, 5).count() === 0)
+      assert(TextOps.bm25MultiQuery(
+        Seq((1L, "some text")).toDF("doc_id", "text"),
+        Seq.empty[(Long, String)].toDF("query_id", "term"), 5).count() === 0)
+    }
     // simhashPairs' width observation on an empty signature frame (max
     // over zero rows is null -> no warning, no crash)
     assert(Dedup.simhashPairs(

@@ -397,65 +397,93 @@ class PlanQualitySpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
     val q = Seq(1L -> "vector", 1L -> "stream", 2L -> "spark")
       .toDF("query_id", "term")
-    // dropping the hints hands the decision back to size statistics —
-    // on this toy frame Catalyst would (rightly) still auto-broadcast,
-    // so simulate the beyond-budget query set by disabling the
-    // threshold. Hints override the threshold, so this doubles as the
-    // differential proof the parameter really removes them.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val hinted = formatted(
-        graft.operators.TextOps.bm25MultiQuery(docs, q, 10))
-      assert(hinted.contains("BroadcastHashJoin"),
-        s"hinted mode must broadcast the term joins regardless of stats:\n$hinted")
-      val plan = formatted(graft.operators.TextOps.bm25MultiQuery(docs, q, 10,
-        broadcastQueries = false))
+    // the toy query frame fits any real budget, so the beyond-budget
+    // query set is simulated by disabling the threshold the measured
+    // rule reads
+    shuffled {
+      val plan = formatted(graft.operators.TextOps.bm25MultiQuery(docs, q, 10))
       // every equi-join in this operator keys on `term` (vocab probe,
-      // df attach, per-query fan-out) — with the hints dropped none may
-      // plan as a broadcast hash join; the only broadcast left is the
-      // 1-row constants frame (a keyless BroadcastNestedLoopJoin whose
-      // size is query-set-independent)
+      // df attach, per-query fan-out) — past the budget none may plan
+      // as a broadcast hash join; the only broadcast left is the 1-row
+      // constants frame (a keyless BroadcastNestedLoopJoin whose size
+      // is query-set-independent)
       assert(!plan.contains("BroadcastHashJoin"),
-        s"fallback mode must not broadcast query-sized frames:\n$plan")
+        s"beyond budget, query-sized frames must not broadcast:\n$plan")
       assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
-        s"term joins should be shuffled joins in fallback mode:\n$plan")
-      // the per-query top-k partial is mode-independent
+        s"term joins should be shuffled joins beyond budget:\n$plan")
+      // the per-query top-k partial is path-independent
       assert("WindowGroupLimit".r.findAllIn(plan).size >= 2,
         s"expected partial+final WindowGroupLimit:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("contamination fallback: probe joins shuffle, text never rides an exchange") {
-    import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
     val probes = docs.filter(col("doc_id") % 50 === 0)
-    // simulate the beyond-broadcast-budget probe set by disabling the
-    // auto threshold; hints override it, so the differential also
-    // proves broadcastProbes really controls the hint
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val hinted = formatted(graft.operators.Dedup.contamination(docs, probes))
-      assert(hinted.contains("BroadcastHashJoin"),
-        s"hinted mode must broadcast the probe shingles regardless of stats:\n$hinted")
+    // the beyond-broadcast-budget probe set, simulated by disabling the
+    // threshold the measured decision reads
+    shuffled {
       for (plan <- Seq(
-        formatted(graft.operators.Dedup.contamination(docs, probes,
-          broadcastProbes = false)),
-        formatted(graft.operators.Dedup.exactSpanContamination(docs, probes,
-          broadcastProbes = false)))) {
+        formatted(graft.operators.Dedup.contamination(docs, probes)),
+        formatted(graft.operators.Dedup.exactSpanContamination(docs, probes)))) {
         assert(!plan.contains("BroadcastHashJoin") &&
           !plan.contains("BroadcastNestedLoopJoin"),
-          s"fallback mode must not broadcast probe-sized frames:\n$plan")
+          s"beyond budget, probe-sized frames must not broadcast:\n$plan")
         assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
-          s"probe join should be a shuffled join in fallback mode:\n$plan")
+          s"probe join should be a shuffled join beyond budget:\n$plan")
         // both sides shuffle 8-byte hashes; text must die at the scan
         val exchanges =
           plan.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
         assert(exchanges.nonEmpty && !exchanges.exists(_.contains("text")),
           s"document text crossed a shuffle:\n${exchanges.mkString("\n")}")
       }
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
+  }
+
+  test("shuffle twins: the probe join of each registered twin is not a broadcast") {
+    // each twin builds its inputs in a child session with the threshold
+    // off, so the plan shape holds whatever the caller's session allows
+    for (name <- Seq("d_contam_shuffle", "d_span_contam_shuffle")) {
+      val plan = formatted(SparkEntry.queries(name)(spark, sfDir))
+      assert(!plan.contains("BroadcastHashJoin"), s"$name broadcast a join:\n$plan")
+      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
+        s"$name: the probe join should be a shuffled join:\n$plan")
+    }
+  }
+
+  test("measured broadcast: probe, piece and term joins follow the threshold") {
+    import spark.implicits._
+    import graft.operators.TextOps
+    val docs = Tables.documents(spark, sfDir)
+    val probes = docs.filter(col("doc_id") % 50 === 0)
+    val pieces = Seq("a", "b", "##a", "##b").toDF("piece")
+    val costs = Seq(("a", 1L), ("b", 2L), ("ab", 2L)).toDF("piece", "cost_bits")
+    val q = Seq(1L -> "vector", 1L -> "stream", 2L -> "spark")
+      .toDF("query_id", "term")
+    // (operator, key of its probe / piece / term join, plan keys of
+    // every broadcast hash join) — calls made under the current
+    // threshold, since each operator measures its cut at call time
+    def broadcastKeys(): Seq[(String, String, Set[String])] = Seq(
+      ("contamination", "sh", Dedup.contamination(docs, probes)),
+      ("exactSpanContamination", "wh", Dedup.exactSpanContamination(docs, probes, k = 16)),
+      ("wordpieceSegment", "piece", TextOps.wordpieceSegment(docs, pieces)),
+      ("unigramSegment", "piece", TextOps.unigramSegment(docs, costs)),
+      ("bm25MultiQuery", "term", TextOps.bm25MultiQuery(docs, q, 10))
+    ).map { case (op, key, df) =>
+      (op, key, "BroadcastHashJoin \\[([^#\\]]+)#".r
+        .findAllMatchIn(formatted(df)).map(_.group(1)).toSet)
+    }
+    def broadcasting(): Seq[String] =
+      broadcastKeys().collect { case (op, key, keys) if keys.contains(key) => op }
+    val all = Seq("contamination", "exactSpanContamination", "wordpieceSegment",
+      "unigramSegment", "bm25MultiQuery")
+    assert(broadcasting() === all, "at the default threshold every measured side broadcasts")
+    // one byte is below every measured probe, vocabulary and query size
+    val knob = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(knob)
+    spark.conf.set(knob, "1")
+    try assert(broadcasting().isEmpty, "sides above the threshold must not broadcast")
+    finally spark.conf.set(knob, prev)
   }
 
   test("capped blocked near-dup: candidate join keys include the sub-split") {

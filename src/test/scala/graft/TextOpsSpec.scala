@@ -294,9 +294,9 @@ class TextOpsSpec extends SparkSpec {
     assert(k1.count() === 2L) // one row per matching query (10, 20)
   }
 
-  test("bm25MultiQuery: shuffle fallback (broadcastQueries=false) is row-identical") {
-    // the beyond-broadcast-budget mode changes plan shape only — every
-    // (query_id, doc_id, score_e3, rank) must match the hinted mode
+  test("bm25MultiQuery: the shuffle path is row-identical") {
+    // the beyond-broadcast-budget path changes plan shape only — every
+    // (query_id, doc_id, score_e3, rank) must match the broadcast path
     // bit for bit (the plan-side assertion lives in PlanQualitySpec)
     val docs = Seq(
       (1L, "cat dog"),
@@ -308,12 +308,12 @@ class TextOpsSpec extends SparkSpec {
       10L -> "cat", 10L -> "dog",
       20L -> "filler",
       30L -> "absent").toDF("query_id", "term")
-    def rows(bq: Boolean) =
-      TextOps.bm25MultiQuery(docs, q, 5, broadcastQueries = bq)
+    def rows() =
+      TextOps.bm25MultiQuery(docs, q, 5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val hinted = rows(bq = true)
-    assert(rows(bq = false) === hinted)
-    assert(hinted.nonEmpty) // equivalence of empties would prove nothing
+    val broadcasted = rows()
+    assert(shuffled(rows()) === broadcasted)
+    assert(broadcasted.nonEmpty) // equivalence of empties would prove nothing
   }
 
   test("tokenGini: impurity extremes, hand value, empty-doc zero row") {
@@ -1043,8 +1043,8 @@ class TextOpsSpec extends SparkSpec {
       Set(Seq("abcd", 1L, 4L, "a ##b ##c ##d")))
     assert(rowSet(TextOps.wordpieceSegment(g, v3)) ===
       Set(Seq("abcd", 1L, 1L, "abcd")))
-    // shuffle-fallback vocab join is row-identical
-    assert(rowSet(TextOps.wordpieceSegment(docs, vocab, broadcastVocab = false))
+    // the shuffled vocab join is row-identical
+    assert(shuffled(rowSet(TextOps.wordpieceSegment(docs, vocab)))
       === rowSet(TextOps.wordpieceSegment(docs, vocab)))
   }
 
@@ -1076,8 +1076,8 @@ class TextOpsSpec extends SparkSpec {
     val long = Seq(("aab", 0L), ("a", 1L), ("b", 1L)).toDF("piece", "cost_bits")
     assert(rowSet(TextOps.unigramSegment(docs, long, maxPieceChars = 2)) ===
       Set(Seq("aab", 1L, true, 3L, 3L)))
-    // shuffle-fallback vocab join is row-identical
-    assert(rowSet(TextOps.unigramSegment(docs, vocab, broadcastVocab = false))
+    // the shuffled vocab join is row-identical
+    assert(shuffled(rowSet(TextOps.unigramSegment(docs, vocab)))
       === rowSet(TextOps.unigramSegment(docs, vocab)))
   }
 
@@ -1570,11 +1570,6 @@ class TextOpsSpec extends SparkSpec {
       val d = out(id)
       assert(d._2 === 0L && d._3 === 0L && d._6 === 0L && d._8)
     }
-    // the no-materialization opt-out (the 100 TB storage trade) is
-    // row-identical — the cut is a performance knob, never semantics
-    assert(rowSet(TextOps.gopherRepetition(docs,
-      materializeInstances = false)) ===
-      rowSet(TextOps.gopherRepetition(docs)))
   }
 
   test("c4Rules: per-rule line scrub and doc gates") {

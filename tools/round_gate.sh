@@ -18,7 +18,7 @@ TOTAL_BUDGET=${TOTAL_BUDGET_SEC:-600}
 cd "$(dirname "$0")/.."
 
 t0=$(date +%s)
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} sbt -batch "runMain graft.Verify $SF $OUT" || {
+sbt -batch "runMain graft.Verify $SF $OUT" || {
   echo "GATE FAIL: Verify exited non-zero"; exit 1; }
 t1=$(date +%s)
 python3 tools/check_oracle.py "$SF" "$OUT"
